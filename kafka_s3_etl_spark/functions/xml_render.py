@@ -20,10 +20,12 @@ SURVEY.md section 2a op B3):
   with reference ``data/output.xml`` requires reproducing this, bug
   for bug).
 
-The renderer itself is a pure function over one record dict; the Spark
-plumbing (kafka_s3_etl_spark.operators.xml_pipeline) fans records out
-with mapInPandas so a 100 TB corpus of documents renders in parallel,
-and only the final ordered assembly of ONE document is driver-side.
+The renderer is a pure function over one parsed record dict. The Spark
+plumbing (kafka_s3_etl_spark.operators.xml_pipeline) parses the array
+and calls ``render_block`` on each record in one fused single-partition
+pass, and ``json_document_to_xml`` runs the same two steps in-process:
+records go from ``json.loads`` straight to XML, never back through JSON
+text. Only the final ordered assembly of ONE document is driver-side.
 """
 
 from __future__ import annotations
@@ -83,14 +85,21 @@ def render_record(record: dict, depth: int = 2) -> str:
     return "".join(out)
 
 
-def render_record_block(record_json: str) -> str:
-    """Render one record (given as JSON text) as a full <product> block."""
-    record = json.loads(record_json)
+def render_block(record: dict) -> str:
+    """Render one parsed record as a full <product> block."""
     return (
         f"{INDENT}<{RECORD_ELEMENT}>\n"
         + render_record(record)
         + f"{INDENT}</{RECORD_ELEMENT}>\n"
     )
+
+
+def parse_records(json_text: str) -> list:
+    """Parse a JSON array document into its records, key order intact."""
+    records = json.loads(json_text)
+    if not isinstance(records, list):
+        raise TypeError(f"expected list of records, got {type(records).__name__}")
+    return records
 
 
 def assemble_document(record_blocks: list[str]) -> str:
@@ -106,9 +115,4 @@ def assemble_document(record_blocks: list[str]) -> str:
 
 def json_document_to_xml(json_text: str) -> str:
     """Whole-document convenience path: JSON array text -> XML text."""
-    records = json.loads(json_text)
-    if not isinstance(records, list):
-        raise TypeError(f"expected list of records, got {type(records).__name__}")
-    return assemble_document(
-        [render_record_block(json.dumps(r)) for r in records]
-    )
+    return assemble_document([render_block(r) for r in parse_records(json_text)])

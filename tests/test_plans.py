@@ -1533,3 +1533,33 @@ def test_batch83_cbo_static_broadcast(spark, sf_dir):
         .collect()
     )
     assert stats and "rows" in stats[0].data_type
+
+
+def test_xml_document_renders_in_one_shuffle_free_job(spark, tmp_path):
+    """The JSON->XML document is one fused pass over a single-partition
+    scan: the caller's orderBy("idx") is a local sort (no Exchange, so
+    no range-sampling job and no shuffle), and the whole render is
+    exactly one Spark job."""
+    import json
+    import uuid
+
+    from kafka_s3_etl_spark.operators.xml_pipeline import xml_fragments
+
+    path = tmp_path / "products.json"
+    path.write_text(json.dumps([{"ean": str(i), "price": 1.0 * i} for i in range(50)]))
+    df = xml_fragments(spark, str(path)).orderBy("idx")
+
+    sc = spark.sparkContext
+    group = f"xml_one_job_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "xml_fragments single job")
+    try:
+        assert len(df.collect()) == 50
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "Exchange" not in plan
+    assert "MapInPandas" in plan and "EvalPython" not in plan

@@ -1,16 +1,26 @@
-"""Golden-file parity: the distributed JSON->XML pipeline must reproduce
+"""Golden-file parity: the Spark JSON->XML pipeline must reproduce
 the reference's shipped output byte-for-byte (SURVEY section 5, engine
 test strategy item 2). Reference data files are read in place — never
-copied into this repo."""
+copied into this repo; without them, a small fixture array checks the
+pipeline against the in-process renderer and parses the XML back."""
 
 from __future__ import annotations
 
+import json
 import os
+import xml.etree.ElementTree as ET
 
 import pytest
+from pyspark.errors import PythonException
 
-from kafka_s3_etl_spark.functions.xml_render import json_document_to_xml
-from kafka_s3_etl_spark.operators.xml_pipeline import build_xml_document
+from kafka_s3_etl_spark.functions.xml_render import (
+    ARRAY_ITEM_WRAPPERS,
+    json_document_to_xml,
+)
+from kafka_s3_etl_spark.operators.xml_pipeline import (
+    build_xml_document,
+    write_xml_document,
+)
 
 SAMPLE_JSON = "/root/reference/data/sample_products.json"
 GOLDEN_FULL = "/root/reference/data/output.xml"
@@ -41,11 +51,102 @@ def test_renderer_rejects_non_list():
         json_document_to_xml('{"not": "a list"}')
 
 
+@needs_reference
 def test_write_xml_document_single_object(spark, tmp_path):
     """B4 parity: the assembled document lands as ONE local object,
     byte-identical to the golden output."""
-    from kafka_s3_etl_spark.operators.xml_pipeline import write_xml_document
-
     out = tmp_path / "output.xml"
     write_xml_document(spark, SAMPLE_JSON, str(out))
     assert out.read_bytes() == open(GOLDEN_FULL, "rb").read()
+
+
+# Every renderer rule in a few records: all four wrapper keys (object
+# items and scalar items), an unwrapped array of objects, an unwrapped
+# scalar list, a nested object, a whole-euro float (renders "55.0") and
+# keys present on only some records.
+_FIXTURE = [
+    {
+        "ean": "4000000000017",
+        "name": "Shirt",
+        "price": 55.0,
+        "countryOfOrigin": ["PT", "TR"],
+        "itemSellingPrices": [{"currency": "EUR", "amount": 55.0}],
+        "itemGrossPrices": [{"currency": "EUR", "amount": 65.5}],
+        "fabricCompositions": [
+            {"material": "cotton", "percentage": 95},
+            {"material": "elastane", "percentage": 5},
+        ],
+        "media": [{"url": "front.jpg", "kind": "front"}],
+        "tags": ["summer", "basic"],
+        "dimensions": {"width": 30, "height": 40},
+    },
+    {
+        "ean": "4000000000024",
+        "name": "Trousers",
+        "price": 79.9,
+        "countryOfOrigin": ["IT"],
+        "itemSellingPrices": [
+            {"currency": "EUR", "amount": 80.0},
+            {"currency": "CHF", "amount": 89.0},
+        ],
+        "discontinued": True,
+    },
+    {"ean": "4000000000031", "name": "Socks", "price": 9.0, "tags": ["x", "y", "z"]},
+]
+
+
+def _rendered(key: str, value: object) -> object:
+    """What the XML can give back for one input value: text for scalars,
+    one merged dict for an unwrapped array of objects."""
+    if isinstance(value, dict):
+        return {k: str(v) for k, v in value.items()}
+    if not isinstance(value, list):
+        return str(value)
+    if key in ARRAY_ITEM_WRAPPERS or not isinstance(value[0], dict):
+        return [_rendered(key, item) for item in value]
+    return {k: str(v) for item in value for k, v in item.items()}
+
+
+def _parsed(el: ET.Element) -> object:
+    if el.tag in ARRAY_ITEM_WRAPPERS:
+        return [_parsed(item) for item in el]
+    if len(el):
+        return {c.tag: c.text for c in el}
+    lines = [line.strip() for line in (el.text or "").strip().splitlines()]
+    return lines if len(lines) > 1 else lines[0]
+
+
+@pytest.fixture
+def fixture_json(tmp_path) -> str:
+    path = tmp_path / "products.json"
+    path.write_text(json.dumps(_FIXTURE), encoding="utf-8")
+    return str(path)
+
+
+def test_fixture_pipeline_matches_renderer_and_parses_back(spark, fixture_json, tmp_path):
+    with open(fixture_json, encoding="utf-8") as f:
+        want = json_document_to_xml(f.read())
+    assert build_xml_document(spark, fixture_json) == want
+    assert "<price>55.0</price>" in want  # whole-euro floats keep ".0"
+
+    back = [
+        {el.tag: _parsed(el) for el in product}
+        for product in ET.fromstring(want.encode())
+    ]
+    assert back == [{k: _rendered(k, v) for k, v in r.items()} for r in _FIXTURE]
+
+    out_dir = tmp_path / "out"
+    out_dir.mkdir()
+    write_xml_document(spark, fixture_json, str(out_dir / "output.xml"))
+    assert os.listdir(out_dir) == ["output.xml"]
+    assert (out_dir / "output.xml").read_text(encoding="utf-8") == want
+
+
+def test_pipeline_rejects_more_than_one_document(spark, tmp_path):
+    """idx restarts per document, so two files would interleave silently
+    under orderBy("idx"): the pipeline must refuse them, naming the path."""
+    for name in ("a.json", "b.json"):
+        (tmp_path / name).write_text(json.dumps(_FIXTURE), encoding="utf-8")
+    with pytest.raises(PythonException, match="more than one JSON document") as err:
+        build_xml_document(spark, str(tmp_path))
+    assert str(tmp_path) in str(err.value)
