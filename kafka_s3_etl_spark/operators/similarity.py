@@ -983,6 +983,177 @@ def ivfpq_topk(
     )
 
 
+def _pinned_consts(
+    spark, dim: int, n_cells: int = 0, m_subspaces: int = 0, n_codes: int = 0
+) -> DataFrame:
+    """The pinned sign constants as ONE broadcastable row: ``cent[c]``
+    is coarse centroid c (``n_cells`` x ``dim``), ``cb[m][c]`` is the
+    codeword for PQ subspace m and code c (``m_subspaces`` x
+    ``n_codes`` x ``dim / m_subspaces``). A zero count leaves its
+    column out. Broadcast-crossed onto a frame, every row sees the
+    whole matrix as DATA — the ``_sign_table`` argument against plan
+    literals — so encode and LUT are per-row array expressions with no
+    fan-out, window or pivot."""
+    cols, vals = [], []
+    if n_cells:
+        cols.append("cent array<array<double>>")
+        vals.append([s[0] for s in _plane_signs(n_cells, 1, dim)])
+    if m_subspaces:
+        signs = _plane_signs(m_subspaces * n_codes, 1, dim // m_subspaces)
+        cols.append("cb array<array<array<double>>>")
+        vals.append(
+            [
+                [signs[m * n_codes + c][0] for c in range(n_codes)]
+                for m in range(m_subspaces)
+            ]
+        )
+    return spark.createDataFrame([tuple(vals)], ", ".join(cols))
+
+
+def _dots_sql(vec: str, book: str) -> str:
+    """SQL for the array of dots of ``vec`` with each codeword of
+    ``book`` — the left-to-right ``cast(x as double) * y`` fold from
+    0.0 that DuckDB's list_dot_product reproduces bit for bit."""
+    return (
+        f"transform({book}, cw -> aggregate(zip_with({vec}, cw,"
+        " (x, y) -> cast(x as double) * y), 0D, (acc, v) -> acc + v))"
+    )
+
+
+def _argmax_sql(arr: str) -> str:
+    """SQL for the 0-based index of the largest element of a double
+    array, the FIRST one on ties: ``ORDER BY value DESC, index`` with
+    ``row_number() = 1``. One fold keeps the first strictly greater
+    value; ``>`` uses Spark's sort ordering (-0.0 == 0.0, NaN largest),
+    so it agrees with the window it replaces, null elements included
+    (never greater, as NULLS LAST). A fold and not
+    ``array_position(a, array_max(a))``: HOFs get no CSE, so that form
+    would evaluate ``arr`` twice. The coalesce makes the result
+    non-nullable: an equi-join on a nullable code infers an
+    ``isnotnull`` filter that is pushed below the select and evaluates
+    the whole fold a second time."""
+    return (
+        f"coalesce(aggregate({arr}, named_struct('i', 0, 'arg', 0,"
+        " 'best', cast('-Infinity' as double)),"
+        " (s, d) -> if(d > s.best,"
+        " named_struct('i', s.i + 1, 'arg', s.i, 'best', d),"
+        " named_struct('i', s.i + 1, 'arg', s.arg, 'best', s.best)),"
+        " s -> s.arg), 0)"
+    )
+
+
+def _pinned_pairs(
+    embeddings: DataFrame,
+    n_queries: int,
+    dim: int,
+    n_cells: int = 0,
+    n_probe: int = 0,
+    m_subspaces: int = 0,
+    n_codes: int = 0,
+) -> DataFrame:
+    """The (query, candidate) pairs of the pinned IVF / PQ index all
+    three pinned twins share, built as per-row array expressions over
+    the one-row ``_pinned_consts`` broadcast.
+
+    Corpus side: (vec_id, embedding, norm), plus the coarse ``cell``
+    (with ``n_cells``) and one integer code ``c{m}`` per subspace (with
+    ``m_subspaces``) — each an argmax fold over codeword dots, all in
+    ONE select. Query side, for the first ``n_queries`` vectors:
+    (query_id, q_emb, q_norm), plus one LUT array ``lut{m}`` per
+    subspace (``lut{m}[c]`` = dot of subvector m with codeword c) and,
+    with ``n_cells``, one row per probed ``q_cell`` — the query's
+    ``n_probe`` best cells by (dot DESC, cell), the only window left,
+    over queries x cells. The broadcast queries join every other corpus
+    vector, or with ``n_cells`` only those in a probed cell."""
+    if m_subspaces and dim % m_subspaces != 0:
+        raise ValueError(f"dim {dim} not divisible by {m_subspaces}")
+    sub_d = dim // m_subspaces if m_subspaces else 0
+    base = with_norm(embeddings)
+    consts = F.broadcast(
+        _pinned_consts(base.sparkSession, dim, n_cells, m_subspaces, n_codes)
+    )
+    cell_dots = [_dots_sql("embedding", "cent")] if n_cells else []
+    sub_dots = [
+        _dots_sql(f"slice(embedding, {m * sub_d + 1}, {sub_d})", f"cb[{m}]")
+        for m in range(m_subspaces)
+    ]
+    enc = base.crossJoin(consts).select(
+        "vec_id",
+        "embedding",
+        "norm",
+        *[F.expr(_argmax_sql(d)).alias("cell") for d in cell_dots],
+        *[F.expr(_argmax_sql(d)).alias(f"c{m}") for m, d in enumerate(sub_dots)],
+    )
+    queries = (
+        base.filter(F.col("vec_id") < n_queries)
+        .crossJoin(consts)
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_emb"),
+            F.col("norm").alias("q_norm"),
+            *[F.expr(d).alias(f"lut{m}") for m, d in enumerate(sub_dots)],
+            *[F.posexplode(F.expr(d)) for d in cell_dots],
+        )
+    )
+    on = F.col("vec_id") != F.col("query_id")
+    if n_cells:
+        probe_rank = Window.partitionBy("query_id").orderBy(
+            F.col("col").desc(), F.col("pos")
+        )
+        queries = (
+            queries.withColumn("prn", F.row_number().over(probe_rank))
+            .filter(F.col("prn") <= n_probe)
+            .withColumnRenamed("pos", "q_cell")
+            .drop("col", "prn")
+        )
+        on = (F.col("cell") == F.col("q_cell")) & on
+    return enc.join(F.broadcast(queries), on)
+
+
+def _rank_by_cosine(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact-cosine top-k of (query, candidate) pairs that carry both
+    vectors and norms; rank-only output keeps floats out of the hash."""
+    cands = pairs.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        (
+            _dot(F.col("q_emb"), F.col("embedding"))
+            / (F.col("q_norm") * F.col("norm"))
+        ).alias("cosine"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id")
+    )
+    return (
+        cands.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank")
+    )
+
+
+def _adc_rerank(
+    pairs: DataFrame, m_subspaces: int, rerank: int, k: int
+) -> DataFrame:
+    """Deterministic ADC over (corpus code, query LUT) pairs — the
+    asymmetric inner product ``lut0[c0] + lut1[c1] + ...`` added in a
+    FIXED left-to-right order, never a groupBy SUM whose float
+    association depends on partitioning — then the ``rerank``-row
+    shortlist per query and its exact-cosine top-k."""
+    approx = " + ".join(f"lut{m}[c{m}]" for m in range(m_subspaces))
+    short_w = Window.partitionBy("query_id").orderBy(
+        F.col("approx").desc(), F.col("vec_id")
+    )
+    shortlist = (
+        pairs.select(
+            "query_id", "vec_id", "embedding", "norm", "q_emb", "q_norm",
+            F.expr(approx).alias("approx"),
+        )
+        .withColumn("srn", F.row_number().over(short_w))
+        .filter(F.col("srn") <= rerank)
+    )
+    return _rank_by_cosine(shortlist, k)
+
+
 def ivf_pinned_topk(
     embeddings: DataFrame,
     n_queries: int = 8,
@@ -1004,73 +1175,18 @@ def ivf_pinned_topk(
     Sign centroids have EQUAL norm (|c|^2 = dim), so nearest-centroid
     by L2 is exactly argmax dot product — and the dot is the one
     primitive proven bit-exact across engines (Spark aggregate fold ==
-    DuckDB list_dot_product, left-to-right). Assignment and probe both
-    rank by (dot DESC, cell), candidates join on cell id, and the
-    top-k output is rank-only so no float enters the hash. Quantizer
-    QUALITY is whatever random sign directions give (fine on this
-    near-isotropic corpus; recall vs brute force stays the production
-    entry's property test) — what this entry verifies is the
-    pipeline's mechanics, not the fit.
+    DuckDB list_dot_product, left-to-right). Each vector's cell is an
+    argmax fold over its centroid dots against a one-row broadcast
+    centroid array (``_argmax_sql``, ties to the smallest cell); each
+    query's probe ranks its cell dots by (dot DESC, cell).
+    Candidates join on cell id, and the top-k output is rank-only so
+    no float enters the hash. Quantizer QUALITY is whatever random
+    sign directions give (fine on this near-isotropic corpus; recall
+    vs brute force stays the production entry's property test) — what
+    this entry verifies is the pipeline's mechanics, not the fit.
     """
-    spark = embeddings.sparkSession
-    base = with_norm(embeddings)
-    signs = _plane_signs(n_cells, 1, dim)
-    centroids = spark.createDataFrame(
-        [(i, signs[i][0]) for i in range(n_cells)],
-        "cell int, centroid array<double>",
-    )
-    cdot = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("centroid"),
-            lambda a, b: a.cast("double") * b,
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    cell_rank = Window.partitionBy("vec_id").orderBy(
-        F.col("dot").desc(), F.col("cell")
-    )
-    ranked = (
-        base.crossJoin(F.broadcast(centroids))
-        .select("vec_id", "embedding", "norm", "cell", cdot.alias("dot"))
-        .withColumn("rn", F.row_number().over(cell_rank))
-    )
-    assigned = ranked.filter(F.col("rn") == 1).select(
-        "vec_id", "embedding", "norm", "cell"
-    )
-    # q_cell, not cell: probe shares `ranked`'s lineage with `assigned`,
-    # and a same-name equi predicate on a self-derived column resolves
-    # only by DataFrame origin (Spark warns "trivially true equals") —
-    # rename one side so the join condition is unambiguous by name.
-    probe_cells = ranked.filter(
-        (F.col("vec_id") < n_queries) & (F.col("rn") <= n_probe)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-        F.col("cell").alias("q_cell"),
-    )
-    cands = assigned.join(
-        F.broadcast(probe_cells),
-        (F.col("cell") == F.col("q_cell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (
-            _dot(F.col("q_emb"), F.col("embedding"))
-            / (F.col("q_norm") * F.col("norm"))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    pairs = _pinned_pairs(embeddings, n_queries, dim, n_cells, n_probe)
+    return _rank_by_cosine(pairs, k)
 
 
 def pq_pinned_topk(
@@ -1090,127 +1206,25 @@ def pq_pinned_topk(
       encode's argmin-L2 is exactly argmax dot — the bit-exact
       primitive — instead of Lloyd-fitted data-dependent floats;
     * the ADC statistic is the asymmetric INNER PRODUCT accumulated in
-      a FIXED order: corpus codes pivot to one column per subspace and
-      the approximation is lut0 + lut1 + ... as an explicit expression
-      chain, not a groupBy SUM whose float association depends on the
+      a FIXED order: ``lut0[c0] + lut1[c1] + ...`` as one expression,
+      not a groupBy SUM whose float association depends on the
       partitioning (the reason the production entry is rows-only even
       apart from the fit).
 
-    Shortlist then exact-cosine re-rank as in production; rank-only
-    output keeps floats out of the hash. This entry verifies PQ's
-    MECHANICS (encode, LUT, ADC scan, re-rank) end-to-end; compression
-    QUALITY stays the fitted entry's recall property test.
+    The whole index is per-row array expressions over a one-row
+    broadcast codebook (``_pinned_pairs``): each corpus row gets its
+    codes from argmax folds, each query its LUT arrays, and the ADC
+    scan is a broadcast cross of queries onto the coded corpus, so the
+    only shuffle is the per-query shortlist window's. Shortlist then exact-cosine
+    re-rank as in production; rank-only output keeps floats out of the
+    hash. This entry verifies PQ's MECHANICS (encode, LUT, ADC scan,
+    re-rank) end-to-end; compression QUALITY stays the fitted entry's
+    recall property test.
     """
-    spark = embeddings.sparkSession
-    if dim % m_subspaces != 0:
-        raise ValueError(f"dim {dim} not divisible by {m_subspaces}")
-    sub_d = dim // m_subspaces
-    base = with_norm(embeddings)
-    signs = _plane_signs(m_subspaces * n_codes, 1, sub_d)
-    codebook = spark.createDataFrame(
-        [
-            (m, c, signs[m * n_codes + c][0])
-            for m in range(m_subspaces)
-            for c in range(n_codes)
-        ],
-        "sub int, code int, centroid array<double>",
+    pairs = _pinned_pairs(
+        embeddings, n_queries, dim, m_subspaces=m_subspaces, n_codes=n_codes
     )
-    sdot = F.aggregate(
-        F.zip_with(
-            F.col("sv"), F.col("centroid"), lambda a, b: a.cast("double") * b
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-    def sub_rows(df: DataFrame, id_col: str, emb_col: str) -> DataFrame:
-        return df.select(
-            id_col,
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {m_subspaces - 1}), m ->"
-                    f" struct(m AS sub, slice({emb_col}, m * {sub_d} + 1,"
-                    f" {sub_d}) AS sv))"
-                )
-            ).alias("s"),
-        ).select(id_col, "s.sub", "s.sv")
-
-    code_rank = Window.partitionBy("vec_id", "sub").orderBy(
-        F.col("dot").desc(), F.col("code")
-    )
-    codes = (
-        sub_rows(base, "vec_id", "embedding")
-        .join(F.broadcast(codebook), "sub")
-        .select("vec_id", "sub", "code", sdot.alias("dot"))
-        .withColumn("rn", F.row_number().over(code_rank))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "sub", "code")
-    )
-    # pivot: one row per vector, one integer code column per subspace
-    # (codes are exact ints — the pivot is hash-safe)
-    pivoted = codes.groupBy("vec_id").agg(
-        *[
-            F.max(F.when(F.col("sub") == m, F.col("code"))).alias(f"c{m}")
-            for m in range(m_subspaces)
-        ]
-    )
-    queries = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    lut = (
-        sub_rows(queries, "query_id", "q_emb")
-        .join(F.broadcast(codebook), "sub")
-        .select("query_id", "sub", "code", sdot.alias("v"))
-    )
-    # deterministic ADC: chain one broadcast LUT join per subspace and
-    # add the m terms in fixed left-to-right order
-    adc = pivoted
-    for m in range(m_subspaces):
-        lut_m = lut.filter(F.col("sub") == m).select(
-            "query_id" if m == 0 else F.col("query_id").alias(f"qid{m}"),
-            F.col("code").alias(f"lc{m}"),
-            F.col("v").alias(f"v{m}"),
-        )
-        on = [F.col(f"c{m}") == F.col(f"lc{m}")]
-        if m > 0:
-            on.append(F.col("query_id") == F.col(f"qid{m}"))
-        adc = adc.join(
-            F.broadcast(lut_m), on[0] if len(on) == 1 else on[0] & on[1]
-        )
-    approx = "(" + " + ".join(f"v{m}" for m in range(m_subspaces)) + ")"
-    scored = adc.filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id", "vec_id", F.expr(approx).alias("approx")
-    )
-    short_w = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("vec_id")
-    )
-    shortlist = (
-        scored.withColumn("srn", F.row_number().over(short_w))
-        .filter(F.col("srn") <= rerank)
-        .select("query_id", "vec_id")
-    )
-    cands = (
-        shortlist.join(base, "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                _dot(F.col("q_emb"), F.col("embedding"))
-                / (F.col("q_norm") * F.col("norm"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _adc_rerank(pairs, m_subspaces, rerank, k)
 
 
 def ivfpq_pinned_topk(
@@ -1230,148 +1244,15 @@ def ivfpq_pinned_topk(
     full two-level index (coarse cells gate WHICH codes are scanned,
     PQ codes approximate the scan, exact cosine re-ranks the
     shortlist) replays in ANSI SQL and the driver hash gates it
-    end-to-end. Rank-only output; quality stays the fitted production
-    entry's recall property test."""
-    spark = embeddings.sparkSession
-    sub_d = dim // m_subspaces
-    base = with_norm(embeddings)
-
-    # --- coarse quantizer (ivf_pinned_topk's machinery) --------------
-    cell_signs = _plane_signs(n_cells, 1, dim)
-    centroids = spark.createDataFrame(
-        [(i, cell_signs[i][0]) for i in range(n_cells)],
-        "cell int, centroid array<double>",
+    end-to-end. One ``_pinned_pairs`` select gives each corpus row its
+    cell and codes; each query carries its LUTs to its probed cells,
+    and the ADC runs over the cell-matched pairs only. Rank-only
+    output; quality stays the fitted production entry's recall
+    property test."""
+    pairs = _pinned_pairs(
+        embeddings, n_queries, dim, n_cells, n_probe, m_subspaces, n_codes
     )
-    cdot = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("centroid"),
-            lambda a, b: a.cast("double") * b,
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    cell_rank = Window.partitionBy("vec_id").orderBy(
-        F.col("dot").desc(), F.col("cell")
-    )
-    ranked = (
-        base.crossJoin(F.broadcast(centroids))
-        .select("vec_id", "embedding", "norm", "cell", cdot.alias("dot"))
-        .withColumn("rn", F.row_number().over(cell_rank))
-    )
-    assigned = ranked.filter(F.col("rn") == 1).select("vec_id", "cell")
-    probe_cells = ranked.filter(
-        (F.col("vec_id") < n_queries) & (F.col("rn") <= n_probe)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("cell").alias("q_cell")
-    )
-    cand = assigned.join(
-        F.broadcast(probe_cells),
-        (F.col("cell") == F.col("q_cell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select("query_id", "vec_id")
-
-    # --- PQ codes + LUT (pq_pinned_topk's machinery) ------------------
-    pq_signs = _plane_signs(m_subspaces * n_codes, 1, sub_d)
-    codebook = spark.createDataFrame(
-        [
-            (m, c, pq_signs[m * n_codes + c][0])
-            for m in range(m_subspaces)
-            for c in range(n_codes)
-        ],
-        "sub int, code int, centroid array<double>",
-    )
-    sdot = F.aggregate(
-        F.zip_with(
-            F.col("sv"), F.col("centroid"), lambda a, b: a.cast("double") * b
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-    def sub_rows(df: DataFrame, id_col: str, emb_col: str) -> DataFrame:
-        return df.select(
-            id_col,
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {m_subspaces - 1}), m ->"
-                    f" struct(m AS sub, slice({emb_col}, m * {sub_d} + 1,"
-                    f" {sub_d}) AS sv))"
-                )
-            ).alias("s"),
-        ).select(id_col, "s.sub", "s.sv")
-
-    code_rank = Window.partitionBy("vec_id", "sub").orderBy(
-        F.col("dot").desc(), F.col("code")
-    )
-    pivoted = (
-        sub_rows(base, "vec_id", "embedding")
-        .join(F.broadcast(codebook), "sub")
-        .select("vec_id", "sub", "code", sdot.alias("dot"))
-        .withColumn("rn", F.row_number().over(code_rank))
-        .filter(F.col("rn") == 1)
-        .groupBy("vec_id")
-        .agg(
-            *[
-                F.max(F.when(F.col("sub") == m, F.col("code"))).alias(f"c{m}")
-                for m in range(m_subspaces)
-            ]
-        )
-    )
-    queries = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    lut = (
-        sub_rows(queries, "query_id", "q_emb")
-        .join(F.broadcast(codebook), "sub")
-        .select("query_id", "sub", "code", sdot.alias("v"))
-    )
-
-    # --- deterministic ADC over only the PROBED candidates ------------
-    adc = cand.join(pivoted, "vec_id")
-    for m in range(m_subspaces):
-        lut_m = lut.filter(F.col("sub") == m).select(
-            F.col("query_id").alias(f"qid{m}"),
-            F.col("code").alias(f"lc{m}"),
-            F.col("v").alias(f"v{m}"),
-        )
-        adc = adc.join(
-            F.broadcast(lut_m),
-            (F.col("query_id") == F.col(f"qid{m}"))
-            & (F.col(f"c{m}") == F.col(f"lc{m}")),
-        )
-    approx = "(" + " + ".join(f"v{m}" for m in range(m_subspaces)) + ")"
-    scored = adc.select("query_id", "vec_id", F.expr(approx).alias("approx"))
-    short_w = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("vec_id")
-    )
-    shortlist = (
-        scored.withColumn("srn", F.row_number().over(short_w))
-        .filter(F.col("srn") <= rerank)
-        .select("query_id", "vec_id")
-    )
-    cands = (
-        shortlist.join(base, "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                _dot(F.col("q_emb"), F.col("embedding"))
-                / (F.col("q_norm") * F.col("norm"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _adc_rerank(pairs, m_subspaces, rerank, k)
 
 
 def random_projection(

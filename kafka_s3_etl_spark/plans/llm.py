@@ -461,8 +461,9 @@ def _pq_codebook_rows(
     m_subspaces: int = 4, n_codes: int = 16, sub_d: int = 16
 ) -> str:
     """The pinned PQ sign codebooks rendered as SQL VALUES rows
-    (sub, code, cw DOUBLE[]) — the oracle-side twin of
-    pq_pinned_topk's broadcast codebook."""
+    (sub, code, cw DOUBLE[]) — the oracle-side twin of the one-row
+    ``cb[sub][code]`` array the pinned PQ twins broadcast
+    (``similarity._pinned_consts``). Same seeded signs, same layout."""
     from kafka_s3_etl_spark.operators.similarity import _plane_signs
 
     signs = _plane_signs(m_subspaces * n_codes, 1, sub_d)
@@ -561,10 +562,12 @@ def _pq_pinned_oracle(
         "q_sim_ivf_pinned dents IVF's. Two moves unlock the gate: "
         "seeded sign CODEBOOKS (equal-norm codewords make encode's "
         "argmin-L2 exactly argmax dot, the bit-exact primitive), and "
-        "a DETERMINISTIC ADC — corpus codes pivot to one integer "
-        "column per subspace and the asymmetric inner product is an "
-        "explicit lut0+lut1+lut2+lut3 chain, not a groupBy SUM whose "
-        "float association depends on partitioning. Encode, LUT, ADC "
+        "a DETERMINISTIC ADC — each corpus row's code per subspace is "
+        "an argmax fold over a one-row broadcast codebook, each query "
+        "carries one LUT array per subspace, and the asymmetric inner "
+        "product is lut0[c0]+lut1[c1]+lut2[c2]+lut3[c3] added left to "
+        "right, not a groupBy SUM whose float association depends on "
+        "partitioning. Encode, LUT, ADC "
         "scan, shortlist, and exact cosine re-rank all replay in the "
         "oracle; rank-only output keeps floats out of the hash. "
         "Compression QUALITY stays the fitted production entry's "

@@ -906,6 +906,102 @@ def test_pinned_ann_twins_structure(spark, sf_dir):
             assert len({r.neighbor_id for r in rs}) == 5, name
 
 
+def _first_by_window(df, key: str, arr: str):
+    """{key: index} of each row's array maximum by the reference rule the
+    pinned oracles use: row_number() over (ORDER BY value DESC, index)."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(key).orderBy(F.col("col").desc(), F.col("pos"))
+    return {
+        r[key]: r.pos
+        for r in df.select(key, F.posexplode(F.expr(arr)))
+        .withColumn("rn", F.row_number().over(w))
+        .filter("rn = 1")
+        .collect()
+    }
+
+
+def test_pinned_argmax_ties_go_to_smallest_index(spark, sf_dir):
+    """The argmax fold that encodes the pinned IVF/PQ twins must pick
+    exactly what ROW_NUMBER() OVER (ORDER BY dot DESC, index) = 1 picks:
+    on an exact tie the smallest index wins, and 0.0 and -0.0 tie (Spark's
+    sort ordering treats them as equal). Checked on hand-built dot arrays,
+    on hand-built embeddings against a codebook with tied codewords, and
+    on the test corpus's real cell and PQ codes against the window."""
+    from kafka_s3_etl_spark.operators.similarity import (
+        _argmax_sql,
+        _dots_sql,
+        _pinned_consts,
+        _plane_signs,
+    )
+
+    # dot arrays as given: ties, signed zeros, nulls (NULLS LAST)
+    arrays = [
+        (0, [1.0, 3.0, 3.0], 1),
+        (1, [-0.0, 0.0], 0),
+        (2, [0.0, -0.0], 0),
+        (3, [-1.0, -0.0, 0.0], 1),
+        (4, [-2.0, None, -2.0], 0),
+        (5, [None, -5.0], 1),
+        (6, [float("-inf"), float("-inf")], 0),
+    ]
+    df = spark.createDataFrame(
+        [(i, a) for i, a, _ in arrays], "id int, ds array<double>"
+    )
+    got = {
+        r.id: r.arg
+        for r in df.select("id", F.expr(_argmax_sql("ds")).alias("arg")).collect()
+    }
+    assert got == {i: want for i, _, want in arrays}
+    assert got == _first_by_window(df, "id", "ds")
+
+    # hand-built embeddings against codewords that tie exactly
+    book = [[1.0, 0.0], [0.0, 1.0], [1.0, 1.0], [0.0, 1.0]]
+    embs = [
+        (0, [1.0, 1.0], 2),  # 1, 1, 2, 1
+        (1, [1.0, 0.0], 0),  # 1, 0, 1, 0: codewords 0 and 2 tie
+        (2, [0.0, 2.0], 1),  # 0, 2, 2, 2: codewords 1, 2 and 3 tie
+        (3, [0.0, 0.0], 0),  # all 0.0
+        (4, [-1.0, 0.0], 1),  # -1, 0, -1, 0: codewords 1 and 3 tie
+    ]
+    edf = spark.createDataFrame(
+        [(i, e, book) for i, e, _ in embs],
+        "vec_id int, embedding array<float>, book array<array<double>>",
+    )
+    dots = _dots_sql("embedding", "book")
+    got = {
+        r.vec_id: r.code
+        for r in edf.select(
+            "vec_id", F.expr(_argmax_sql(dots)).alias("code")
+        ).collect()
+    }
+    assert got == {i: want for i, _, want in embs}
+    assert got == _first_by_window(edf, "vec_id", dots)
+
+    # the test corpus: coarse cells and every PQ subspace's codes
+    corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet").crossJoin(
+        F.broadcast(_pinned_consts(spark, 64, 16, 4, 16))
+    )
+    books = {"cell": _dots_sql("embedding", "cent")}
+    for m in range(4):
+        books[f"c{m}"] = _dots_sql(f"slice(embedding, {m * 16 + 1}, 16)", f"cb[{m}]")
+    n_vectors = corpus.count()
+    for name, dots in books.items():
+        codes = {
+            r.vec_id: r.code
+            for r in corpus.select(
+                "vec_id", F.expr(_argmax_sql(dots)).alias("code")
+            ).collect()
+        }
+        assert len(codes) == n_vectors, name
+        assert codes == _first_by_window(corpus, "vec_id", dots), name
+    # the one-row constants are the seeded sign matrix, laid out [m][c]
+    row = _pinned_consts(spark, 64, 16, 4, 16).first()
+    assert row.cent == [s[0] for s in _plane_signs(16, 1, 64)]
+    signs = _plane_signs(64, 1, 16)
+    assert row.cb[2][5] == signs[2 * 16 + 5][0]
+
+
 def test_random_projection_jl_distortion(spark, sf_dir):
     """q_embed_randproj (batch 47): the JL guarantee, measured — for
     sampled vector pairs, squared distances after the 64->16 sign

@@ -1266,6 +1266,32 @@ def test_pinned_ann_twins_broadcast_constants(spark, sf_dir):
         assert "MapInPandas" not in plan, name
 
 
+def test_pq_pinned_encodes_per_row_in_four_jobs(spark, sf_dir):
+    """q_sim_pq_pinned encodes each vector and scores each query as
+    per-row array expressions over a one-row broadcast codebook: no
+    per-subspace code window over (vec_id, sub), no pivot aggregate back
+    to one row per vec_id, and the whole noop write runs in at most 4
+    jobs (codebook and query broadcasts, the shortlist shuffle, the
+    result)."""
+    import uuid
+
+    df = _CAT["q_sim_pq_pinned"].fn(spark, sf_dir)
+    sc = spark.sparkContext
+    group = f"pq_pinned_jobs_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "q_sim_pq_pinned noop write")
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"windowspecdefinition\([^)]*\bsub#", plan)
+    assert not re.search(r"HashAggregate\(keys=\[vec_id#", plan)
+    assert "Window" in plan  # the shortlist and re-rank windows remain
+
+
 def test_collocations_single_pair_rollup(spark, sf_dir):
     """q_collocations_lift (batch 49): the corpus-sized pair rollup is
     materialized ONCE (localCheckpoint -> ExistingRDD scans downstream)
