@@ -134,15 +134,19 @@ def minhash_signatures(hashes: DataFrame, k: int = MINHASH_K) -> DataFrame:
 
 
 def _banded_signatures(
-    signatures: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS
+    signatures: DataFrame,
+    k: int = MINHASH_K,
+    bands: int = LSH_BANDS,
+    key: str = "xxhash64",
 ) -> DataFrame:
-    """One row per (doc, band): the band's bucket key plus the full
-    signature as an array, so the downstream self-join never has to
-    join back to the signature table."""
+    """One row per (doc, band): the band's bucket key — the SQL function
+    ``key`` over the band's minhash columns — plus the full signature as
+    an array, so the downstream band join never has to join back to the
+    signature table."""
     r = k // bands
     band_structs = ", ".join(
-        "struct({b} AS band_id, xxhash64({cols}) AS key)".format(
-            b=b, cols=", ".join(f"mh{b * r + j}" for j in range(r))
+        "struct({b} AS band_id, {key}({cols}) AS key)".format(
+            b=b, key=key, cols=", ".join(f"mh{b * r + j}" for j in range(r))
         )
         for b in range(bands)
     )
@@ -152,6 +156,44 @@ def _banded_signatures(
         F.expr(f"array({sig_cols}) AS sig"),
         F.explode(F.expr(f"array({band_structs})")).alias("band"),
     ).select("doc_id", "sig", "band.band_id", "band.key")
+
+
+def _band_pairs(
+    banded: DataFrame,
+    k: int,
+    threshold: float,
+    other: DataFrame | None = None,
+) -> DataFrame:
+    """Band-join candidates with est_jaccard = agreeing minhashes / k,
+    kept at/above ``threshold``, one row per pair. Without ``other`` it
+    is the self-join (doc_a, doc_b, est_jaccard) with doc_a < doc_b;
+    with ``other`` it is the one-sided join (new_doc, base_doc,
+    est_jaccard) of ``banded`` against ``other``."""
+    a = banded.alias("a")
+    b = (banded if other is None else other).alias("b")
+    on = (F.col("a.band_id") == F.col("b.band_id")) & (
+        F.col("a.key") == F.col("b.key")
+    )
+    names = ("new_doc", "base_doc")
+    if other is None:
+        on = on & (F.col("a.doc_id") < F.col("b.doc_id"))
+        names = ("doc_a", "doc_b")
+    agree: Column = F.size(
+        F.filter(
+            F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
+            lambda eq: eq,
+        )
+    )
+    return (
+        a.join(b, on)
+        .select(
+            F.col("a.doc_id").alias(names[0]),
+            F.col("b.doc_id").alias(names[1]),
+            (agree.cast("double") / k).alias("est_jaccard"),
+        )
+        .filter(F.col("est_jaccard") >= threshold)
+        .distinct()
+    )
 
 
 def minhash_near_dups(
@@ -172,28 +214,7 @@ def minhash_near_dups(
     banded = _banded_signatures(
         minhash_signatures(shingle_hashes(documents), k), k, bands
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    agree: Column = F.size(
-        F.filter(
-            F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (agree.cast("double") / k).alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-        .distinct()
-    )
+    return _band_pairs(banded, k, threshold)
 
 
 def md5_minhash_signatures(
@@ -245,42 +266,10 @@ def md5_minhash_near_dups(
     minhashes — unambiguous without another hash, and exactly
     replayable as ``mh_i || mh_j || ...`` on the oracle side.
     """
-    r = k // bands
-    sigs = md5_minhash_signatures(documents, k)
-    band_structs = ", ".join(
-        "struct({b} AS band_id, concat({cols}) AS key)".format(
-            b=b, cols=", ".join(f"mh{b * r + j}" for j in range(r))
-        )
-        for b in range(bands)
+    banded = _banded_signatures(
+        md5_minhash_signatures(documents, k), k, bands, key="concat"
     )
-    sig_cols = ", ".join(f"mh{i}" for i in range(k))
-    banded = sigs.select(
-        "doc_id",
-        F.expr(f"array({sig_cols}) AS sig"),
-        F.explode(F.expr(f"array({band_structs})")).alias("band"),
-    ).select("doc_id", "sig", "band.band_id", "band.key")
-    a, b = banded.alias("a"), banded.alias("b")
-    agree: Column = F.size(
-        F.filter(
-            F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (agree.cast("double") / k).alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-        .distinct()
-    )
+    return _band_pairs(banded, k, threshold)
 
 
 def md5_simhash_near_dups(
@@ -1468,45 +1457,10 @@ def md5_minhash_cross_dups(
     replay the full pipeline; est_jaccard = agree/k stays an exact
     binary fraction. Returns (new_doc, base_doc, est_jaccard)
     candidate matches at/above ``threshold``."""
-    r = k // bands
-    band_structs = ", ".join(
-        "struct({b} AS band_id, concat({cols}) AS key)".format(
-            b=b, cols=", ".join(f"mh{b * r + j}" for j in range(r))
-        )
-        for b in range(bands)
-    )
-    sig_cols = ", ".join(f"mh{i}" for i in range(k))
 
     def banded(docs: DataFrame) -> DataFrame:
-        return (
-            md5_minhash_signatures(docs, k)
-            .select(
-                "doc_id",
-                F.expr(f"array({sig_cols}) AS sig"),
-                F.explode(F.expr(f"array({band_structs})")).alias("band"),
-            )
-            .select("doc_id", "sig", "band.band_id", "band.key")
+        return _banded_signatures(
+            md5_minhash_signatures(docs, k), k, bands, key="concat"
         )
 
-    a = banded(new_docs).alias("a")
-    b = banded(base_docs).alias("b")
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.key") == F.col("b.key")),
-        )
-        .select(
-            F.col("a.doc_id").alias("new_doc"),
-            F.col("b.doc_id").alias("base_doc"),
-            (agree.cast("double") / k).alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-        .distinct()
-    )
+    return _band_pairs(banded(new_docs), k, threshold, other=banded(base_docs))

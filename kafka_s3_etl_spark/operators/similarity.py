@@ -266,122 +266,6 @@ def _lloyd_numpy(sample, k: int, iters: int = 8, seed: int = 42):
     return cent
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    n_cells: int = IVF_CELLS,
-    n_probe: int = IVF_PROBE,
-) -> DataFrame:
-    """IVF (inverted-file) ANN: k-means coarse quantizer partitions the
-    corpus into cells; each query probes only its ``n_probe`` nearest
-    cells and exact-cosine re-ranks the candidates.
-
-    Scale shape: the quantizer fits on a SAMPLE, never the corpus — the
-    fit input is capped at ``64 * n_cells`` vectors (deterministic
-    prefix by vec_id) collected to the driver and fit with in-process
-    Lloyd's (see ``_lloyd_numpy``). Corpus assignment is a broadcast
-    join against the tiny centroid table + one argmin window per vector
-    — pure JVM expressions, one corpus pass, no shuffle of the corpus.
-    The probe is a broadcast equi join on cell id touching
-    ~n_probe/n_cells of the corpus per query. At 100 TB raise
-    n_cells ~ sqrt(N); the fit stays O(sample), everything else is
-    unchanged.
-    """
-    spark = embeddings.sparkSession
-    base = with_norm(embeddings)
-    sample = [
-        r.embedding
-        for r in base.filter(F.col("vec_id") < 64 * n_cells)
-        .select("embedding")
-        .collect()
-    ]
-    if not sample:
-        # vec_ids need not start at 0; fall back to an unfiltered capped
-        # prefix so the quantizer always has fit input.
-        sample = [
-            r.embedding for r in base.select("embedding").limit(64 * n_cells).collect()
-        ]
-    if not sample:
-        raise ValueError("ivf_topk: embeddings corpus is empty; nothing to fit")
-    # Lloyd's seeds k distinct points, so the cell count can never exceed
-    # the fit-sample size (tiny corpora would otherwise crash the fit).
-    n_cells = min(n_cells, len(sample))
-    n_probe = min(n_probe, n_cells)
-    cent = _lloyd_numpy(sample, k=n_cells)
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cent)],
-        "cell int, centroid array<double>",
-    )
-
-    sq_dist = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("centroid"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    cell_rank = Window.partitionBy("vec_id").orderBy(F.col("dist").asc(), F.col("cell"))
-    assigned = (
-        base.crossJoin(F.broadcast(centroids))
-        .select("vec_id", "embedding", "norm", "cell", sq_dist.alias("dist"))
-        .withColumn("rn", F.row_number().over(cell_rank))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "norm", "cell")
-    )
-    queries = assigned.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    dist_rank = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("cell")
-    )
-    probe_cells = (
-        queries.crossJoin(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "q_emb",
-            "q_norm",
-            "cell",
-            F.aggregate(
-                F.zip_with(
-                    F.col("q_emb"),
-                    F.col("centroid"),
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("dist"),
-        )
-        .withColumn("cell_rank", F.row_number().over(dist_rank))
-        .filter(F.col("cell_rank") <= n_probe)
-        .select("query_id", "q_emb", "q_norm", "cell")
-    )
-    cands = assigned.join(
-        F.broadcast(probe_cells),
-        (assigned.cell == probe_cells.cell)
-        & (assigned.vec_id != probe_cells.query_id),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (
-            _dot(F.col("q_emb"), F.col("embedding"))
-            / (F.col("q_norm") * F.col("norm"))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Cosine near-dup pairs among consecutive vec_ids — the
     verification-stage MATH only, kept as the property-test fixture for
@@ -549,30 +433,18 @@ def pca_project(
     before ANN indexing / clustering (FAISS's PCAMatrix pre-transform).
 
     Fit: driver-side numpy SVD on a deterministic capped sample
-    (vec_id prefix, same convention as `ivf_topk`). Apply: the mean and
-    the k x d component matrix ride into the plan as ONE broadcast row
-    (never thousands of literals — the LSH lesson), and the projection
-    is a map-only JVM expression: proj[i] = dot(embedding - mean,
-    comp[i]) via nested zip_with/aggregate. No shuffle, no Python on
-    the corpus path, one scan; at 100 TB this is embarrassingly
-    parallel and the fit cost is unchanged.
+    (``_fit_sample``, the vec_id prefix the ANN fits use). Apply: the
+    mean and the k x d component matrix ride into the plan as ONE
+    broadcast row (never thousands of literals — the LSH lesson), and
+    the projection is a map-only JVM expression: proj[i] =
+    dot(embedding - mean, comp[i]) via nested zip_with/aggregate. No
+    shuffle, no Python on the corpus path, one scan; at 100 TB this is
+    embarrassingly parallel and the fit cost is unchanged.
 
     Returns (vec_id, proj array<double> length k).
     """
     spark = embeddings.sparkSession
-    sample = [
-        r.embedding
-        for r in embeddings.filter(F.col("vec_id") < fit_cap)
-        .select("embedding")
-        .collect()
-    ]
-    if not sample:
-        sample = [
-            r.embedding
-            for r in embeddings.select("embedding").limit(fit_cap).collect()
-        ]
-    if not sample:
-        raise ValueError("pca_project: embeddings corpus is empty; nothing to fit")
+    sample = _fit_sample(embeddings, fit_cap, "pca_project")
     k = min(k, len(sample[0]), len(sample))
     mean, comps = _pca_fit_numpy(sample, k)
     basis = spark.createDataFrame(
@@ -602,421 +474,134 @@ PQ_CODES = 16  # K: centroids per sub-codebook (a 4-bit code)
 PQ_RERANK = 48  # ADC shortlist size handed to the exact re-rank
 
 
-def pq_topk(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    m_subspaces: int = PQ_SUBSPACES,
-    n_codes: int = PQ_CODES,
-    rerank: int = PQ_RERANK,
-) -> DataFrame:
-    """Product-quantization ANN (Jegou et al., TPAMI'11) — the
-    memory-bound regime IVF/LSH don't cover: the corpus is stored as
-    M small codes per vector (here 4x4 bits vs 64 floats, a ~32x
-    compression), queries scan the CODES with an asymmetric-distance
-    lookup table, and only an ADC shortlist of ``rerank`` candidates
-    per query touches the raw vectors for the exact cosine re-rank.
+# One IVF / PQ index serves all six ANN entries. Its codebooks are DATA:
+# a coarse centroid matrix ``cent`` and per-subspace codebooks ``cb``,
+# shipped as one broadcast row. The fitted entries (ivf_topk, pq_topk,
+# ivfpq_topk) fit them with driver-side Lloyd's (``_fit_index``); the
+# pinned twins use the seeded sign matrix (``_pinned_consts``) so a
+# DuckDB oracle can replay every stage. Only the codeword score differs:
+# sign books score by dot product, fitted books by negated squared L2.
 
-    Spark shape (same discipline as ``ivf_topk``):
-    * fit — per-subspace codebooks via deterministic driver-side
-      Lloyd's on a capped sample (``_lloyd_numpy``; FAISS trains PQ
-      the same way). The codebook table is M*K rows — broadcast-size
-      at any corpus scale.
-    * encode — one corpus pass: broadcast-join the codebook, argmin
-      window per (vector, subspace); the encoded corpus is (vec_id,
-      sub, code) rows, M per vector, all JVM expressions.
-    * ADC — per query, a LUT of query-subvector -> centroid squared
-      distances (n_queries*M*K rows, built by one broadcast
-      crossJoin); the code scan joins the LUT on (sub, code) and
-      map-side-combines SUM over the M subspaces — approximate
-      distances with NO per-vector float math, the whole point of PQ.
-    * re-rank — top ``rerank`` by (adc, neighbor_id) per query, then
-      exact cosine against the raw vectors for the final top-k, so
-      reported cosines are TRUE cosines (rows-only entry: the ADC
-      ordering is quantization-dependent; recall + true-cosine
-      properties are pinned in tests).
 
-    At 100 TB: the raw corpus is touched once (encode) and then only
-    by shortlists; the code table is M bytes-per-vector — the scan
-    that serves queries is ~1/32 the IO of the raw corpus.
-    """
-    spark = embeddings.sparkSession
-    base = with_norm(embeddings)
-    dim_row = base.select(F.size("embedding").alias("d")).first()
-    if dim_row is None:
-        raise ValueError("pq_topk: embeddings corpus is empty; nothing to fit")
-    dim = dim_row.d
-    if dim % m_subspaces != 0:
-        raise ValueError(
-            f"pq_topk: dim {dim} not divisible by m_subspaces {m_subspaces}"
-        )
-    sub_d = dim // m_subspaces
+def _fit_sample(embeddings: DataFrame, cap: int, name: str) -> list:
+    """The driver-side fit input: the first ``cap`` vectors by vec_id
+    (a deterministic prefix, a few hundred KB at any corpus size). When
+    vec_ids do not start at 0 the prefix catches nothing and the first
+    ``cap`` rows of the scan stand in."""
     sample = [
         r.embedding
-        for r in base.select("embedding").limit(64 * n_codes).collect()
-    ]
-    n_codes = min(n_codes, len(sample))
-    import numpy as np
-
-    S = np.asarray(sample, dtype=np.float64)
-    rows = []
-    for m in range(m_subspaces):
-        cent = _lloyd_numpy(S[:, m * sub_d : (m + 1) * sub_d], k=n_codes)
-        rows += [
-            (m, c, [float(x) for x in cent[c]]) for c in range(n_codes)
-        ]
-    codebook = spark.createDataFrame(
-        rows, "sub int, code int, centroid array<double>"
-    )
-
-    # encode: slice each vector into its M subvectors (one explode),
-    # broadcast-join the codebook, keep the argmin code per subspace
-    subs = base.select(
-        "vec_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {m_subspaces - 1}), m ->"
-                f" struct(m AS sub, slice(embedding, m * {sub_d} + 1,"
-                f" {sub_d}) AS sv))"
-            )
-        ).alias("s"),
-    ).select("vec_id", "s.sub", "s.sv")
-    sq = F.aggregate(
-        F.zip_with(
-            F.col("sv"),
-            F.col("centroid"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    code_rank = Window.partitionBy("vec_id", "sub").orderBy(
-        F.col("d2").asc(), F.col("code")
-    )
-    codes = (
-        subs.join(F.broadcast(codebook), "sub")
-        .select("vec_id", "sub", "code", sq.alias("d2"))
-        .withColumn("rn", F.row_number().over(code_rank))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "sub", "code")
-    )
-
-    queries = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    q_subs = queries.select(
-        "query_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {m_subspaces - 1}), m ->"
-                f" struct(m AS sub, slice(q_emb, m * {sub_d} + 1,"
-                f" {sub_d}) AS sv))"
-            )
-        ).alias("s"),
-    ).select("query_id", "s.sub", "s.sv")
-    lut = q_subs.join(F.broadcast(codebook), "sub").select(
-        "query_id", "sub", "code", sq.alias("d2")
-    )
-    # ADC scan: codes ⋈ broadcast LUT, map-side-combined SUM over subs
-    adc = (
-        codes.join(F.broadcast(lut), ["sub", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d2").alias("adc"))
-    )
-    short_w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("vec_id")
-    )
-    shortlist = (
-        adc.withColumn("srn", F.row_number().over(short_w))
-        .filter(F.col("srn") <= rerank)
-        .select("query_id", "vec_id")
-    )
-    # exact re-rank of the shortlist only
-    cands = (
-        shortlist.join(base, "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                _dot(F.col("q_emb"), F.col("embedding"))
-                / (F.col("q_norm") * F.col("norm"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def ivfpq_topk(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    n_cells: int = IVF_CELLS,
-    n_probe: int = IVF_PROBE,
-    m_subspaces: int = PQ_SUBSPACES,
-    n_codes: int = PQ_CODES,
-    rerank: int = PQ_RERANK,
-) -> DataFrame:
-    """IVF-PQ with RESIDUAL encoding (Jegou et al. TPAMI'11 section
-    IV-B) — the FAISS IndexIVFPQ production composition of the two
-    standalone indexes this module already ships: the coarse quantizer
-    routes vectors to cells AND the PQ codebooks quantize the residual
-    (v - centroid), which is what makes the codes sharp enough to rank
-    inside a cell; a query probes only its ``n_probe`` nearest cells
-    with a PER-(query, cell) ADC lookup table built from the QUERY's
-    residual against that cell.
-
-    Spark shape (the ``ivf_topk``/``pq_topk`` discipline composed):
-    * fit — one capped driver-side sample fits the coarse centroids
-      (``_lloyd_numpy``), assigns the sample, and fits per-subspace
-      codebooks on the sample RESIDUALS. Both tables are broadcast-
-      size at any corpus scale; no distributed ML job.
-    * encode — one corpus pass: broadcast-centroid argmin assignment,
-      residual via ``zip_with`` subtract, per-subspace argmin code —
-      the stored index is (vec_id, cell, sub, code), M small ints per
-      vector (~32x smaller than the raw corpus).
-    * probe — per query, residual LUTs for its n_probe cells
-      (n_queries * n_probe * M * K rows, broadcast); the code scan
-      joins the LUT on (cell, sub, code) — so only probed cells'
-      codes participate — and map-side-combines SUM over subspaces.
-    * re-rank — top ``rerank`` by ADC, exact cosine on the raw
-      vectors for the final top-k (reported cosines are TRUE).
-
-    Rows-only entry (quantization-dependent ordering); recall and
-    true-cosine properties pinned in tests/test_llm_ops.py.
-    """
-    import numpy as np
-
-    spark = embeddings.sparkSession
-    base = with_norm(embeddings)
-    dim_row = base.select(F.size("embedding").alias("d")).first()
-    if dim_row is None:
-        raise ValueError("ivfpq_topk: embeddings corpus is empty")
-    dim = dim_row.d
-    if dim % m_subspaces != 0:
-        raise ValueError(
-            f"ivfpq_topk: dim {dim} not divisible by m_subspaces"
-            f" {m_subspaces}"
-        )
-    sub_d = dim // m_subspaces
-
-    sample = [
-        r.embedding
-        for r in base.select("embedding")
-        .limit(64 * max(n_cells, n_codes))
+        for r in embeddings.filter(F.col("vec_id") < cap)
+        .select("embedding")
         .collect()
     ]
     if not sample:
-        raise ValueError("ivfpq_topk: embeddings corpus is empty")
-    n_cells = min(n_cells, len(sample))
-    n_probe = min(n_probe, n_cells)
-    n_codes = min(n_codes, len(sample))
-    S = np.asarray(sample, dtype=np.float64)
-    cent = _lloyd_numpy(S, k=n_cells)
-    # sample residuals against the NEAREST centroid — the distribution
-    # the per-subspace codebooks must cover
-    d2 = ((S[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-    resid = S - cent[d2.argmin(axis=1)]
-    cb_rows = []
-    for m in range(m_subspaces):
-        cbm = _lloyd_numpy(resid[:, m * sub_d : (m + 1) * sub_d], k=n_codes)
-        cb_rows += [
-            (m, c, [float(x) for x in cbm[c]]) for c in range(n_codes)
+        sample = [
+            r.embedding for r in embeddings.select("embedding").limit(cap).collect()
         ]
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cent)],
-        "cell int, centroid array<double>",
-    )
-    codebook = spark.createDataFrame(
-        cb_rows, "sub int, code int, cb array<double>"
-    )
+    if not sample:
+        raise ValueError(f"{name}: embeddings corpus is empty; nothing to fit")
+    return sample
 
-    cent_d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("centroid"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    cell_rank = Window.partitionBy("vec_id").orderBy(
-        F.col("dist").asc(), F.col("cell")
-    )
-    assigned = (
-        base.crossJoin(F.broadcast(centroids))
-        .select(
-            "vec_id", "embedding", "norm", "cell", "centroid",
-            cent_d2.alias("dist"),
-        )
-        .withColumn("rn", F.row_number().over(cell_rank))
-        .filter(F.col("rn") == 1)
-        .select(
-            "vec_id",
-            "embedding",
-            "norm",
-            "cell",
-            F.zip_with(
-                "embedding", "centroid", lambda a, b: a.cast("double") - b
-            ).alias("resid"),
-        )
-    )
-    # encode residuals: explode subspaces, broadcast codebook, argmin
-    subs = assigned.select(
-        "vec_id",
-        "cell",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {m_subspaces - 1}), m ->"
-                f" struct(m AS sub, slice(resid, m * {sub_d} + 1,"
-                f" {sub_d}) AS sv))"
-            )
-        ).alias("s"),
-    ).select("vec_id", "cell", "s.sub", "s.sv")
-    sq = F.aggregate(
-        F.zip_with(
-            F.col("sv"), F.col("cb"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    code_rank = Window.partitionBy("vec_id", "sub").orderBy(
-        F.col("d2").asc(), F.col("code")
-    )
-    codes = (
-        subs.join(F.broadcast(codebook), "sub")
-        .select("vec_id", "cell", "sub", "code", sq.alias("d2"))
-        .withColumn("crn", F.row_number().over(code_rank))
-        .filter(F.col("crn") == 1)
-        .select("vec_id", "cell", "sub", "code")
-    )
 
-    queries = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    q_cell_d2 = F.aggregate(
-        F.zip_with(
-            F.col("q_emb"),
-            F.col("centroid"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    probe_rank = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("cell")
-    )
-    probe = (
-        queries.crossJoin(F.broadcast(centroids))
-        .select(
-            "query_id", "q_emb", "cell", "centroid", q_cell_d2.alias("dist")
-        )
-        .withColumn("prn", F.row_number().over(probe_rank))
-        .filter(F.col("prn") <= n_probe)
-        .select(
-            "query_id",
-            "cell",
-            F.zip_with(
-                "q_emb", "centroid", lambda a, b: a.cast("double") - b
-            ).alias("q_resid"),
-        )
-    )
-    q_subs = probe.select(
-        "query_id",
-        "cell",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {m_subspaces - 1}), m ->"
-                f" struct(m AS sub, slice(q_resid, m * {sub_d} + 1,"
-                f" {sub_d}) AS sv))"
-            )
-        ).alias("s"),
-    ).select("query_id", "cell", "s.sub", "s.sv")
-    lut = q_subs.join(F.broadcast(codebook), "sub").select(
-        "query_id", "cell", "sub", "code", sq.alias("d2")
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["cell", "sub", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d2").alias("adc"))
-    )
-    short_w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("vec_id")
-    )
-    shortlist = (
-        adc.withColumn("srn", F.row_number().over(short_w))
-        .filter(F.col("srn") <= rerank)
-        .select("query_id", "vec_id")
-    )
-    cands = (
-        shortlist.join(base, "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                _dot(F.col("q_emb"), F.col("embedding"))
-                / (F.col("q_norm") * F.col("norm"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+def _book_row(spark, cent=None, cb=None) -> DataFrame:
+    """An index's codebooks as ONE broadcastable row: ``cent[c]`` is
+    coarse centroid c, ``cb[m][c]`` is the codeword for PQ subspace m
+    and code c. A missing book leaves its column out. Broadcast-crossed
+    onto a frame, every row sees the whole matrix as DATA — the
+    ``_sign_table`` argument against plan literals — so encode and LUT
+    are per-row array expressions with no fan-out, window or pivot."""
+    cols, vals = [], []
+    if cent is not None:
+        cols.append("cent array<array<double>>")
+        vals.append(cent)
+    if cb is not None:
+        cols.append("cb array<array<array<double>>>")
+        vals.append(cb)
+    return spark.createDataFrame([tuple(vals)], ", ".join(cols))
 
 
 def _pinned_consts(
     spark, dim: int, n_cells: int = 0, m_subspaces: int = 0, n_codes: int = 0
 ) -> DataFrame:
-    """The pinned sign constants as ONE broadcastable row: ``cent[c]``
-    is coarse centroid c (``n_cells`` x ``dim``), ``cb[m][c]`` is the
-    codeword for PQ subspace m and code c (``m_subspaces`` x
-    ``n_codes`` x ``dim / m_subspaces``). A zero count leaves its
-    column out. Broadcast-crossed onto a frame, every row sees the
-    whole matrix as DATA — the ``_sign_table`` argument against plan
-    literals — so encode and LUT are per-row array expressions with no
-    fan-out, window or pivot."""
-    cols, vals = [], []
-    if n_cells:
-        cols.append("cent array<array<double>>")
-        vals.append([s[0] for s in _plane_signs(n_cells, 1, dim)])
+    """The pinned twins' book: ``n_cells`` x ``dim`` sign centroids and
+    ``m_subspaces`` x ``n_codes`` sign codewords of ``dim / m_subspaces``
+    entries, all from the seeded ``_plane_signs`` matrix. A zero count
+    leaves its book out."""
+    if m_subspaces and dim % m_subspaces != 0:
+        raise ValueError(f"dim {dim} not divisible by {m_subspaces}")
+    cent = [s[0] for s in _plane_signs(n_cells, 1, dim)] if n_cells else None
+    cb = None
     if m_subspaces:
         signs = _plane_signs(m_subspaces * n_codes, 1, dim // m_subspaces)
-        cols.append("cb array<array<array<double>>>")
-        vals.append(
-            [
-                [signs[m * n_codes + c][0] for c in range(n_codes)]
-                for m in range(m_subspaces)
-            ]
-        )
-    return spark.createDataFrame([tuple(vals)], ", ".join(cols))
+        cb = [
+            [signs[m * n_codes + c][0] for c in range(n_codes)]
+            for m in range(m_subspaces)
+        ]
+    return _book_row(spark, cent, cb)
+
+
+def _fit_index(
+    embeddings: DataFrame,
+    name: str,
+    n_cells: int = 0,
+    m_subspaces: int = 0,
+    n_codes: int = 0,
+) -> tuple[int, DataFrame]:
+    """The fitted entries' book and the embedding dim, fit on the driver
+    from one ``_fit_sample`` of ``64 * max(n_cells, n_codes)`` vectors —
+    FAISS trains IVF and PQ the same way, and no distributed ML job runs.
+    ``n_cells`` coarse centroids come from Lloyd's (``_lloyd_numpy``);
+    with both books the PQ codebooks are fit on the sample RESIDUALS
+    against each vector's nearest centroid, the distribution IVF-PQ
+    encodes. Lloyd's seeds k distinct points, so a sample smaller than
+    a count caps it."""
+    import numpy as np
+
+    sample = _fit_sample(embeddings, 64 * max(n_cells, n_codes), name)
+    S = np.asarray(sample, dtype=np.float64)
+    dim = S.shape[1]
+    if m_subspaces and dim % m_subspaces != 0:
+        raise ValueError(f"{name}: dim {dim} not divisible by {m_subspaces}")
+    cent = cb = None
+    if n_cells:
+        cent = _lloyd_numpy(S, k=min(n_cells, len(S)))
+        if m_subspaces:
+            d2 = ((S[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+            S = S - cent[d2.argmin(axis=1)]
+        cent = cent.tolist()
+    if m_subspaces:
+        sub_d = dim // m_subspaces
+        cb = [
+            _lloyd_numpy(
+                S[:, m * sub_d : (m + 1) * sub_d], k=min(n_codes, len(S))
+            ).tolist()
+            for m in range(m_subspaces)
+        ]
+    return dim, _book_row(embeddings.sparkSession, cent, cb)
 
 
 def _dots_sql(vec: str, book: str) -> str:
     """SQL for the array of dots of ``vec`` with each codeword of
     ``book`` — the left-to-right ``cast(x as double) * y`` fold from
-    0.0 that DuckDB's list_dot_product reproduces bit for bit."""
+    0.0 that DuckDB's list_dot_product reproduces bit for bit. Sign
+    codewords have equal norms, so the largest dot is the nearest
+    codeword by L2."""
     return (
         f"transform({book}, cw -> aggregate(zip_with({vec}, cw,"
         " (x, y) -> cast(x as double) * y), 0D, (acc, v) -> acc + v))"
+    )
+
+
+def _neg_l2_sql(vec: str, book: str) -> str:
+    """SQL for the array of NEGATED squared L2 distances of ``vec`` to
+    each codeword of ``book``, for fitted codewords of any norm. The
+    argmax of -d2, first on ties, is the nearest codeword with ties to
+    the smallest index, and a descending ADC over -d2 LUTs ranks by
+    ascending approximate distance."""
+    return (
+        f"transform({book}, cw -> -aggregate(zip_with({vec}, cw,"
+        " (x, y) -> (cast(x as double) - y) * (cast(x as double) - y)),"
+        " 0D, (acc, v) -> acc + v))"
     )
 
 
@@ -1042,69 +627,93 @@ def _argmax_sql(arr: str) -> str:
     )
 
 
-def _pinned_pairs(
+def _ann_pairs(
     embeddings: DataFrame,
     n_queries: int,
     dim: int,
-    n_cells: int = 0,
+    book: DataFrame,
     n_probe: int = 0,
     m_subspaces: int = 0,
-    n_codes: int = 0,
+    fitted: bool = False,
 ) -> DataFrame:
-    """The (query, candidate) pairs of the pinned IVF / PQ index all
-    three pinned twins share, built as per-row array expressions over
-    the one-row ``_pinned_consts`` broadcast.
+    """The (query, candidate) pairs of the IVF / PQ index all six ANN
+    entries share, built as per-row array expressions over the one-row
+    ``book`` broadcast. Codeword scores are ``_dots_sql`` for sign
+    books and ``_neg_l2_sql`` for ``fitted`` ones; a fitted book with
+    both ``cent`` and ``cb`` encodes the residual ``v - cent[cell]``.
 
     Corpus side: (vec_id, embedding, norm), plus the coarse ``cell``
-    (with ``n_cells``) and one integer code ``c{m}`` per subspace (with
-    ``m_subspaces``) — each an argmax fold over codeword dots, all in
-    ONE select. Query side, for the first ``n_queries`` vectors:
-    (query_id, q_emb, q_norm), plus one LUT array ``lut{m}`` per
-    subspace (``lut{m}[c]`` = dot of subvector m with codeword c) and,
-    with ``n_cells``, one row per probed ``q_cell`` — the query's
-    ``n_probe`` best cells by (dot DESC, cell), the only window left,
-    over queries x cells. The broadcast queries join every other corpus
-    vector, or with ``n_cells`` only those in a probed cell."""
-    if m_subspaces and dim % m_subspaces != 0:
-        raise ValueError(f"dim {dim} not divisible by {m_subspaces}")
+    (with ``cent``) and one integer code ``c{m}`` per subspace (with
+    ``m_subspaces``), each the argmax fold of its scores. Query side,
+    for the first ``n_queries`` vectors: (query_id, q_emb, q_norm) and
+    one LUT array ``lut{m}`` per subspace (``lut{m}[c]`` = score of
+    query subvector m against codeword c). With ``cent`` each query is
+    posexploded to one row per ``q_cell`` (its LUTs built from that
+    cell's residual when fitted) and keeps its ``n_probe`` best cells
+    by (score DESC, cell): the only window, over queries x cells. The
+    broadcast queries join every other corpus vector, or with ``cent``
+    only those in a probed cell."""
+    score = _neg_l2_sql if fitted else _dots_sql
+    cells = "cent" in book.columns
     sub_d = dim // m_subspaces if m_subspaces else 0
     base = with_norm(embeddings)
-    consts = F.broadcast(
-        _pinned_consts(base.sparkSession, dim, n_cells, m_subspaces, n_codes)
-    )
-    cell_dots = [_dots_sql("embedding", "cent")] if n_cells else []
-    sub_dots = [
-        _dots_sql(f"slice(embedding, {m * sub_d + 1}, {sub_d})", f"cb[{m}]")
-        for m in range(m_subspaces)
-    ]
-    enc = base.crossJoin(consts).select(
+    book = F.broadcast(book)
+
+    def sub_scores(frame: DataFrame, cell: str) -> tuple[DataFrame, list[str]]:
+        """Per-subspace codeword scores of the vector PQ quantizes: the
+        embedding, or in a fitted IVF-PQ its residual to cent[cell]."""
+        vec = "embedding"
+        if fitted and cells and m_subspaces:
+            vec = "resid"
+            frame = frame.withColumn(
+                vec,
+                F.expr(
+                    f"zip_with(embedding, cent[{cell}],"
+                    " (x, y) -> cast(x as double) - y)"
+                ),
+            )
+        return frame, [
+            score(f"slice({vec}, {m * sub_d + 1}, {sub_d})", f"cb[{m}]")
+            for m in range(m_subspaces)
+        ]
+
+    enc = base.crossJoin(book)
+    if cells:
+        enc = enc.withColumn("cell", F.expr(_argmax_sql(score("embedding", "cent"))))
+    enc, codes = sub_scores(enc, "cell")
+    enc = enc.select(
         "vec_id",
         "embedding",
         "norm",
-        *[F.expr(_argmax_sql(d)).alias("cell") for d in cell_dots],
-        *[F.expr(_argmax_sql(d)).alias(f"c{m}") for m, d in enumerate(sub_dots)],
+        *(["cell"] if cells else []),
+        *[F.expr(_argmax_sql(d)).alias(f"c{m}") for m, d in enumerate(codes)],
     )
-    queries = (
-        base.filter(F.col("vec_id") < n_queries)
-        .crossJoin(consts)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("norm").alias("q_norm"),
-            *[F.expr(d).alias(f"lut{m}") for m, d in enumerate(sub_dots)],
-            *[F.posexplode(F.expr(d)) for d in cell_dots],
+
+    queries = base.filter(F.col("vec_id") < n_queries).crossJoin(book)
+    if cells:
+        queries = queries.select(
+            "*",
+            F.posexplode(F.expr(score("embedding", "cent"))).alias(
+                "q_cell", "q_score"
+            ),
         )
+    queries, luts = sub_scores(queries, "q_cell")
+    queries = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("norm").alias("q_norm"),
+        *(["q_cell", "q_score"] if cells else []),
+        *[F.expr(d).alias(f"lut{m}") for m, d in enumerate(luts)],
     )
     on = F.col("vec_id") != F.col("query_id")
-    if n_cells:
+    if cells:
         probe_rank = Window.partitionBy("query_id").orderBy(
-            F.col("col").desc(), F.col("pos")
+            F.col("q_score").desc(), F.col("q_cell")
         )
         queries = (
             queries.withColumn("prn", F.row_number().over(probe_rank))
             .filter(F.col("prn") <= n_probe)
-            .withColumnRenamed("pos", "q_cell")
-            .drop("col", "prn")
+            .drop("q_score", "prn")
         )
         on = (F.col("cell") == F.col("q_cell")) & on
     return enc.join(F.broadcast(queries), on)
@@ -1112,7 +721,8 @@ def _pinned_pairs(
 
 def _rank_by_cosine(pairs: DataFrame, k: int) -> DataFrame:
     """Exact-cosine top-k of (query, candidate) pairs that carry both
-    vectors and norms; rank-only output keeps floats out of the hash."""
+    vectors and norms: (query_id, neighbor_id, cosine, rank). Reported
+    cosines are TRUE cosines of the raw vectors."""
     cands = pairs.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
@@ -1127,7 +737,7 @@ def _rank_by_cosine(pairs: DataFrame, k: int) -> DataFrame:
     return (
         cands.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
+        .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
 
@@ -1135,10 +745,10 @@ def _adc_rerank(
     pairs: DataFrame, m_subspaces: int, rerank: int, k: int
 ) -> DataFrame:
     """Deterministic ADC over (corpus code, query LUT) pairs — the
-    asymmetric inner product ``lut0[c0] + lut1[c1] + ...`` added in a
-    FIXED left-to-right order, never a groupBy SUM whose float
-    association depends on partitioning — then the ``rerank``-row
-    shortlist per query and its exact-cosine top-k."""
+    asymmetric score ``lut0[c0] + lut1[c1] + ...`` added in a FIXED
+    left-to-right order, never a groupBy SUM whose float association
+    depends on partitioning — then the ``rerank``-row shortlist per
+    query by (score DESC, vec_id) and its exact-cosine top-k."""
     approx = " + ".join(f"lut{m}[c{m}]" for m in range(m_subspaces))
     short_w = Window.partitionBy("query_id").orderBy(
         F.col("approx").desc(), F.col("vec_id")
@@ -1153,6 +763,119 @@ def _adc_rerank(
     )
     return _rank_by_cosine(shortlist, k)
 
+
+def ivf_topk(
+    embeddings: DataFrame,
+    n_queries: int = 8,
+    k: int = 5,
+    n_cells: int = IVF_CELLS,
+    n_probe: int = IVF_PROBE,
+) -> DataFrame:
+    """IVF (inverted-file) ANN: a k-means coarse quantizer partitions
+    the corpus into cells; each query probes only its ``n_probe``
+    nearest cells and exact-cosine re-ranks the candidates.
+
+    Scale shape: the quantizer fits on a SAMPLE, never the corpus
+    (``_fit_index``: a capped vec_id prefix, in-process Lloyd's). The
+    centroids ride as one broadcast row; each vector's cell is an
+    argmax fold over its negated squared distances to them — one
+    corpus pass, pure JVM expressions, no shuffle of the corpus. The
+    probe is a broadcast equi join on cell id touching ~n_probe/n_cells
+    of the corpus per query. At 100 TB raise n_cells ~ sqrt(N); the fit
+    stays O(sample), everything else is unchanged. Returns (query_id,
+    neighbor_id, cosine, rank) with true cosines.
+    """
+    dim, book = _fit_index(embeddings, "ivf_topk", n_cells=n_cells)
+    pairs = _ann_pairs(embeddings, n_queries, dim, book, n_probe, fitted=True)
+    return _rank_by_cosine(pairs, k)
+
+
+def pq_topk(
+    embeddings: DataFrame,
+    n_queries: int = 8,
+    k: int = 5,
+    m_subspaces: int = PQ_SUBSPACES,
+    n_codes: int = PQ_CODES,
+    rerank: int = PQ_RERANK,
+) -> DataFrame:
+    """Product-quantization ANN (Jegou et al., TPAMI'11) — the
+    memory-bound regime IVF/LSH don't cover: the corpus is stored as
+    M small codes per vector (here 4x4 bits vs 64 floats, a ~32x
+    compression), queries scan the CODES with an asymmetric-distance
+    lookup table, and only an ADC shortlist of ``rerank`` candidates
+    per query touches the raw vectors for the exact cosine re-rank.
+
+    Spark shape (the shared index, ``_ann_pairs``):
+    * fit — per-subspace codebooks via driver-side Lloyd's on a capped
+      sample (``_fit_index``), shipped as one broadcast row.
+    * encode — one corpus pass: each vector's M codes are argmax folds
+      over negated squared distances to its subspace's codewords,
+      M int columns on the vector's own row.
+    * ADC — each query carries one LUT array per subspace; the scan
+      over the broadcast queries adds ``lut0[c0] + lut1[c1] + ...`` in
+      a fixed order — table lookups, no per-vector float math.
+    * re-rank — top ``rerank`` by (ADC, vec_id) per query, then exact
+      cosine against the raw vectors for the final top-k, so reported
+      cosines are TRUE cosines (rows-only entry: the fit is
+      data-dependent; recall + true-cosine properties are pinned in
+      tests).
+
+    At 100 TB: the raw corpus is touched once (encode) and then only
+    by shortlists; the codes are M bytes per vector — the scan that
+    serves queries is ~1/32 the IO of the raw corpus.
+    """
+    dim, book = _fit_index(
+        embeddings, "pq_topk", m_subspaces=m_subspaces, n_codes=n_codes
+    )
+    pairs = _ann_pairs(
+        embeddings, n_queries, dim, book, m_subspaces=m_subspaces, fitted=True
+    )
+    return _adc_rerank(pairs, m_subspaces, rerank, k)
+
+
+def ivfpq_topk(
+    embeddings: DataFrame,
+    n_queries: int = 8,
+    k: int = 5,
+    n_cells: int = IVF_CELLS,
+    n_probe: int = IVF_PROBE,
+    m_subspaces: int = PQ_SUBSPACES,
+    n_codes: int = PQ_CODES,
+    rerank: int = PQ_RERANK,
+) -> DataFrame:
+    """IVF-PQ with RESIDUAL encoding (Jegou et al. TPAMI'11 section
+    IV-B) — the FAISS IndexIVFPQ composition of ``ivf_topk`` and
+    ``pq_topk``: the coarse quantizer routes vectors to cells AND the
+    PQ codebooks quantize the residual (v - centroid), which is what
+    makes the codes sharp enough to rank inside a cell; a query probes
+    only its ``n_probe`` nearest cells with a PER-(query, cell) LUT
+    built from the QUERY's residual against that cell.
+
+    Spark shape (the shared index, ``_ann_pairs``):
+    * fit — one capped driver-side sample fits the coarse centroids,
+      assigns the sample, and fits per-subspace codebooks on the
+      sample RESIDUALS (``_fit_index``); one broadcast row.
+    * encode — one corpus pass: the cell is an argmax fold, the
+      residual ``zip_with(embedding, cent[cell], ...)``, and each
+      subspace's code an argmax fold over the residual slice.
+    * probe — each query's ``n_probe`` best cells (the one window, over
+      queries x cells); per probed cell, the query residual
+      ``zip_with(q_emb, cent[q_cell], ...)`` and its LUT arrays. The
+      cell-matched join means only probed cells' codes are scanned,
+      with the fixed-order ADC ``lut0[c0] + lut1[c1] + ...``.
+    * re-rank — top ``rerank`` by ADC, exact cosine on the raw vectors
+      for the final top-k (reported cosines are TRUE).
+
+    Rows-only entry (the fit is data-dependent); recall and true-cosine
+    properties pinned in tests/test_llm_ops.py.
+    """
+    dim, book = _fit_index(
+        embeddings, "ivfpq_topk", n_cells, m_subspaces, n_codes
+    )
+    pairs = _ann_pairs(
+        embeddings, n_queries, dim, book, n_probe, m_subspaces, fitted=True
+    )
+    return _adc_rerank(pairs, m_subspaces, rerank, k)
 
 def ivf_pinned_topk(
     embeddings: DataFrame,
@@ -1175,18 +898,19 @@ def ivf_pinned_topk(
     Sign centroids have EQUAL norm (|c|^2 = dim), so nearest-centroid
     by L2 is exactly argmax dot product — and the dot is the one
     primitive proven bit-exact across engines (Spark aggregate fold ==
-    DuckDB list_dot_product, left-to-right). Each vector's cell is an
-    argmax fold over its centroid dots against a one-row broadcast
-    centroid array (``_argmax_sql``, ties to the smallest cell); each
-    query's probe ranks its cell dots by (dot DESC, cell).
+    DuckDB list_dot_product, left-to-right). The index is
+    ``ivf_topk``'s (``_ann_pairs``) with dot scores: each vector's cell
+    is an argmax fold over its centroid dots (ties to the smallest
+    cell); each query's probe ranks its cell dots by (dot DESC, cell).
     Candidates join on cell id, and the top-k output is rank-only so
     no float enters the hash. Quantizer QUALITY is whatever random
     sign directions give (fine on this near-isotropic corpus; recall
     vs brute force stays the production entry's property test) — what
     this entry verifies is the pipeline's mechanics, not the fit.
     """
-    pairs = _pinned_pairs(embeddings, n_queries, dim, n_cells, n_probe)
-    return _rank_by_cosine(pairs, k)
+    book = _pinned_consts(embeddings.sparkSession, dim, n_cells)
+    pairs = _ann_pairs(embeddings, n_queries, dim, book, n_probe)
+    return _rank_by_cosine(pairs, k).drop("cosine")
 
 
 def pq_pinned_topk(
@@ -1198,33 +922,24 @@ def pq_pinned_topk(
     rerank: int = PQ_RERANK,
     dim: int = 64,
 ) -> DataFrame:
-    """``pq_topk`` with PINNED sign codebooks and a deterministic ADC —
-    the oracle-replayable twin (the ivf_pinned_topk move applied to
-    PQ). Two changes unlock the hash gate:
-
-    * codebooks are the seeded sign matrix (equal-norm codewords), so
-      encode's argmin-L2 is exactly argmax dot — the bit-exact
-      primitive — instead of Lloyd-fitted data-dependent floats;
-    * the ADC statistic is the asymmetric INNER PRODUCT accumulated in
-      a FIXED order: ``lut0[c0] + lut1[c1] + ...`` as one expression,
-      not a groupBy SUM whose float association depends on the
-      partitioning (the reason the production entry is rows-only even
-      apart from the fit).
-
-    The whole index is per-row array expressions over a one-row
-    broadcast codebook (``_pinned_pairs``): each corpus row gets its
+    """``pq_topk`` with PINNED sign codebooks — the oracle-replayable
+    twin (the ivf_pinned_topk move applied to PQ). The codebooks are
+    the seeded sign matrix (equal-norm codewords), so encode's
+    argmin-L2 is exactly argmax dot — the bit-exact primitive —
+    instead of Lloyd-fitted data-dependent floats. Everything else is
+    ``pq_topk``'s index (``_ann_pairs``): each corpus row gets its
     codes from argmax folds, each query its LUT arrays, and the ADC
-    scan is a broadcast cross of queries onto the coded corpus, so the
-    only shuffle is the per-query shortlist window's. Shortlist then exact-cosine
-    re-rank as in production; rank-only output keeps floats out of the
+    ``lut0[c0] + lut1[c1] + ...`` is added in a fixed order over a
+    broadcast cross of queries onto the coded corpus, so the only
+    shuffle is the per-query shortlist window's. Shortlist then
+    exact-cosine re-rank; rank-only output keeps floats out of the
     hash. This entry verifies PQ's MECHANICS (encode, LUT, ADC scan,
     re-rank) end-to-end; compression QUALITY stays the fitted entry's
     recall property test.
     """
-    pairs = _pinned_pairs(
-        embeddings, n_queries, dim, m_subspaces=m_subspaces, n_codes=n_codes
-    )
-    return _adc_rerank(pairs, m_subspaces, rerank, k)
+    book = _pinned_consts(embeddings.sparkSession, dim, 0, m_subspaces, n_codes)
+    pairs = _ann_pairs(embeddings, n_queries, dim, book, m_subspaces=m_subspaces)
+    return _adc_rerank(pairs, m_subspaces, rerank, k).drop("cosine")
 
 
 def ivfpq_pinned_topk(
@@ -1240,19 +955,20 @@ def ivfpq_pinned_topk(
 ) -> DataFrame:
     """``ivfpq_topk`` with everything pinned — the composition of
     ``ivf_pinned_topk``'s sign-centroid cell probe and
-    ``pq_pinned_topk``'s sign codebooks + deterministic ADC, so the
-    full two-level index (coarse cells gate WHICH codes are scanned,
-    PQ codes approximate the scan, exact cosine re-ranks the
-    shortlist) replays in ANSI SQL and the driver hash gates it
-    end-to-end. One ``_pinned_pairs`` select gives each corpus row its
-    cell and codes; each query carries its LUTs to its probed cells,
-    and the ADC runs over the cell-matched pairs only. Rank-only
-    output; quality stays the fitted production entry's recall
-    property test."""
-    pairs = _pinned_pairs(
-        embeddings, n_queries, dim, n_cells, n_probe, m_subspaces, n_codes
+    ``pq_pinned_topk``'s sign codebooks, so the full two-level index
+    (coarse cells gate WHICH codes are scanned, PQ codes approximate
+    the scan, exact cosine re-ranks the shortlist) replays in ANSI SQL
+    and the driver hash gates it end-to-end. Sign books quantize the
+    vector itself, not a residual. One ``_ann_pairs`` pass gives each
+    corpus row its cell and codes; each probed (query, cell) row
+    carries the query's LUTs, and the ADC runs over the cell-matched
+    pairs only. Rank-only output; quality stays the fitted production
+    entry's recall property test."""
+    book = _pinned_consts(
+        embeddings.sparkSession, dim, n_cells, m_subspaces, n_codes
     )
-    return _adc_rerank(pairs, m_subspaces, rerank, k)
+    pairs = _ann_pairs(embeddings, n_queries, dim, book, n_probe, m_subspaces)
+    return _adc_rerank(pairs, m_subspaces, rerank, k).drop("cosine")
 
 
 def random_projection(

@@ -25,6 +25,14 @@ from kafka_s3_etl_spark.sources.tables import load_table
 
 REFERENCE_SAMPLE_JSON = "/root/reference/data/sample_products.json"
 
+# The catalog entries whose builders read the reference's shipped files
+# instead of sf_dir, with the file each reads. Where the file is absent
+# their tests skip with a stated reason.
+REFERENCE_INPUTS = {
+    "q_products_flagship_csv": REFERENCE_CSV,
+    "x_json_to_xml": REFERENCE_SAMPLE_JSON,
+}
+
 
 @register(
     "q_kafka_value",

@@ -2,10 +2,11 @@
 
 * q_sim_pq — product-quantization ANN
   (operators/similarity.py::pq_topk): the memory-bound regime IVF/LSH
-  don't cover — corpus stored as 4x4-bit codes (~32x smaller than the
-  raw floats), queries scan CODES via an asymmetric-distance LUT
-  (broadcast, no per-vector float math), exact cosine re-rank of the
-  ADC shortlist only. Rows-only (quantization-dependent ordering);
+  don't cover — each vector encoded to 4 four-bit codes on its own
+  row (~32x smaller than the raw floats), queries scan the CODES with
+  per-query LUT arrays (a fixed-order ``lut0[c0] + lut1[c1] + ...``,
+  no per-vector float math), exact cosine re-rank of the ADC
+  shortlist only. Rows-only (the codebooks are a data-dependent fit);
   recall + true-cosine properties pinned in tests/test_llm_ops.py.
 * q_doc_keyterms — per-document keyword extraction: top-3 terms under
   the (tf DESC, df ASC, token) order — highest in-doc frequency,
@@ -39,11 +40,12 @@ from kafka_s3_etl_spark.sources.tables import load_table
     cost=2,
     doc=(
         "Product-quantization ANN: per-subspace codebooks fit "
-        "driver-side on a capped sample (the FAISS shape), corpus "
-        "encoded to (vec_id, sub, code) rows in one broadcast-join "
-        "pass, ADC scan = code table x broadcast LUT with map-side "
-        "SUM, exact cosine re-rank of the shortlist only — reported "
-        "cosines are true cosines."
+        "driver-side on a capped sample (the FAISS shape) and "
+        "broadcast as one row; each vector's codes are argmax folds "
+        "on its own row, the ADC scan adds per-query LUT entries "
+        "lut0[c0] + lut1[c1] + ... in a fixed order, exact cosine "
+        "re-rank of the shortlist only — reported cosines are true "
+        "cosines."
     ),
 )
 def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -63,11 +65,11 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "queries probe their n_probe cells with per-(query, cell) "
         "residual ADC lookup tables, exact cosine re-rank of the "
         "shortlist. Fit is one capped driver-side sample (no "
-        "distributed ML job); the stored index is (vec_id, cell, sub, "
-        "code) — M small ints per vector; the ADC join touches only "
-        "probed cells' codes. Rows-only (quantization-dependent "
-        "ordering); recall + true-cosine properties in "
-        "tests/test_llm_ops.py."
+        "distributed ML job); each vector's cell and M small-int codes "
+        "sit on its own row; the cell-matched join scans only probed "
+        "cells' codes with the fixed-order ADC lut0[c0] + lut1[c1] + "
+        "... . Rows-only (the books are a data-dependent fit); recall "
+        "+ true-cosine properties in tests/test_llm_ops.py."
     ),
 )
 def q_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:

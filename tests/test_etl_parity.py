@@ -148,6 +148,7 @@ def test_split_malformed_on_stream(spark, tmp_path):
     assert {r.value for r in dead.collect()} == {"BROKEN"}
 
 
+@needs_reference
 def test_products_table_registers_view(spark):
     """A2/A3 parity surface: load + register as the products view."""
     from kafka_s3_etl_spark.sources.csv import products_table

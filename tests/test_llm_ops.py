@@ -703,12 +703,13 @@ def test_ivf_handles_tiny_and_offset_corpora(spark):
     assert got2.count() > 0
 
 
-def test_ivf_empty_corpus_raises(spark):
-    from kafka_s3_etl_spark.operators.similarity import ivf_topk as ivf
+@pytest.mark.parametrize("fn", ["ivf_topk", "pq_topk", "ivfpq_topk"])
+def test_fitted_ann_empty_corpus_raises(spark, fn):
+    from kafka_s3_etl_spark.operators import similarity
 
     empty = spark.createDataFrame([], "vec_id bigint, embedding array<float>, label int")
     with pytest.raises(ValueError, match="empty"):
-        ivf(empty)
+        getattr(similarity, fn)(empty)
 
 
 def test_auto_planes_scales_with_corpus():

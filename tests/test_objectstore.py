@@ -9,6 +9,7 @@ tests/test_integration_gated.py.
 
 from __future__ import annotations
 
+import os
 import socket
 
 import pytest
@@ -23,6 +24,11 @@ from kafka_s3_etl_spark.sources.objectstore import (  # noqa: E402
 
 REFERENCE_JSON = "/root/reference/data/sample_products.json"
 GOLDEN_XML = "/root/reference/data/output.xml"
+
+needs_reference = pytest.mark.skipif(
+    not (os.path.exists(REFERENCE_JSON) and os.path.exists(GOLDEN_XML)),
+    reason="reference data not available",
+)
 
 
 @pytest.fixture(scope="module")
@@ -40,6 +46,7 @@ def s3_endpoint():
         server.stop()
 
 
+@needs_reference
 def test_reference_pipeline_end_to_end_over_real_s3_api(spark, s3_endpoint):
     """The full reference B pipeline over a live S3 endpoint: the
     source JSON is uploaded, downloaded back through the S3 API,

@@ -5,14 +5,36 @@ driver's CORRECTNESS check. Rows-only queries are smoke-checked
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from kafka_s3_etl_spark.plans.etl import REFERENCE_INPUTS
 from kafka_s3_etl_spark.plans.registry import all_queries
 from tests.oracle import compare
 
 _QUERIES = all_queries()
-_ORACLE = [n for n, q in _QUERIES.items() if q.oracle is not None]
-_ROWS_ONLY = [n for n, q in _QUERIES.items() if q.oracle is None]
+
+
+def _params(names: list[str]) -> list:
+    """Entry names as pytest params; an entry that reads a reference
+    file skips, with the reason, where that file is absent."""
+    return [
+        pytest.param(
+            n,
+            marks=pytest.mark.skipif(
+                not os.path.exists(REFERENCE_INPUTS[n]),
+                reason=f"reference data not available: {REFERENCE_INPUTS[n]}",
+            ),
+        )
+        if n in REFERENCE_INPUTS
+        else n
+        for n in names
+    ]
+
+
+_ORACLE = _params([n for n, q in _QUERIES.items() if q.oracle is not None])
+_ROWS_ONLY = _params([n for n, q in _QUERIES.items() if q.oracle is None])
 
 
 @pytest.mark.parametrize("name", _ORACLE)
