@@ -870,6 +870,19 @@ def test_simjoin_prefix_plan_shape(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
+def test_pq_codebook_and_lut_broadcast(spark, sf_dir):
+    """q_sim_pq: the codebook (encode) and the query-side ADC LUT (scan)
+    both ride broadcast joins over one-row constants — the corpus is
+    never shuffled to meet them — and nothing falls back to
+    row-at-a-time Python."""
+    plan = plan_of(spark, sf_dir, "q_sim_pq")
+    tree = plan.split("\n\n")[0]
+    assert tree.count("BroadcastNestedLoopJoin") >= 2
+    assert "SortMergeJoin" not in tree
+    assert "ShuffledHashJoin" not in tree
+    assert "BatchEvalPython" not in plan
+
+
 def test_jaccard_cap_is_broadcast_anti_join(spark, sf_dir, monkeypatch):
     """q_jaccard_neighbors: the max_degree hub exclusion must be a
     BROADCAST anti join (the hub set is <= 2m/cap nodes by
