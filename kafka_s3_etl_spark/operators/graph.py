@@ -53,7 +53,11 @@ def symmetrize_pairs(
     filtered HERE when loops are enabled — a self-pair would emit four
     identical (x, x) rows, which a multiset consumer would read as four
     votes (ADVICE r14: enforce the invariant in the helper, not by
-    caller discipline).
+    caller discipline). A consequence: a node that appears ONLY in
+    ``(x, x)`` input pairs disappears from the edge set — not even its
+    self-loop is emitted. Callers that must keep every node (component
+    labels, vote loops over a node table) have to take their node set
+    from the node table, not from these edges.
     """
     if self_loops:
         pairs = pairs.filter(F.col(a) != F.col(b))

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kafka_s3_etl_spark.sources.tables import local_frame
+
 # Plane/table counts trade bucket size against recall: P planes cut the
 # corpus into 2^P buckets per table (candidate cost ~N/2^P per query);
 # T tables OR-amplify recall to 1-(1-c^P)^T where c = 1 - theta/pi.
@@ -142,7 +144,10 @@ def _sign_table(spark, tables: int, planes: int, dim: int) -> DataFrame:
     build time and blows up analysis/codegen (measured: the whole ANN
     query became data-independent ~10s of pure driver overhead, at
     sf0.001 and sf0.1 alike). An 8-row broadcast costs none of that at
-    any corpus size.
+    any corpus size — as long as the table is a ``local_frame``
+    (``LocalTableScan``: one JVM task to broadcast). A
+    ``createDataFrame(list)`` table is a Python RDD: every execution
+    runs ``defaultParallelism`` Python tasks to unpickle it.
     """
     signs = _plane_signs(tables, planes, dim)
     rows = [
@@ -151,7 +156,7 @@ def _sign_table(spark, tables: int, planes: int, dim: int) -> DataFrame:
     schema = "table_id int, " + ", ".join(
         f"s{p} array<double>" for p in range(planes)
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _bucket_bits(emb: Column, planes: int = ANN_PLANES) -> Column:
@@ -438,8 +443,10 @@ def pca_project(
     broadcast row (never thousands of literals — the LSH lesson), and
     the projection is a map-only JVM expression: proj[i] =
     dot(embedding - mean, comp[i]) via nested zip_with/aggregate. No
-    shuffle, no Python on the corpus path, one scan; at 100 TB this is
-    embarrassingly parallel and the fit cost is unchanged.
+    shuffle, one scan, and no Python at execution: the basis row is a
+    ``local_frame`` (``LocalTableScan``), not a pickled Python RDD. At
+    100 TB this is embarrassingly parallel and the fit cost is
+    unchanged.
 
     Returns (vec_id, proj array<double> length k).
     """
@@ -447,8 +454,8 @@ def pca_project(
     sample = _fit_sample(embeddings, fit_cap, "pca_project")
     k = min(k, len(sample[0]), len(sample))
     mean, comps = _pca_fit_numpy(sample, k)
-    basis = spark.createDataFrame(
-        [(mean, comps)], "mu array<double>, comps array<array<double>>"
+    basis = local_frame(
+        spark, [(mean, comps)], "mu array<double>, comps array<array<double>>"
     )
     # centered is re-inlined into each component's dot by CollapseProject
     # (HOFs get no CSE) — k * d extra subtractions per row, accepted:
@@ -509,7 +516,9 @@ def _book_row(spark, cent=None, cb=None) -> DataFrame:
     and code c. A missing book leaves its column out. Broadcast-crossed
     onto a frame, every row sees the whole matrix as DATA — the
     ``_sign_table`` argument against plan literals — so encode and LUT
-    are per-row array expressions with no fan-out, window or pivot."""
+    are per-row array expressions with no fan-out, window or pivot.
+    The row is a ``local_frame``: the broadcast is fed by a
+    ``LocalTableScan`` and no Python worker starts to build it."""
     cols, vals = [], []
     if cent is not None:
         cols.append("cent array<array<double>>")
@@ -517,7 +526,7 @@ def _book_row(spark, cent=None, cb=None) -> DataFrame:
     if cb is not None:
         cols.append("cb array<array<array<double>>>")
         vals.append(cb)
-    return spark.createDataFrame([tuple(vals)], ", ".join(cols))
+    return local_frame(spark, [tuple(vals)], ", ".join(cols))
 
 
 def _pinned_consts(
@@ -999,7 +1008,7 @@ def random_projection(
     schema = "one int, " + ", ".join(
         f"s{p} array<double>" for p in range(out_dim)
     )
-    mat = spark.createDataFrame([row], schema)
+    mat = local_frame(spark, [row], schema)
     comps = [
         (
             F.aggregate(
@@ -1048,8 +1057,10 @@ def ann_lsh_multiprobe_topk(
         "table_id",
         _bucket_bits(F.col("embedding"), planes).alias("bucket"),
     )
-    flips = embeddings.sparkSession.createDataFrame(
-        [(0,)] + [(1 << p,) for p in range(planes)], "flip long"
+    flips = local_frame(
+        embeddings.sparkSession,
+        [(0,)] + [(1 << p,) for p in range(planes)],
+        "flip long",
     )
     queries = (
         bucketed.filter(F.col("vec_id") < n_queries)

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_s3_etl_spark.plans.registry import register
-from kafka_s3_etl_spark.sources.tables import load_table
+from kafka_s3_etl_spark.sources.tables import load_table, local_frame
 
 _LI_CENTS = "CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
 _O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
@@ -501,7 +501,8 @@ def q_kmeans_kstep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_members"),
         F.sum("dist").cast("bigint").alias("inertia"),
     )
-    check = spark.createDataFrame(
+    check = local_frame(
+        spark,
         [
             (cid, sum(c * (i + 1) for i, c in enumerate(vec)))
             for cid, vec in sorted(centroids.items())

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_s3_etl_spark.plans.registry import register
-from kafka_s3_etl_spark.sources.tables import load_table
+from kafka_s3_etl_spark.sources.tables import load_table, local_frame
 
 _VC = "CAST(ROUND(value * 100) AS BIGINT)"
 _OC = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
@@ -430,7 +430,8 @@ def markov_stationary(
             break
         pi = nxt
     spark = events.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(t, float(pi[idx[t]])) for t in types],
         "event_type string, stationary_prob double",
     )

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_s3_etl_spark.plans.registry import register
-from kafka_s3_etl_spark.sources.tables import load_table
+from kafka_s3_etl_spark.sources.tables import load_table, local_frame
 
 # 2^40: the threshold scale. h is 5 hex chars = 20 bits, t_l is
 # floor(sqrt(ratio) * 2^20) = floor(sqrt(ratio * 2^40)).
@@ -1189,7 +1189,7 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ideal = graded.withColumn("irk", F.row_number().over(wi))
     w_rows = [(i + 1, wt) for i, wt in enumerate(_DCG_W)]
     wdf = F.broadcast(
-        scored.sparkSession.createDataFrame(w_rows, "pos int, wt bigint")
+        local_frame(scored.sparkSession, w_rows, "pos int, wt bigint")
     )
     dcg = (
         graded.join(wdf, graded.rk == wdf.pos)

@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_s3_etl_spark.plans.registry import register
-from kafka_s3_etl_spark.sources.tables import load_table
+from kafka_s3_etl_spark.sources.tables import load_table, local_frame
 
 _O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
 _LI_CENTS = "CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
@@ -230,6 +230,10 @@ _TIER_VALUES = ", ".join(f"('{t}', '{x}')" for t, x in _TYPE_TIERS)
 )
 def x_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact = spark.read.parquet(_partitioned_events(spark, sf_dir))
+    # The one createDataFrame(list) left in the package (named in
+    # tests/test_local_frame.py): a local_frame dim is a LocalRelation,
+    # the optimizer folds the tier filter into it, and then no
+    # dynamicpruningexpression is planned on the fact scan.
     dim = spark.createDataFrame(
         _TYPE_TIERS, "event_type string, tier string"
     ).filter(F.col("tier") == "paid")
@@ -358,7 +362,8 @@ def q_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would be writing its actual output here)
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(m["n_rows"], m["total_cents"], m["n_open"])],
         "n_rows bigint, total_cents bigint, n_open bigint",
     )

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kafka_s3_etl_spark.plans.registry import register
-from kafka_s3_etl_spark.sources.tables import load_table
+from kafka_s3_etl_spark.sources.tables import load_table, local_frame
 
 # Collocation support floor, RELATIVE to corpus size: keep pairs with
 # c_xy >= n_pairs / _PAIR_FLOOR_DENOM (0.05% of all adjacent pairs).
@@ -1083,9 +1083,7 @@ def q_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = bucketed_global_row_number(vocab, "c", "token", shift=0)
     tot = vocab.agg(F.sum("c").cast("bigint").alias("t"))
-    ks = spark.createDataFrame(
-        [(k,) for k in _COVERAGE_KS], "k bigint"
-    )
+    ks = local_frame(spark, [(k,) for k in _COVERAGE_KS], "k bigint")
     return (
         ranked.crossJoin(F.broadcast(ks))
         .crossJoin(F.broadcast(tot))

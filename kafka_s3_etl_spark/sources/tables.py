@@ -3,6 +3,9 @@
 Explicit schemas keep the scan single-pass; Catalyst handles column
 pruning + predicate pushdown into the parquet reader, which is the
 scale path for 100 TB (only the referenced columns/row-groups are read).
+
+``local_frame`` is the package's one way to build a small driver-side
+table (codebooks, weight tables, metric rows).
 """
 
 from __future__ import annotations
@@ -105,6 +108,33 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
         return spark.read.schema(EVENTS_LOADED_SCHEMA).parquet(path)
     return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(path)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A small driver-side table (codebooks, weight tables, metric rows)
+    as a JVM ``LocalRelation``: it plans as ``LocalTableScan``, a
+    collect of it runs no Spark job, and a broadcast of it is one JVM
+    task.
+
+    ``spark.createDataFrame(list_of_tuples)`` is a Python RDD instead:
+    ``sc.parallelize`` pickles the rows, so every execution of the
+    frame runs a stage of ``defaultParallelism`` Python tasks, and
+    those fork Python workers. A ``pyarrow.Table`` goes down PySpark's
+    Arrow path whatever ``spark.sql.execution.arrow.pyspark.enabled``
+    says, and that path builds a local relation. Doubles travel as IEEE
+    bits, so values are the ones the list form delivered.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = T.StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = [
+        pa.array([r[i] for r in rows], type=field.type)
+        for i, field in enumerate(arrow_schema)
+    ]
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

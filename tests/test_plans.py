@@ -1266,7 +1266,9 @@ def test_pinned_ann_twins_broadcast_constants(spark, sf_dir):
     """Every IVF/PQ entry, fitted or pinned: the centroid/codebook row
     is broadcast (a fixed-size constant at any corpus scale) and there
     is no Python anywhere in the plan — encode, LUT and ADC are pure
-    JVM expressions."""
+    JVM expressions, and the codebook row itself is a LocalTableScan
+    feeding the BroadcastExchange, not a pickled Python RDD (which
+    plans as ``Scan ExistingRDD`` and runs a Python task per slot)."""
     for name in (
         "q_sim_ivf",
         "q_sim_pq",
@@ -1282,6 +1284,10 @@ def test_pinned_ann_twins_broadcast_constants(spark, sf_dir):
         assert "BroadcastExchange" in plan, name
         assert "BatchEvalPython" not in plan, name
         assert "MapInPandas" not in plan, name
+        assert "ExistingRDD" not in plan, name
+        assert re.search(
+            r"BroadcastExchange \(\d+\)\n[ :]*\+- LocalTableScan \(\d+\)", plan
+        ), name
 
 
 @pytest.mark.parametrize(
