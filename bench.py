@@ -487,27 +487,12 @@ def _warm_streaming(spark) -> None:
     (state-store providers, streaming codegen paths, checkpoint IO) is
     not billed to the first streaming headline query — measured as a
     flapping ~0.6s tripwire false-positive on s_kafka_to_s3."""
-    import tempfile
-    import uuid
+    from kafka_s3_etl_spark.streaming.runner import run_stream, scratch_dir
 
-    from kafka_s3_etl_spark.streaming.runner import scratch_dir
-
-    src = tempfile.mkdtemp(prefix="bench_warm_src_")
+    src = scratch_dir("warm_src")
     spark.range(100).coalesce(1).write.mode("overwrite").parquet(src)
-    name = f"warm_{uuid.uuid4().hex[:8]}"
-    q = (
-        spark.readStream.schema("id long")
-        .parquet(src)
-        .groupBy("id")
-        .count()
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch_dir("warm_ckpt"))
-        .start()
-    )
-    q.awaitTermination(60)
+    warm = spark.readStream.schema("id long").parquet(src).groupBy("id").count()
+    run_stream(warm, output_mode="complete", timeout_sec=60)
 
 
 def _artifact_queries(

@@ -903,10 +903,7 @@ def s_s3_autoloader(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_s3_client,
         register_s3jsonl_source,
     )
-    from kafka_s3_etl_spark.streaming.runner import (
-        _pinned_stream_partitions,
-        scratch_dir,
-    )
+    from kafka_s3_etl_spark.streaming.runner import run_stream
 
     ensure_workers_can_import(spark)
     register_s3jsonl_source(spark)
@@ -943,23 +940,9 @@ def s_s3_autoloader(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("prefix", run_prefix)
         .load()
     )
-    name = f"s3auto_{uuid.uuid4().hex[:10]}"
-    ckpt = scratch_dir("s3auto_ckpt")
-    with _pinned_stream_partitions(stream):
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-    try:
-        q.processAllAvailable()  # drains wave 1 only
-        put_wave(1)  # new objects arrive AFTER the first drain
-        q.processAllAvailable()  # incremental pickup of wave 2
-    finally:
-        q.stop()
-    return spark.table(name)
+    # wave 1 drains first; wave 2's objects arrive after that drain and
+    # are picked up incrementally
+    return run_stream(stream, deliveries=[lambda: put_wave(1)])
 
 
 @register(
@@ -1044,11 +1027,7 @@ def s_s3_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_s3_client,
         register_s3jsonl_source,
     )
-    from kafka_s3_etl_spark.streaming.runner import (
-        _pinned_stream_partitions,
-        scratch_dir,
-        stream_table,
-    )
+    from kafka_s3_etl_spark.streaming.runner import run_stream, stream_table
 
     ensure_workers_can_import(spark)
     register_s3jsonl_source(spark)
@@ -1064,19 +1043,12 @@ def s_s3_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
-    ckpt = scratch_dir("s3sink_ckpt")
-    with _pinned_stream_partitions(stream):
-        q = (
-            stream.writeStream.format("graft_s3jsonl_stream_sink")
-            .outputMode("append")
-            .option("endpoint", endpoint)
-            .option("bucket", bucket)
-            .option("prefix", prefix)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination(120)
+    run_stream(
+        stream.writeStream.format("graft_s3jsonl_stream_sink")
+        .option("endpoint", endpoint)
+        .option("bucket", bucket)
+        .option("prefix", prefix)
+    )
     return (
         spark.read.format("graft_s3jsonl")
         .option("endpoint", endpoint)

@@ -34,7 +34,7 @@ Conf discipline: optimizer confs are pinned only around a forced
 in-builder execution/optimization and restored exactly (the
 x_bloom_filter_join pattern) — later catalog queries see a vanilla
 session; the captured plan text lands in LAST_SKEW_PLAN /
-LAST_CBO_PLAN for the plan tests (the streaming LAST_PROGRESS
+LAST_CBO_PLAN for the plan tests (the streaming runner.LAST_RUN
 precedent).
 """
 
@@ -536,7 +536,7 @@ _STATESTORE_CKPT: dict[str, str] = {}
         "the operator's keyed state is read BACK from the checkpoint "
         "as a batch DataFrame — the state-debugging surface that "
         "completes the streaming observability story beside the "
-        "LAST_PROGRESS metrics (what exactly does my 100 TB stateful "
+        "runner.LAST_RUN progress (what exactly does my 100 TB stateful "
         "query hold?). The read state must equal the batch aggregation "
         "of the source table restated — that IS the oracle."
     ),
@@ -548,38 +548,19 @@ _STATESTORE_CKPT: dict[str, str] = {}
     """,
 )
 def x_statestore_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_s3_etl_spark.streaming.runner import (
-        _pinned_stream_partitions,
-        scratch_dir,
-        stream_table,
-    )
+    from kafka_s3_etl_spark.streaming import runner
 
     if sf_dir not in _STATESTORE_CKPT:
-        import uuid
-
         agg = (
-            stream_table(spark, sf_dir, "events")
+            runner.stream_table(spark, sf_dir, "events")
             .groupBy("event_type")
             .agg(
                 F.count("*").alias("n_events"),
                 F.sum(F.expr(_E_CENTS)).alias("total_cents"),
             )
         )
-        ckpt = scratch_dir("ckpt_statestore")
-        name = f"sss_{uuid.uuid4().hex[:10]}"
-        with _pinned_stream_partitions(agg):
-            q = (
-                agg.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError("statestore build stream still running")
-        _STATESTORE_CKPT[sf_dir] = ckpt
+        runner.run_stream(agg, output_mode="update")
+        _STATESTORE_CKPT[sf_dir] = runner.LAST_RUN.checkpoint
     state = spark.read.format("statestore").load(_STATESTORE_CKPT[sf_dir])
     # the value struct carries the aggregation BUFFER with internal
     # field names (count/sum for this plan — probed; Spark names the

@@ -146,8 +146,7 @@ def s_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from kafka_s3_etl_spark.streaming.runner import (
         _SRC_CACHE,
-        _await_or_fail,
-        _pinned_stream_partitions,
+        run_stream,
         scratch_dir,
     )
 
@@ -191,14 +190,7 @@ def s_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_cdc_batch(batch_df.select(cols), table, "o_orderkey")
 
-    with _pinned_stream_partitions(changes):
-        q = (
-            changes.writeStream.foreachBatch(apply_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", scratch_dir("ckpt"))
-            .start()
-        )
-    _await_or_fail(q, 120)
+    run_stream(changes.writeStream.foreachBatch(apply_batch))
     return read_partitioned_target(spark, table, cols)
 
 

@@ -246,13 +246,10 @@ def q_tpch_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_s3_etl_spark.streaming.jobs import chained_window_counts
-    from kafka_s3_etl_spark.streaming.runner import (
-        run_available_now,
-        stream_table,
-    )
+    from kafka_s3_etl_spark.streaming.runner import run_stream, stream_table
 
     agg = chained_window_counts(stream_table(spark, sf_dir, "events"))
-    return run_available_now(agg, output_mode="append")
+    return run_stream(agg)
 
 
 @register(

@@ -197,17 +197,12 @@ def admission_controlled_counts(
     spark: SparkSession,
     sf_dir: str,
     files_per_trigger: int = 2,
-    progress_sink: list | None = None,
 ) -> DataFrame:
     """Drain an events backlog of 6 parquet files under
     maxFilesPerTrigger admission control and return the per-type
-    rollup. With ``progress_sink`` a list, every micro-batch progress
-    dict is appended after the drain so tests can pin the per-batch
-    input caps (numInputRows) the limit enforces."""
-    from kafka_s3_etl_spark.streaming.runner import (
-        run_available_now,
-        scratch_dir,
-    )
+    rollup. The run's progress (``runner.LAST_RUN``) carries the
+    per-batch input caps (numInputRows) the limit enforces."""
+    from kafka_s3_etl_spark.streaming.runner import run_stream, scratch_dir
 
     if sf_dir not in _ADMISSION_SRC:
         src = scratch_dir("admission_src")
@@ -229,9 +224,7 @@ def admission_controlled_counts(
         F.count("*").alias("n"),
         F.sum("event_id").alias("sum_id"),
     )
-    return run_available_now(
-        agg, output_mode="complete", progress_sink=progress_sink
-    )
+    return run_stream(agg, output_mode="complete")
 
 
 @register(

@@ -229,49 +229,30 @@ def x_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from kafka_s3_etl_spark.shiplib import ensure_workers_can_import
     from kafka_s3_etl_spark.sources.pyds import register_python_sources
-    from kafka_s3_etl_spark.streaming.runner import (
-        _pinned_stream_partitions,
-        scratch_dir,
-    )
+    from kafka_s3_etl_spark.streaming.runner import run_stream, scratch_dir
 
     ensure_workers_can_import(spark)
     register_python_sources(spark)
-    ckpt = scratch_dir("pyds_ckpt")
     stream = (
         spark.readStream.format("graft_range")
         .option("n", 60_000)
         .option("step", 20_000)
         .option("partitions", 8)
-        # high-water-mark file beside the checkpoint: latestOffset can
-        # never regress across a restart, whatever call Spark makes
-        # first (see _RangeStreamReader docstring)
-        .option("cursor_path", f"{ckpt}/graft_range.cursor")
+        # per-run high-water-mark file: latestOffset can never regress
+        # across a restart, whatever call Spark makes first (see
+        # _RangeStreamReader docstring)
+        .option("cursor_path", f"{scratch_dir('pyds_cursor')}/graft_range.cursor")
         .load()
     )
     agg = stream.groupBy("bucket").agg(
         F.count("*").alias("n"), F.sum("id").alias("sum_id")
     )
-    name = f"pyds_{uuid.uuid4().hex[:10]}"
-    with _pinned_stream_partitions(agg):
-        # custom Python stream sources don't implement availableNow;
-        # drain with processAllAvailable (latestOffset stops advancing
-        # once the log is exhausted, so this terminates)
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    # custom Python stream sources don't implement availableNow: run
+    # live and drain once (latestOffset stops advancing once the log is
+    # exhausted, so the drain terminates)
+    return run_stream(agg, output_mode="complete", deliveries=())
 
 
 @register(
@@ -336,10 +317,7 @@ def x_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_s3_etl_spark.shiplib import ensure_workers_can_import
     from kafka_s3_etl_spark.sources.pyds import register_python_sources
-    from kafka_s3_etl_spark.streaming.runner import (
-        _pinned_stream_partitions,
-        scratch_dir,
-    )
+    from kafka_s3_etl_spark.streaming.runner import run_stream, scratch_dir
 
     ensure_workers_can_import(spark)
     register_python_sources(spark)
@@ -351,17 +329,9 @@ def s_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     out = scratch_dir("jsonl_stream_sink")
-    with _pinned_stream_partitions(stream):
-        q = (
-            stream.writeStream.format("graft_jsonl")
-            .option("path", out)
-            .option("checkpointLocation", scratch_dir("pyds_sink_ckpt"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_stream(
+        stream.writeStream.format("graft_jsonl").option("path", out), deliveries=()
+    )
     return (
         spark.read.schema("id bigint, bucket int, val double")
         .option("pathGlobFilter", "part-*.jsonl")

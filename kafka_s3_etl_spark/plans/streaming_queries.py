@@ -46,8 +46,8 @@ from kafka_s3_etl_spark.streaming.jobs import (
 )
 from kafka_s3_etl_spark.streaming.runner import (
     kafka_wire_stream,
-    run_available_now,
-    run_to_parquet,
+    run_stream,
+    scratch_dir,
     stream_table,
 )
 
@@ -70,7 +70,9 @@ def s_kafka_to_s3(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire = kafka_wire_stream(spark, sf_dir, "orders")
     decoded = decode_orders_wire(wire)
     filtered = flagship_filter(decoded, FLAGSHIP_STATUS, FLAGSHIP_THRESHOLD)
-    return run_to_parquet(filtered)
+    out = scratch_dir("sink")
+    run_stream(filtered.writeStream.format("parquet").option("path", out))
+    return spark.read.schema(filtered.schema).parquet(out)
 
 
 @register(
@@ -90,7 +92,7 @@ def s_kafka_to_s3(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = tumbling_counts(stream_table(spark, sf_dir, "events"))
-    return run_available_now(agg, output_mode="complete")
+    return run_stream(agg, output_mode="complete")
 
 
 @register(
@@ -109,7 +111,7 @@ def s_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = sliding_counts(stream_table(spark, sf_dir, "events"))
-    return run_available_now(agg, output_mode="complete")
+    return run_stream(agg, output_mode="complete")
 
 
 @register(
@@ -148,7 +150,7 @@ def s_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s_window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = session_counts(stream_table(spark, sf_dir, "events"))
-    return run_available_now(agg, output_mode="complete")
+    return run_stream(agg, output_mode="complete")
 
 
 @register(
@@ -163,7 +165,7 @@ def s_window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup = dedup_within_watermark(stream_table(spark, sf_dir, "events"))
-    return run_available_now(dedup.select("user_id", "event_type"), output_mode="append")
+    return run_stream(dedup.select("user_id", "event_type"), output_mode="append")
 
 
 @register(
@@ -186,7 +188,7 @@ def s_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     left = stream_table(spark, sf_dir, "events")
     right = stream_table(spark, sf_dir, "events")
-    return run_available_now(stream_stream_followups(left, right))
+    return run_stream(stream_stream_followups(left, right))
 
 
 @register(
@@ -206,7 +208,7 @@ def s_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_s3_etl_spark.streaming.stateful import user_running_counts
 
-    emitted = run_available_now(
+    emitted = run_stream(
         user_running_counts(stream_table(spark, sf_dir, "events")),
         output_mode="update",
     )
@@ -401,12 +403,6 @@ def s_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s_foreach_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_s3_etl_spark.streaming.runner import (
-        _await_or_fail,
-        _pinned_stream_partitions,
-        scratch_dir,
-    )
-
     decoded = decode_orders_wire(kafka_wire_stream(spark, sf_dir, "orders"))
     out = scratch_dir("foreach_rollup")
 
@@ -427,14 +423,7 @@ def s_foreach_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
 
-    with _pinned_stream_partitions(decoded):
-        q = (
-            decoded.writeStream.foreachBatch(write_partial)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", scratch_dir("ckpt"))
-            .start()
-        )
-    _await_or_fail(q, 120)
+    run_stream(decoded.writeStream.foreachBatch(write_partial))
     partials = spark.read.schema(
         "o_orderstatus string, n bigint, s_cents bigint"
     ).parquet(out)
@@ -462,7 +451,7 @@ def s_kafka_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_s3_etl_spark.schemas import TESTDATA_SCHEMAS
     from kafka_s3_etl_spark.sources.kafka import split_malformed, to_kafka_value
     from kafka_s3_etl_spark.sources.tables import load_table
-    from kafka_s3_etl_spark.streaming.runner import _SRC_CACHE, scratch_dir
+    from kafka_s3_etl_spark.streaming.runner import _SRC_CACHE
 
     key = (sf_dir, "wire_orders_dirty")
     if key not in _SRC_CACHE:
@@ -476,7 +465,7 @@ def s_kafka_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.text(_SRC_CACHE[key])
     good, _bad = split_malformed(stream, TESTDATA_SCHEMAS["orders"])
     decoded = good.withColumn("o_orderdate", F.col("o_orderdate").cast("timestamp"))
-    return run_available_now(decoded)
+    return run_stream(decoded)
 
 
 @register(
@@ -508,7 +497,7 @@ def s_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = ev.join(F.broadcast(dim), "user_id").select(
         "event_id", "user_id", "event_type", "value", "c_mktsegment", "c_nationkey"
     )
-    return run_available_now(joined)
+    return run_stream(joined)
 
 
 @register(
@@ -577,7 +566,7 @@ def s_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "columns only. Unmatched purchases are evicted WITHOUT "
         "emission once the sentinel-advanced watermark proves no "
         "follow-up can arrive; the eviction is asserted from the state "
-        "metrics (outer_join.LAST_SEMI_PROGRESS — join state drains to "
+        "metrics (runner.LAST_RUN progress — join state drains to "
         "the 2-row sentinel residue). Equals the batch EXISTS "
         "(streaming/outer_join.py)."
     ),
@@ -635,7 +624,7 @@ def s_stream_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("n"))
         .select(F.col("window.start").alias("ws"), "src", "n")
     )
-    return run_available_now(agg, output_mode="complete")
+    return run_stream(agg, output_mode="complete")
 
 
 # ---------------------------------------------------- round 10, batch 52
@@ -666,10 +655,6 @@ _JSONL_STREAM_SRC: dict[str, str] = {}
 def s_jsonl_autoload(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_s3_etl_spark.plans.etl import _JSONL_TS_FMT
     from kafka_s3_etl_spark.sources.tables import load_table
-    from kafka_s3_etl_spark.streaming.runner import (
-        run_available_now,
-        scratch_dir,
-    )
 
     events = load_table(spark, sf_dir, "events")
     if sf_dir not in _JSONL_STREAM_SRC:
@@ -687,7 +672,7 @@ def s_jsonl_autoload(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_type") != "view")
         .select("event_id", "ts", "user_id", "event_type", "value")
     )
-    return run_available_now(stream)
+    return run_stream(stream)
 
 
 @register(
@@ -712,12 +697,6 @@ def s_jsonl_autoload(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s_jsonl_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_s3_etl_spark.plans.etl import _JSONL_TS_FMT
-    from kafka_s3_etl_spark.streaming.runner import (
-        _await_or_fail,
-        _pinned_stream_partitions,
-        scratch_dir,
-        stream_table,
-    )
 
     stream = (
         stream_table(spark, sf_dir, "events")
@@ -725,17 +704,11 @@ def s_jsonl_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "ts", "user_id", "event_type", "value")
     )
     out = scratch_dir("jsonl_sink_events")
-    with _pinned_stream_partitions(stream):
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("json")
-            .option("path", out)
-            .option("timestampFormat", _JSONL_TS_FMT)
-            .option("checkpointLocation", scratch_dir("ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_or_fail(q, 120)
+    run_stream(
+        stream.writeStream.format("json")
+        .option("path", out)
+        .option("timestampFormat", _JSONL_TS_FMT)
+    )
     return (
         spark.read.schema(stream.schema)
         .option("timestampFormat", _JSONL_TS_FMT)
@@ -772,23 +745,11 @@ def s_jsonl_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s_window_tumbling_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_s3_etl_spark.streaming import session_close
     from kafka_s3_etl_spark.streaming.tws import pinned_rocksdb_state_store
 
     agg = tumbling_counts(stream_table(spark, sf_dir, "events"))
-    progress: list = []
     with pinned_rocksdb_state_store(agg):
-        out = run_available_now(
-            agg, output_mode="complete", progress_sink=progress
-        )
-    # Expose the final progress dict the way session_close does, so the
-    # provider-loaded assertion reads one well-known place.  Assign
-    # UNCONDITIONALLY (None when recentProgress came back empty) —
-    # otherwise a stale LAST_PROGRESS from a previously-run entry would
-    # survive and the rocksdb metric test could assert against another
-    # query's metrics (test-order-dependent false pass).
-    session_close.LAST_PROGRESS = progress[-1] if progress else None
-    return out
+        return run_stream(agg, output_mode="complete")
 
 
 # ---------------------------------------------------- round 11, batch 69
@@ -805,26 +766,17 @@ def s_window_tumbling_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
         "droppable state is the one that actually grows unbounded-ish "
         "between watermark advances at 100 TB event rates; keyed "
         "state on local disk survives state > heap). Provider load is "
-        "asserted from the captured final progress metrics, the "
-        "session_close.LAST_PROGRESS pattern (reset unconditionally "
-        "per the r10 ADVICE fix)."
+        "asserted from the run's final progress metrics "
+        "(runner.LAST_RUN)."
     ),
     oracle="SELECT DISTINCT user_id, event_type FROM events",
 )
 def s_dedup_watermark_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_s3_etl_spark.streaming import session_close
     from kafka_s3_etl_spark.streaming.tws import pinned_rocksdb_state_store
 
     dedup = dedup_within_watermark(stream_table(spark, sf_dir, "events"))
-    progress: list = []
     with pinned_rocksdb_state_store(dedup):
-        out = run_available_now(
-            dedup.select("user_id", "event_type"),
-            output_mode="append",
-            progress_sink=progress,
-        )
-    session_close.LAST_PROGRESS = progress[-1] if progress else None
-    return out
+        return run_stream(dedup.select("user_id", "event_type"))
 
 
 # ---------------------------------------------------- round 12, batch 82
@@ -853,16 +805,8 @@ def s_dedup_watermark_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s_window_sliding_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_s3_etl_spark.streaming import session_close
     from kafka_s3_etl_spark.streaming.tws import pinned_rocksdb_state_store
 
     agg = sliding_counts(stream_table(spark, sf_dir, "events"))
-    progress: list = []
     with pinned_rocksdb_state_store(agg):
-        out = run_available_now(
-            agg, output_mode="complete", progress_sink=progress
-        )
-    # the session_close.LAST_PROGRESS contract (assign unconditionally
-    # — see s_window_tumbling_rocksdb)
-    session_close.LAST_PROGRESS = progress[-1] if progress else None
-    return out
+        return run_stream(agg, output_mode="complete")

@@ -152,7 +152,9 @@ def write_kafka_stream(
     topic: str,
     checkpoint_location: str,
 ) -> DataStreamWriter:
-    """Streaming Kafka sink builder (caller invokes .start())."""
+    """Streaming Kafka sink builder: returns the writer unstarted. Run it
+    with ``streaming.runner.run_stream``, whose own checkpoint replaces
+    ``checkpoint_location``."""
     return (
         to_kafka_value(df)
         .writeStream.format("kafka")

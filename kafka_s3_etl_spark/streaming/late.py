@@ -1,22 +1,24 @@
 """Late-data discipline demo (SURVEY.md section 2b s_late_data).
 
-Builds a two-batch file source from the events table:
+A live stream over the events table in two deliveries:
 
-* batch A — everything from ``CUTOFF`` onward (arrives first),
-* batch B — everything before ``CUTOFF`` (arrives second: "late").
+* delivery 1 — everything from ``CUTOFF`` onward (arrives first),
+* delivery 2 — everything before ``CUTOFF`` (arrives second: "late").
 
-With a 10-minute watermark and append output mode, batch A advances the
-watermark to max(ts)-10min; every batch-B row is older than that, so
-the engine drops them and no pre-cutoff window ever appears in the
-output. At scale this is the knob that bounds state: without the
+With a 10-minute watermark and append output mode, delivery 1 advances
+the watermark to max(ts)-10min; every delivery-2 row is older than
+that, so the engine drops them and no pre-cutoff window ever appears in
+the output. At scale this is the knob that bounds state: without the
 watermark, a 100 TB stream would accumulate window state forever.
+
+Trigger.AvailableNow does NOT apply the advanced watermark to later
+micro-batches of the same run (observed: numRowsDroppedByWatermark=0
+and late windows emitted), hence the live query with the late file
+delivered only after the on-time batch has committed — the arrival
+order a real Kafka topic would produce.
 """
 
 from __future__ import annotations
-
-import glob
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,67 +26,20 @@ from pyspark.sql import functions as F
 from kafka_s3_etl_spark.sources.tables import load_table
 from kafka_s3_etl_spark.streaming.jobs import tumbling_counts
 from kafka_s3_etl_spark.streaming.runner import (
-    _pinned_stream_partitions,
-    scratch_dir,
+    _single_part,
+    run_stream,
+    staged_source,
 )
 
 CUTOFF = "2024-01-02 00:00:00"
 
-# The on-time/late halves are pure functions of the immutable testdata;
-# write them once per sf_dir, not once per call.
-_HALF_CACHE: dict[str, tuple[str, str]] = {}
-
-
-def _copy_part(src_dir: str, dest: str, mtime: float) -> None:
-    part = glob.glob(os.path.join(src_dir, "part-*.parquet"))[0]
-    shutil.copy(part, dest)
-    os.utime(dest, (mtime, mtime))
-
 
 def late_data_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOTE: Trigger.AvailableNow turned out NOT to apply the advanced
-    watermark to later micro-batches of the same run (observed:
-    numRowsDroppedByWatermark=0 and late windows emitted). The demo
-    therefore drives a live micro-batch stream and delivers the late
-    file only after the on-time batch has committed — the arrival order
-    a real Kafka topic would produce."""
-    import uuid
-
     ev = load_table(spark, sf_dir, "events")
-    if sf_dir not in _HALF_CACHE:
-        a_dir, b_dir = scratch_dir("late_a"), scratch_dir("late_b")
-        ev.filter(F.col("ts") >= CUTOFF).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(a_dir)
-        ev.filter(F.col("ts") < CUTOFF).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(b_dir)
-        _HALF_CACHE[sf_dir] = (a_dir, b_dir)
-    a_dir, b_dir = _HALF_CACHE[sf_dir]
-
-    src_dir = scratch_dir("late_src")
-    now = os.path.getmtime(src_dir)
-    _copy_part(a_dir, os.path.join(src_dir, "a.parquet"), now - 100)
-
-    stream = spark.readStream.schema(ev.schema).parquet(src_dir)
-    name = f"late_{uuid.uuid4().hex[:10]}"
-    agg = tumbling_counts(stream)
-    with _pinned_stream_partitions(agg):
-        # pin state-store partitions at stream start: under a vanilla
-        # 200-shuffle-partition session the stateful agg would otherwise
-        # run 200 state tasks per micro-batch for kilobytes of state
-        # (this query was the round-1 sweep's slowest entry, ~14s).
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", scratch_dir("ckpt"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()  # batch A commits; watermark advances
-        _copy_part(b_dir, os.path.join(src_dir, "b.parquet"), now)
-        q.processAllAvailable()  # batch B: every row older than watermark
-    finally:
-        q.stop()
-    return spark.table(name)
+    on_time = F.col("ts") >= CUTOFF
+    src, deliveries = staged_source(
+        _single_part((sf_dir, "late_on_time"), lambda: ev.filter(on_time)),
+        _single_part((sf_dir, "late_late"), lambda: ev.filter(~on_time)),
+    )
+    stream = spark.readStream.schema(ev.schema).parquet(src)
+    return run_stream(tumbling_counts(stream), deliveries=deliveries)

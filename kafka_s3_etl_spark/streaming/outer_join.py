@@ -1,22 +1,22 @@
-"""Stream-stream OUTER join demos (watermark-driven NULL emission):
-LEFT OUTER and FULL OUTER over the same time-bounded purchase/follow-up
-join.
+"""Stream-stream OUTER and SEMI join demos (watermark-driven emission)
+over the same time-bounded purchase/follow-up join.
 
 The inner half of a time-bounded stream-stream join emits rows as they
 match (batching-invariant); the OUTER halves — "this purchase had no
 follow-up within the hour" and, full-outer only, "this event follows no
 purchase" — can only emit once the watermark proves no match can still
-arrive. That makes outer emission inherently watermark-driven, so the
-demo mirrors streaming/late.py's two-delivery harness:
+arrive, and a SEMI join drops its unmatched purchases at that same
+point. So the demos run live over ``runner.events_then_sentinel``:
 
 * delivery 1 — the real events (both join sides read the same files);
 * delivery 2 — one sentinel row 3 hours past max(ts), which advances
   both sides' watermarks beyond every join window and forces the
-  engine to evict + emit every surviving unmatched left row.
+  engine to evict every surviving unmatched row in the no-data batch
+  that follows.
 
 After the sentinel the result is deterministic and equals the batch
-LEFT JOIN — the DuckDB oracle. The sentinel (negative ids) is filtered
-out of the returned result.
+join — the DuckDB oracle. The sentinel (negative ids) is filtered out
+of the returned result.
 
 State-scale note: both sides are watermarked and the join condition
 bounds event time on both ends, so per-key state is finite — identical
@@ -25,30 +25,10 @@ to s_stream_join; the outer flavor adds only the eviction pass.
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-import time
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_s3_etl_spark.sources.tables import load_table
-from kafka_s3_etl_spark.streaming.runner import (
-    _pinned_stream_partitions,
-    scratch_dir,
-)
-
-# Real events and the watermark-advancing sentinel, written once per
-# sf_dir (immutable testdata).
-_PART_CACHE: dict[str, tuple[str, str]] = {}
-
-
-def _copy_part(src_dir: str, dest: str, mtime: float) -> None:
-    part = glob.glob(os.path.join(src_dir, "part-*.parquet"))[0]
-    shutil.copy(part, dest)
-    os.utime(dest, (mtime, mtime))
+from kafka_s3_etl_spark.streaming.runner import events_then_sentinel, run_stream
 
 
 def _purchase_followups(
@@ -96,121 +76,21 @@ def full_outer_join_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _outer_join_demo(spark, sf_dir, "full_outer")
 
 
-# Final streaming-progress dict of the last semi-join run: the
-# watermark-eviction test asserts engine internals (unmatched left
-# state evicted WITHOUT emission — state rows drop to the sentinel
-# residue) without threading the query handle through the DataFrame
-# contract (the session_close.LAST_PROGRESS pattern).
-LAST_SEMI_PROGRESS: dict | None = None
-
-
 def semi_join_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _outer_join_demo(spark, sf_dir, "left_semi")
 
 
 def _outer_join_demo(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    if sf_dir not in _PART_CACHE:
-        data_dir, sent_dir = scratch_dir("loj_data"), scratch_dir("loj_sent")
-        ev.coalesce(1).write.mode("overwrite").parquet(data_dir)
-        sentinel = ev.agg(
-            F.lit(-1).cast("bigint").alias("event_id"),
-            (F.max("ts") + F.expr("INTERVAL 3 HOURS")).alias("ts"),
-            F.lit(-1).cast("bigint").alias("user_id"),
-            F.lit("purchase").alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit("{}").alias("props"),
-        ).select(*ev.columns)
-        sentinel.coalesce(1).write.mode("overwrite").parquet(sent_dir)
-        _PART_CACHE[sf_dir] = (data_dir, sent_dir)
-    data_dir, sent_dir = _PART_CACHE[sf_dir]
-
-    src_dir = scratch_dir("loj_src")
-    now = os.path.getmtime(src_dir)
-    _copy_part(data_dir, os.path.join(src_dir, "data.parquet"), now - 100)
-
-    left = spark.readStream.schema(ev.schema).parquet(src_dir)
-    right = spark.readStream.schema(ev.schema).parquet(src_dir)
-    joined = _purchase_followups(left, right, how)
-    name = f"loj_{uuid.uuid4().hex[:10]}"
-    with _pinned_stream_partitions(joined):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", scratch_dir("ckpt"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()  # real data commits; watermark advances
-        _copy_part(sent_dir, os.path.join(src_dir, "sentinel.parquet"), now)
-        q.processAllAvailable()  # sentinel pushes watermarks past all windows
-        # Eviction may land in a trailing no-data micro-batch after
-        # processAllAvailable returns. The sentinel watermark clears
-        # EVERY real row in that one batch. Outer flavors: the first
-        # NULL appearing on each outer side means eviction ran to
-        # completion. Semi: matched rows already emitted at match time
-        # (a semi join projects no right columns, so there is no NULL
-        # signal); completion is read off the STATE metrics instead —
-        # join state drains to the sentinel residue (one left purchase
-        # + one right event that stay above the final watermark).
-        # Outer flavors: 50 ms poll cadence (not 500) — the trailing
-        # no-data batch usually commits within a few hundred ms, and
-        # each coarse tick was pure idle wall-clock billed to the
-        # query; both outer-side checks ride ONE aggregate job per
-        # tick instead of two count() jobs. Semi keeps the coarse
-        # 500 ms cadence: its check is q.lastProgress, and the r14 A/B
-        # measured the 20 Hz variant SLOWER (8.2 s vs 6.2 s, 3-rep) —
-        # the progress getter contends with the micro-batch thread.
-        # Deadline-bounded (ADVICE r14): the outer-flavor tick is one
-        # Spark aggregate job, which typically outlasts its 50 ms
-        # sleep, so an iteration cap's worst case would be job-latency
-        # x iterations (minutes), not the intended budget. A monotonic
-        # deadline bounds wall-clock directly, and exhaustion raises
-        # instead of silently returning a possibly-incomplete table.
-        semi = how == "left_semi"
-        deadline = time.monotonic() + 60.0
-        evicted = False
-        while time.monotonic() < deadline:
-            if semi:
-                prog = q.lastProgress
-                ops = (prog or {}).get("stateOperators") or []
-                if ops and ops[0].get("numRowsTotal", 1 << 30) <= 2:
-                    evicted = True
-                    break
-            else:
-                row = (
-                    spark.table(name)
-                    .agg(
-                        F.sum(F.col("b_id").isNull().cast("int")).alias("nb"),
-                        F.sum(F.col("a_id").isNull().cast("int")).alias("na"),
-                    )
-                    .first()
-                )
-                done = (row["nb"] or 0) > 0
-                if how == "full_outer":
-                    done = done and (row["na"] or 0) > 0
-                if done:
-                    evicted = True
-                    break
-            time.sleep(0.5 if semi else 0.05)
-        if not evicted:
-            raise RuntimeError(
-                f"stream_{how}_join: eviction signal never appeared "
-                "within the 60 s completion budget; the result table "
-                "would be incomplete"
-            )
-        if how == "left_semi":
-            global LAST_SEMI_PROGRESS
-            LAST_SEMI_PROGRESS = q.lastProgress
-    finally:
-        q.stop()
+    schema, src, deliveries = events_then_sentinel(spark, sf_dir)
+    left = spark.readStream.schema(schema).parquet(src)
+    right = spark.readStream.schema(schema).parquet(src)
+    out = run_stream(_purchase_followups(left, right, how), deliveries=deliveries)
     if how == "left_semi":
         # Only the sentinel purchase itself could have matched a
         # sentinel follow-up; drop it, keep every real matched purchase.
-        return spark.table(name).filter(F.col("a_id") >= 0)
+        return out.filter(F.col("a_id") >= 0)
     # Drop the sentinel's own rows on BOTH sides, keeping outer NULLs:
     # the -1 left sentinel may emit (-1, NULL), the right copy (NULL, -1).
     keep_a = F.col("a_id").isNull() | (F.col("a_id") >= 0)
     keep_b = F.col("b_id").isNull() | (F.col("b_id") >= 0)
-    return spark.table(name).filter(keep_a & keep_b)
+    return out.filter(keep_a & keep_b)

@@ -1,4 +1,6 @@
-"""Streaming test/driver harness: file sources + availableNow triggers.
+"""The stream runner: the one place a streaming query starts, completes,
+stops and reports (``run_stream``), plus the broker-free stream sources
+the catalog runs it on.
 
 The north-star pipeline is Kafka -> transform -> S3 parquet. In this
 container there is no broker, so streams are driven through the file
@@ -7,15 +9,29 @@ deterministic, broker-free verification of Structured Streaming jobs.
 The transformations are identical DataFrame code either way; only the
 ``format("kafka")`` vs ``format("text"/"parquet")`` source/sink lines
 differ (see sources/kafka.py for the broker-facing builders).
+
+Every scratch directory (checkpoints, sinks, materialized sources)
+lives under one per-process root that is removed at interpreter exit.
 """
 
 from __future__ import annotations
 
+import atexit
+import datetime
+import functools
+import glob
+import json
 import os
+import shutil
 import tempfile
 import uuid
+from collections.abc import Callable, Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import StructType
 
 from kafka_s3_etl_spark.schemas import TESTDATA_SCHEMAS
 from kafka_s3_etl_spark.sources.kafka import to_kafka_value
@@ -25,9 +41,23 @@ from kafka_s3_etl_spark.sources.tables import (
     load_table,
 )
 
+# (root, owning pid): a forked child makes its own root and never
+# removes its parent's.
+_ROOT: tuple[str, int] | None = None
+
+
+def _remove_root(root: str, pid: int) -> None:
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
+
 
 def scratch_dir(prefix: str) -> str:
-    return tempfile.mkdtemp(prefix=f"kafka_s3_etl_spark_{prefix}_")
+    """A fresh directory under this process's scratch root."""
+    global _ROOT
+    if _ROOT is None or _ROOT[1] != os.getpid():
+        _ROOT = (tempfile.mkdtemp(prefix="kafka_s3_etl_spark_"), os.getpid())
+        atexit.register(_remove_root, *_ROOT)
+    return tempfile.mkdtemp(prefix=f"{prefix}_", dir=_ROOT[0])
 
 
 # Materialized stream-source dirs, keyed by (sf_dir, table). The
@@ -94,6 +124,61 @@ def kafka_wire_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame
     return spark.readStream.text(_SRC_CACHE[key]).withColumnRenamed("value", "value")
 
 
+def _single_part(key: tuple[str, str], build: Callable[[], DataFrame]) -> str:
+    """``build()`` written once per ``key`` as a directory holding one
+    parquet part file (the unit a live delivery copies in)."""
+    if key not in _SRC_CACHE:
+        out = scratch_dir(key[1])
+        build().coalesce(1).write.mode("overwrite").parquet(out)
+        _SRC_CACHE[key] = out
+    return _SRC_CACHE[key]
+
+
+def _copy_part(part_dir: str, src_dir: str, mtime: float) -> None:
+    part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
+    dest = os.path.join(src_dir, f"{os.path.basename(part_dir)}.parquet")
+    shutil.copy(part, dest)
+    os.utime(dest, (mtime, mtime))
+
+
+def staged_source(first: str, *later: str) -> tuple[str, list[Callable[[], None]]]:
+    """A fresh file-source directory holding the part file of ``first``,
+    and one ``run_stream`` delivery per ``later`` directory, each
+    copying that directory's part file in with a newer mtime."""
+    src = scratch_dir("live_src")
+    now = os.path.getmtime(src)
+    _copy_part(first, src, now - 100)
+    return src, [functools.partial(_copy_part, d, src, now) for d in later]
+
+
+def events_then_sentinel(
+    spark: SparkSession, sf_dir: str
+) -> tuple[StructType, str, list[Callable[[], None]]]:
+    """The source of the watermark demos, as (events schema, source dir,
+    deliveries): the dir holds the events table, and the one delivery
+    adds a sentinel purchase 3 hours past max(ts). The sentinel moves
+    every watermark past every window, gap and join bound, so the
+    no-data batch after it evicts all remaining state. Its ids are -1;
+    callers filter its rows out."""
+    ev = load_table(spark, sf_dir, "events")
+
+    def sentinel() -> DataFrame:
+        return ev.agg(
+            F.lit(-1).cast("bigint").alias("event_id"),
+            (F.max("ts") + F.expr("INTERVAL 3 HOURS")).alias("ts"),
+            F.lit(-1).cast("bigint").alias("user_id"),
+            F.lit("purchase").alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.lit("{}").alias("props"),
+        ).select(*ev.columns)
+
+    src, deliveries = staged_source(
+        _single_part((sf_dir, "live_events"), lambda: ev),
+        _single_part((sf_dir, "live_sentinel"), sentinel),
+    )
+    return ev.schema, src, deliveries
+
+
 class _pinned_stream_partitions:
     """Temporarily pin spark.sql.shuffle.partitions for a stream start.
 
@@ -103,12 +188,16 @@ class _pinned_stream_partitions:
     kilobytes of state (~13s of pure task overhead per query in the
     driver's harness). Results are partition-count-independent; the conf
     is restored on exit. The count is only read at query start, so the
-    narrow window is safe for sequential harnesses (tests, driver)."""
+    narrow window is safe for sequential harnesses (tests, driver).
+    Takes the stream's DataFrame or its session."""
 
     N = "8"
 
-    def __init__(self, df: DataFrame):
-        self.conf = df.sparkSession.conf
+    def __init__(self, df_or_spark: DataFrame | SparkSession):
+        spark = df_or_spark
+        if isinstance(df_or_spark, DataFrame):
+            spark = df_or_spark.sparkSession
+        self.conf = spark.conf
 
     def __enter__(self) -> None:
         self.prev = self.conf.get("spark.sql.shuffle.partitions")
@@ -118,32 +207,83 @@ class _pinned_stream_partitions:
         self.conf.set("spark.sql.shuffle.partitions", self.prev)
 
 
-def run_available_now(
-    df: DataFrame,
+@dataclass(frozen=True)
+class StreamRun:
+    """What one ``run_stream`` call leaves behind: the query's name (its
+    id when unnamed), its checkpoint directory, and every progress
+    update it reported (``recentProgress``, oldest first)."""
+
+    name: str
+    checkpoint: str
+    progress: list
+
+
+# The record of the latest run_stream call: None while a run is starting
+# (or when its start failed), the run's record once it has stopped —
+# whether it completed or raised.
+LAST_RUN: StreamRun | None = None
+
+
+def run_stream(
+    stream: DataFrame | DataStreamWriter,
+    *,
     output_mode: str = "append",
+    deliveries: Sequence[Callable[[], None]] | None = None,
     timeout_sec: int = 120,
-    progress_sink: list | None = None,
-) -> DataFrame:
-    """Run a streaming DataFrame to completion into a memory sink and
-    return the result as a batch DataFrame. With ``progress_sink`` a
-    list, the query's recentProgress dicts are appended after
-    termination (per-micro-batch numInputRows etc. for admission-
-    control assertions)."""
-    name = f"mem_{uuid.uuid4().hex[:10]}"
-    with _pinned_stream_partitions(df):
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", scratch_dir("ckpt"))
-            .start()
+) -> DataFrame | None:
+    """Start a streaming query, run it to completion, stop it and record
+    it in ``LAST_RUN``.
+
+    ``stream`` is a streaming DataFrame, run into a memory sink in
+    ``output_mode`` and returned as the sink table; or a
+    DataStreamWriter whose sink the caller configured (file path,
+    foreachBatch, a Python data source), in which case the caller reads
+    its own sink and None is returned. The runner adds the checkpoint,
+    the trigger and the shuffle-partition pin.
+
+    ``deliveries=None`` runs under ``Trigger.AvailableNow`` and raises
+    TimeoutError if the query is still running after ``timeout_sec``
+    (its sink would be partial). A sequence runs a live micro-batch
+    query: it drains with ``processAllAvailable()`` after the start and
+    again after each delivery (a callable that adds data to the
+    source). An empty sequence drains once — the form for sources that
+    do not support availableNow. ``processAllAvailable()`` returns only
+    when no further batch is due, so it covers the trailing no-data
+    batch in which an advanced watermark evicts state; the run checks
+    that once from the query's own record (``_check_drained``).
+    ``processAllAvailable()`` takes no deadline, so ``timeout_sec``
+    bounds availableNow runs only.
+    """
+    global LAST_RUN
+    LAST_RUN = None
+    if isinstance(stream, DataFrame):
+        spark = stream.sparkSession
+        sink = f"stream_{uuid.uuid4().hex[:10]}"
+        writer = (
+            stream.writeStream.outputMode(output_mode).format("memory").queryName(sink)
         )
-    _await_or_fail(q, timeout_sec)
-    if progress_sink is not None:
-        progress_sink.extend(q.recentProgress)
-    spark = df.sparkSession
-    return spark.table(name)
+    else:
+        spark, sink, writer = SparkSession.active(), None, stream
+    if deliveries is None:
+        writer = writer.trigger(availableNow=True)
+    ckpt = scratch_dir("ckpt")
+    with _pinned_stream_partitions(spark):
+        q = writer.option("checkpointLocation", ckpt).start()
+    try:
+        if deliveries is None:
+            _await_or_fail(q, timeout_sec)
+        else:
+            q.processAllAvailable()
+            last_batch = -1
+            for deliver in deliveries:
+                last_batch = (q.lastProgress or {"batchId": -1})["batchId"]
+                deliver()
+                q.processAllAvailable()
+            _check_drained(q, ckpt, last_batch)
+    finally:
+        q.stop()
+        LAST_RUN = StreamRun(q.name or str(q.id), ckpt, list(q.recentProgress))
+    return spark.table(sink) if sink else None
 
 
 def _await_or_fail(q, timeout_sec: int) -> None:
@@ -158,20 +298,28 @@ def _await_or_fail(q, timeout_sec: int) -> None:
         )
 
 
-def run_to_parquet(
-    df: DataFrame, out_dir: str | None = None, timeout_sec: int = 120
-) -> DataFrame:
-    """Run an append-mode stream into a parquet sink (the S3 side of the
-    north star: same code with an s3a:// path + checkpoint) and read the
-    result back."""
-    out = out_dir or scratch_dir("sink")
-    q = (
-        df.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", scratch_dir("ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_fail(q, timeout_sec)
-    return df.sparkSession.read.schema(df.schema).parquet(out)
+def _check_drained(q, ckpt: str, last_batch: int) -> None:
+    """One read, no wait: the final delivery was ingested by a batch
+    after ``last_batch``, and the watermark the last batch ran with is
+    the one its commit handed on — a larger one means the no-data batch
+    that evicts state under it has not committed."""
+    progress = q.recentProgress
+    name = q.name or q.id
+    if not any(p["numInputRows"] for p in progress if p["batchId"] > last_batch):
+        raise RuntimeError(
+            f"streaming query {name}: no batch after {last_batch} took the "
+            "last delivery; the sink would be incomplete"
+        )
+    last = progress[-1]
+    used = (last.get("eventTime") or {}).get("watermark")
+    if used is None:
+        return
+    with open(os.path.join(ckpt, "commits", str(last["batchId"]))) as fh:
+        handed_on = json.loads(fh.read().splitlines()[1])["nextBatchWatermarkMs"]
+    used_ms = round(datetime.datetime.fromisoformat(used).timestamp() * 1000)
+    if handed_on > used_ms:
+        raise RuntimeError(
+            f"streaming query {name}: batch {last['batchId']} ran at watermark "
+            f"{used} but committed {handed_on} ms; the eviction batch has not "
+            "committed and the sink would be incomplete"
+        )

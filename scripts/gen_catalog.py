@@ -2,7 +2,7 @@
 
 SURVEY.md §2 is an append-only history (40+ batch tables); this emits
 the one-place, current-state view the judge asked for: every registered
-query with its category, oracle tier, implementation file:line,
+query with its category, oracle tier, implementing module,
 headline-bench membership, and the newest per-entry verification
 evidence (scale factor + status) from the committed
 CORRECTNESS_SIM_r{N}.json artifacts.
@@ -116,8 +116,9 @@ def build_catalog_md() -> str:
         "|---|---|---|---|---|---|---|",
     ]
     for i, (name, q) in enumerate(qs.items(), 1):
+        # the module, not file:line: a code-only edit under plans/
+        # must not force a regeneration
         src = os.path.relpath(inspect.getsourcefile(q.fn), REPO)
-        line = inspect.getsourcelines(q.fn)[1]
         ev = evidence.get(name)
         verified = (
             f"{ev['tier']} @ {ev['sf']} (r{ev['round']})" if ev else "—"
@@ -125,7 +126,7 @@ def build_catalog_md() -> str:
         lines.append(
             f"| {i} | `{name}` | {q.category} | "
             f"{'oracle' if q.oracle else 'rows-only'} | "
-            f"{src}:{line} | {'yes' if name in headline else ''} | "
+            f"{src} | {'yes' if name in headline else ''} | "
             f"{verified} |"
         )
     lines.append("")

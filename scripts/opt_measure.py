@@ -7,7 +7,7 @@ every column of every row, no sink cost, full plan in the SQL tab).
 Jobs are labelled (guide section 1.5).
 
 Usage:
-    python scripts/opt_measure.py [--plans-dir plans/r14] [--tag before]
+    python scripts/opt_measure.py [--plans-dir plans/latest] [--tag before]
         [--reps 2] [q_name ...]
 
 Writes plans to <plans-dir>/<query>_<tag>.txt and prints one line per
@@ -67,15 +67,33 @@ DEFAULT_QUERIES = [
 ]
 
 
-def plan_stats(plan: str) -> str:
-    from scripts._planstats import summary_line
+_PY_NODES = (
+    "BatchEvalPython|ArrowEvalPython|MapInArrow|MapInPandas"
+    "|FlatMapGroupsInPandas|PythonMapInArrow"
+)
 
-    return summary_line(plan)
+
+def plan_stats(plan: str) -> str:
+    """One-line physical-node summary of an ``explain('formatted')``
+    string. Counts anchor on the numbered details entries
+    (``(n) NodeName``): the formatted explain prints every node twice."""
+
+    def count(node: str) -> int:
+        return len(re.findall(rf"\(\d+\) {node}\b", plan))
+
+    joins = set(re.findall(r"\(\d+\) (\w*(?:HashJoin|MergeJoin|NestedLoopJoin))", plan))
+    py = set(re.findall(rf"\(\d+\) ({_PY_NODES})", plan))
+    return (
+        f"Exchange={count('Exchange')} Reused={count('ReusedExchange')}"
+        f" scans={count('Scan parquet')}+{count('Scan ExistingRDD')}rdd"
+        f" joins={','.join(sorted(joins)) or '-'}"
+        f" py={','.join(sorted(py)) or '-'}"
+    )
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--plans-dir", default="plans/r14")
+    ap.add_argument("--plans-dir", default="plans/latest")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--no-plan", action="store_true")

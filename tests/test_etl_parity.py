@@ -127,7 +127,7 @@ def test_split_malformed_on_stream(spark, tmp_path):
     from pyspark.sql import types as T
 
     from kafka_s3_etl_spark.sources.kafka import split_malformed
-    from kafka_s3_etl_spark.streaming.runner import run_available_now
+    from kafka_s3_etl_spark.streaming.runner import run_stream
 
     wire = tmp_path / "wire"
     wire.mkdir()
@@ -142,9 +142,9 @@ def test_split_malformed_on_stream(spark, tmp_path):
     )
     stream = spark.readStream.text(str(wire))
     good, bad = split_malformed(stream, schema)
-    got = run_available_now(good)
+    got = run_stream(good)
     assert {(r.id, r.name) for r in got.collect()} == {(1, "ok"), (2, "fine")}
-    dead = run_available_now(bad)
+    dead = run_stream(bad)
     assert {r.value for r in dead.collect()} == {"BROKEN"}
 
 

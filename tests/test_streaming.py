@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 
 from kafka_s3_etl_spark.streaming.jobs import session_counts
 from kafka_s3_etl_spark.streaming.late import CUTOFF, late_data_demo
-from kafka_s3_etl_spark.streaming.runner import run_available_now, scratch_dir
+from kafka_s3_etl_spark.streaming import runner
+from kafka_s3_etl_spark.streaming.runner import run_stream, scratch_dir
 
 
 def test_late_rows_are_dropped(spark, sf_dir):
@@ -40,7 +41,7 @@ def test_session_window_gap_merge(spark):
     df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
     df.coalesce(1).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(df.schema).parquet(src)
-    got = run_available_now(session_counts(stream), output_mode="complete").collect()
+    got = run_stream(session_counts(stream), output_mode="complete").collect()
     by_user = {}
     for r in got:
         by_user.setdefault(r.user_id, []).append((r.ws, r.we, r.n))
@@ -74,7 +75,7 @@ def test_stateful_counts_survive_microbatches(spark):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*")
     )
-    got = run_available_now(user_running_counts(stream), output_mode="update")
+    got = run_stream(user_running_counts(stream), output_mode="update")
     emitted = sorted(
         (r.user_id, r.n_events) for r in got.collect()
     )
@@ -197,7 +198,7 @@ def test_stream_table_reads_directory_shaped_tables(spark, sf_dir, tmp_path):
     inside a directory named <t>.parquet and delivered a silently
     EMPTY stream."""
     from kafka_s3_etl_spark.sources.tables import load_table
-    from kafka_s3_etl_spark.streaming.runner import run_available_now, stream_table
+    from kafka_s3_etl_spark.streaming.runner import stream_table
 
     d = tmp_path / "dirshaped"
     d.mkdir()
@@ -205,7 +206,7 @@ def test_stream_table_reads_directory_shaped_tables(spark, sf_dir, tmp_path):
     n = batch.count()
     batch.repartition(3).write.parquet(str(d / "events.parquet"))
 
-    streamed = run_available_now(
+    streamed = run_stream(
         stream_table(spark, str(d), "events").groupBy().count(),
         output_mode="complete",
     )
@@ -326,8 +327,8 @@ def test_admission_control_caps_every_microbatch(spark, sf_dir):
     )
     from kafka_s3_etl_spark.sources.tables import load_table
 
-    progs: list = []
-    got = admission_controlled_counts(spark, sf_dir, progress_sink=progs)
+    got = admission_controlled_counts(spark, sf_dir)
+    progs = runner.LAST_RUN.progress
     ev = load_table(spark, sf_dir, "events")
     want = {
         (r.event_type, r.n, r.sum_id)
@@ -379,9 +380,9 @@ def test_gap_sessions_runs_on_rocksdb_state_store(spark):
         .parquet(src + "/*")
     )
     sessions = gap_sessions(stream)
-    progs: list = []
     with pinned_rocksdb_state_store(sessions):
-        got = run_available_now(sessions, progress_sink=progs)
+        got = run_stream(sessions)
+    progs = runner.LAST_RUN.progress
     rows = {(r.user_id, r.n_events) for r in got.collect()}
     assert (1, 2) in rows and (2, 1) in rows  # both base sessions closed
     metrics = [
@@ -425,9 +426,9 @@ def test_semi_stream_join_emits_once_and_evicts_unmatched(spark, sf_dir):
     streaming progress (state drains to the 2-row sentinel residue)."""
     import duckdb
 
-    from kafka_s3_etl_spark.streaming import outer_join
+    from kafka_s3_etl_spark.streaming.outer_join import semi_join_demo
 
-    out = semi = outer_join.semi_join_demo(spark, sf_dir)
+    out = semi = semi_join_demo(spark, sf_dir)
     assert out.columns == ["a_id"]  # semi projects no right columns
     got = sorted(r.a_id for r in semi.collect())
     assert got == sorted(set(got)), "a purchase emitted more than once"
@@ -453,8 +454,8 @@ def test_semi_stream_join_emits_once_and_evicts_unmatched(spark, sf_dir):
     # the unmatched (purchases - matched) left rows were evicted, not
     # buffered: total join state is the sentinel residue (1 left
     # purchase + 1 right event above the final watermark)
-    prog = outer_join.LAST_SEMI_PROGRESS
-    assert prog is not None and prog["stateOperators"]
+    prog = runner.LAST_RUN.progress[-1]
+    assert prog["stateOperators"]
     op = prog["stateOperators"][0]
     assert "symmetricHashJoin" in op.get("operatorName", ""), op
     assert op["numRowsTotal"] <= 2, op
@@ -707,16 +708,14 @@ def test_stream_join_state_survives_restart(spark, sf_dir, tmp_path):
 def test_session_timeout_rocksdb_entry_loads_rocksdb(spark, sf_dir):
     """The REGISTERED s_session_timeout_rocksdb entry (not just the
     unit harness above) runs its full two-delivery close-out on the
-    RocksDB provider: the demo's captured final progress must report
+    RocksDB provider: the run's final progress must report
     rocksdb* custom metrics from the state operator, proving the
     provider actually loaded for the driver-facing query."""
     from kafka_s3_etl_spark.plans.registry import all_queries
-    from kafka_s3_etl_spark.streaming import session_close
 
     df = all_queries()["s_session_timeout_rocksdb"].fn(spark, sf_dir)
     assert df.count() > 0
-    prog = session_close.LAST_PROGRESS
-    assert prog is not None
+    prog = runner.LAST_RUN.progress[-1]
     metrics = [
         m
         for op in prog.get("stateOperators", [])
@@ -729,14 +728,12 @@ def test_window_tumbling_rocksdb_entry_loads_rocksdb(spark, sf_dir):
     """s_window_tumbling_rocksdb (batch 60): the built-in window
     aggregation's state rides the RocksDB provider — the entry must
     produce rows AND leave rocksdb* custom metrics in the final
-    progress dict it publishes via session_close.LAST_PROGRESS."""
+    progress of its run (runner.LAST_RUN)."""
     from kafka_s3_etl_spark.plans.registry import all_queries
-    from kafka_s3_etl_spark.streaming import session_close
 
     df = all_queries()["s_window_tumbling_rocksdb"].fn(spark, sf_dir)
     assert df.count() > 0
-    prog = session_close.LAST_PROGRESS
-    assert prog is not None
+    prog = runner.LAST_RUN.progress[-1]
     metrics = [
         m
         for op in prog.get("stateOperators", [])
@@ -748,10 +745,9 @@ def test_window_tumbling_rocksdb_entry_loads_rocksdb(spark, sf_dir):
 def test_dedup_watermark_rocksdb_entry_loads_rocksdb(spark, sf_dir):
     """s_dedup_watermark_rocksdb (batch 69): the dedup state rides the
     RocksDB provider — rows match DISTINCT keys and rocksdb* custom
-    metrics appear in the published final progress."""
+    metrics appear in the run's final progress."""
     from kafka_s3_etl_spark.plans.registry import all_queries
     from kafka_s3_etl_spark.sources.tables import load_table
-    from kafka_s3_etl_spark.streaming import session_close
 
     df = all_queries()["s_dedup_watermark_rocksdb"].fn(spark, sf_dir)
     want = (
@@ -761,8 +757,7 @@ def test_dedup_watermark_rocksdb_entry_loads_rocksdb(spark, sf_dir):
         .count()
     )
     assert df.count() == want
-    prog = session_close.LAST_PROGRESS
-    assert prog is not None
+    prog = runner.LAST_RUN.progress[-1]
     metrics = [
         m
         for op in prog.get("stateOperators", [])
@@ -778,13 +773,11 @@ def test_window_sliding_rocksdb_entry_loads_rocksdb(spark, sf_dir):
     non-RocksDB sibling's result set (the provider must be
     value-invisible)."""
     from kafka_s3_etl_spark.plans.registry import all_queries
-    from kafka_s3_etl_spark.streaming import session_close
 
     qs = all_queries()
     got = qs["s_window_sliding_rocksdb"].fn(spark, sf_dir)
     rows = {tuple(r) for r in got.collect()}
-    prog = session_close.LAST_PROGRESS
-    assert prog is not None
+    prog = runner.LAST_RUN.progress[-1]
     metrics = [
         m
         for op in prog.get("stateOperators", [])

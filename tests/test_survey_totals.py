@@ -135,7 +135,7 @@ def test_survey_table_ids_and_readme_counts_match_registry():
 
 def test_catalog_md_is_fresh():
     """VERDICT r11 #8: CATALOG.md is the one-place current-state view
-    of the registry (id, category, tier, file:line, headline,
+    of the registry (id, category, tier, module, headline,
     last-verified evidence). It is generated — any drift between the
     committed file and the live registry fails here; regenerate with
     `python scripts/gen_catalog.py`."""
