@@ -902,8 +902,9 @@ def set_similarity_join(
         # the win is quadratic in the collapse factor because both the
         # candidate join and the verify join shrink per side. The set
         # key is md5 of the sorted token list — exact, no hash-mixing
-        # collision risk.
-        arrs_all = documents.select("doc_id", arr_expr).localCheckpoint()
+        # collision risk. Only `membership` (read three times by the
+        # re-expansion) and the representatives' arrays are materialized.
+        arrs_all = documents.select("doc_id", arr_expr)
         keyed = arrs_all.select(
             "doc_id", F.md5(F.concat_ws(" ", "ta")).alias("sk")
         )

@@ -235,7 +235,8 @@ def run_stream(
     it in ``LAST_RUN``.
 
     ``stream`` is a streaming DataFrame, run into a memory sink in
-    ``output_mode`` and returned as the sink table; or a
+    ``output_mode`` and returned as the sink table (its temporary view
+    is dropped; the returned frame still reads the sink's rows); or a
     DataStreamWriter whose sink the caller configured (file path,
     foreachBatch, a Python data source), in which case the caller reads
     its own sink and None is returned. The runner adds the checkpoint,
@@ -283,7 +284,13 @@ def run_stream(
     finally:
         q.stop()
         LAST_RUN = StreamRun(q.name or str(q.id), ckpt, list(q.recentProgress))
-    return spark.table(sink) if sink else None
+    if sink is None:
+        return None
+    # The resolved frame keeps the sink's rows; the view would keep them
+    # (and one catalog entry per run) for the life of the session.
+    out = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return out
 
 
 def _await_or_fail(q, timeout_sec: int) -> None:

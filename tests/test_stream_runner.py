@@ -3,8 +3,9 @@ package starts a streaming query.
 
 Covers the runner's failure paths — an availableNow query that outlives
 its timeout, a live query whose eviction batch never committed, a
-delivery no batch took — its per-process scratch root, and guards that
-keep stream starts and sleeps out of the rest of the package.
+delivery no batch took — its per-process scratch root, the memory-sink
+views it drops, and guards that keep stream starts and sleeps out of the
+rest of the package.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_s3_etl_spark.plans.registry import all_queries
 from kafka_s3_etl_spark.streaming import runner
 from kafka_s3_etl_spark.streaming.runner import (
     _check_drained,
@@ -180,3 +182,23 @@ def test_streaming_package_never_sleeps():
         f"time.sleep under streaming/: {sleeps}; stream completion comes from "
         "the query (awaitTermination / processAllAvailable), not a poll"
     )
+
+
+def test_memory_sink_runs_leave_no_view_and_keep_their_rows(spark, sf_dir):
+    """A DataFrame run returns the memory sink's rows but drops its
+    temporary view, so a session that runs many streams does not hold a
+    catalog entry per run; the returned frame still reads, groups and
+    writes after later runs."""
+    def views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = views()
+    build = all_queries()["s_window_tumbling"].fn
+    first = build(spark, sf_dir)
+    rows = sorted(first.collect())
+    build(spark, sf_dir)
+    build(spark, sf_dir)
+    assert views() == before
+    assert rows and sorted(first.collect()) == rows
+    assert first.groupBy("event_type").count().count() > 0
+    first.write.format("noop").mode("overwrite").save()
