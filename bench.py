@@ -1,19 +1,30 @@
-"""Benchmark runner: times the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ..., "regressions": {...}}.
+"""Benchmark runner: measures catalog queries at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Each query is forced with a count() action (no driver-side collect of
-the full result) after a warm-up of the session. The headline set
-covers every operator family: scan, filter, join, agg, window, set op,
-semi-structured, dedup, similarity, text, streaming.
+    python bench.py              # every HEADLINE query; writes BENCH_RUN.json
+    python bench.py q_a q_b ...  # just those names, one record per line;
+                                 # writes nothing
 
-The regression tripwire compares each query to the newest BENCH_r{N}
-JSON committed in the repo: anything >1.5x slower AND >0.3s absolute
-(filters codegen/GC noise on sub-second queries) lands in
-"regressions" as {name: {"prev": s, "now": s}} with the source round,
-so a slowdown self-diagnoses in the round artifact instead of waiting
-for the judge.
+Each query is built, then written with the noop sink (every column of
+every row), best of 2, each rep under the Spark job group <name>#<rep>.
+Its record comes from the last rep: ``best_s`` (best build + write, what
+``value`` sums), ``build_s`` (the builder: py4j calls plus eager jobs),
+``plan_s`` (planner phases of the built frame), ``exec_s`` (the write),
+``build_jobs``/``exec_jobs`` (jobs submitted before/after the build
+ended), their ``stages``, ``tasks`` and ``shuffle_bytes``, the plan's
+``exchanges``, and ``rows`` from an untimed count() under <name>#rows.
+Stream entries (s_*) undercount jobs: micro-batch jobs run on the
+stream's own thread, outside the job group, so ``build_jobs`` reads 0
+while ``build_s`` holds the stream run.
+
+Tripwire: a run compares its records with the BENCH_RUN.json on disk
+when that run has the same sf, and flags a query whose rows differ or
+whose jobs or exchanges rose. These counters repeat exactly from run to
+run; wall-clock and shuffle bytes do not, so they are never compared.
+
+The last line printed is ONE bounded JSON object: "metric", "value"
+(total sec), "unit", "sf", "queries" (the 25 slowest), "regressions"
+(the first 5 flags, {name: {counter: [before, now]}}) and "flagged".
 """
 
 from __future__ import annotations
@@ -23,17 +34,23 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.join(HERE, "perfbench"))
 
-from kafka_s3_etl_spark.plans.registry import all_queries
-from kafka_s3_etl_spark.session import build_session
+from kafka_s3_etl_spark.plans.registry import all_queries  # noqa: E402
+from kafka_s3_etl_spark.session import build_session  # noqa: E402
+from tracing import plan_phases, spark_counts  # noqa: E402
 
-# Query families to time; expanded as milestones land. Covers every
-# family so round-over-round deltas track the whole surface: scan,
-# filter, joins (incl. theta/asof/salted), agg/rollup/pivot/percentile,
-# window, set ops, semi-structured, all dedup families, ANN (brute/
-# LSH/IVF), text, multimodal UDF path, prep, ETL serialization, and
-# streaming micro-batch pipelines.
+RUN_FILE = os.path.join(HERE, "BENCH_RUN.json")
+REPS = 2
+LINE_QUERIES = 25
+LINE_FLAGS = 5
+
+# Query families to time. Covers every family so run-over-run deltas
+# track the whole surface: scan, filter, joins (incl. theta/asof/salted),
+# agg/rollup/pivot/percentile, window, set ops, semi-structured, all dedup
+# families, ANN (brute/LSH/IVF), text, multimodal UDF path, prep, ETL
+# serialization, and streaming micro-batch pipelines.
 HEADLINE = [
     "q_filter_conj",
     "q_agg_group",
@@ -147,8 +164,6 @@ HEADLINE = [
     "q_sql_udf",
     "q_lateral_topn",
     "q_pagination",
-    # round-7 additions: bounded-output linkage, range pushdown,
-    # TPC-DS-flavored shapes, admission-controlled streaming
     "q_fuzzy_join_capped",
     "q_graph_triangles_capped",
     "x_python_pushdown_range",
@@ -159,7 +174,6 @@ HEADLINE = [
     "q_ds_cume_share",
     "q_ds_topk_rollup",
     "s_admission_control",
-    # round-7 storage/runtime batch: layout-paid joins + scan reduction
     "x_bucketed_join",
     "x_partitioned_write",
     "x_dpp_join",
@@ -171,7 +185,6 @@ HEADLINE = [
     "q_weighted_sample",
     "q_contamination_rate",
     "q_window_first_last",
-    # round-7 feature-engineering batch
     "q_feature_minmax",
     "q_target_encode",
     "q_feature_hash",
@@ -188,8 +201,6 @@ HEADLINE = [
     "s_enrich_static",
     "s_chained_windows",
     "s_cdc_upsert",
-    # round-8 additions: the post-batch-7 entries the r7 verdict flagged
-    # as bench-uncovered, plus batch 9
     "q_gini",
     "q_pareto_cutoff",
     "q_herfindahl",
@@ -217,98 +228,71 @@ HEADLINE = [
     "q_skew_diagnostic",
     "q_ds_exists_matrix",
     "q_simjoin_prefix",
-    # round-8 batch 11
     "q_sim_pq",
     "q_doc_keyterms",
     "q_trend_decompose",
     "q_outlier_iqr",
-    # round-8 batch 12
     "q_cuped",
     "q_histogram_log_bins",
     "q_survival_curve",
     "q_cohort_ltv",
-    # round-8 batch 13
     "q_fk_orphans",
     "q_corr_matrix",
     "q_changepoint",
     "q_rfm_scores",
     "q_kfold_assign",
     "q_label_propagation",
-    # round-8 batch 14
     "q_diff_in_diff",
     "q_bootstrap_ci",
     "q_percentile_cont",
     "q_incremental_agg_merge",
     "q_markov_stationary",
-    # round-8 batch 15
     "q_chi_square",
     "q_permutation_test",
     "q_calibration_bins",
     "q_gap_fill_interpolate",
-    # round-8 batch 16
     "q_decile_lift_scalable",
-    # round-8 batch 17
     "q_filter_funnel",
     "q_dedup_survivorship",
     "q_token_fertility",
-    # round-8 batch 18
     "q_attribution_position",
     "q_ar_aging",
-    # round-8 batch 19
     "q_asof_join_forward",
     "q_asof_join_tolerance",
-    # round-8 batch 20
     "q_rolling_median",
     "q_rolling_corr",
-    # round-9: scale-hardened twins + ANN dedup upgrade. q_decile_lift
-    # (naive NTILE twin) dropped from the headline — its scalable
-    # hash-matched sibling q_decile_lift_scalable represents the shape.
-    # r11: q_dedup_embedding (PAIRS) moved out of the headline set with
-    # the other two pairs-output oracle gates (see the PAIRS-output
-    # rule in SCALE.md): pair emission is quadratic in duplicate
-    # multiplicity BY DEFINITION, so benching it alongside linear
-    # deliverables reads as an undocumented scale flag; its clusters
-    # sibling q_dedup_embedding_clusters stays headline.
+    # Excluded on purpose: q_decile_lift (the naive NTILE twin;
+    # q_decile_lift_scalable represents the shape) and the PAIRS-output
+    # entries q_dedup_embedding, q_dedup_image_phash and q_winnow_overlap:
+    # pair emission is quadratic in duplicate multiplicity by definition
+    # (the PAIRS-output rule in SCALE.md); their clusters siblings are here.
     "q_interval_overlap_scalable",
     "q_label_propagation_capped",
     "q_kcore_peeled",
-    # round-9 batch 22 (q_containment_join stays correctness-tier: the
-    # exact containment join's candidate set is intrinsically dense on
-    # this corpus — see its doc)
+    # q_containment_join stays correctness-tier: the exact containment
+    # join's candidate set is intrinsically dense on this corpus (see its
+    # doc); q_containment_join_capped below is the bounded form.
     "q_decile_transition",
     "q_mixture_weights",
     "q_length_buckets",
-    # round-9 batch 23
     "q_melt",
     "q_kmv_sketch",
     "q_interval_join",
     "q_ann_recall",
-    # round-9 batch 24
     "q_winsorize_scalable",
     "q_oov_rate",
     "x_cache_reuse",
-    # round-9 batch 25
     "q_try_arithmetic",
     "q_arrow_token_stats",
-    # round-9 batch 26
     "q_line_dedup",
-    # round-9 batch 27
     "q_multimodal_video",
-    # round-9 batch 28
     "q_sim_ivfpq",
-    # round-9 batch 29
     "x_s3_object_scan",
-    # round-9 batch 30
     "s_s3_autoloader",
-    # round-9 batch 31
     "x_s3_object_sink",
-    # round-9 batch 32
     "s_s3_stream_sink",
-    # round-9 batch 33
     "q_transpose",
     "q_xml_roundtrip",
-    # round-9 batches 34-35: the oracle-hardened exact twins + the
-    # BPE merge loop and hash sampling
     "q_dedup_fuzzy_exact",
     "q_dedup_clusters_exact",
     "q_dedup_simhash_exact",
@@ -316,151 +300,92 @@ HEADLINE = [
     "q_markov_kstep",
     "q_sample_hash",
     "q_bpe_merges",
-    # round-9 batch 36
     "q_dedup_embedding_clusters",
-    # round-9 batch 37
     "q_dedup_precision_audit",
-    # round-9 batch 38
     "q_split_leakage_safe",
     "q_split_leakage_audit",
-    # round-9 batch 39
     "q_dedup_threshold_curve",
-    # round-10 batch 40: perceptual-hash multimodal dedup
-    # (q_dedup_image_phash emits PAIRS — headline-excluded r11, same
-    # rule as q_dedup_embedding; q_dedup_image_clusters represents the
-    # family below)
     "q_dedup_frame_phash",
-    # round-10 batch 41: bounded containment join (the uncapped
-    # original stays correctness-tier / headline-excluded)
     "q_containment_join_capped",
-    # round-10 batch 42: the RocksDB-provider sessionizer (state on
-    # local disk — per-batch scheduling floor plus RocksDB I/O)
     "s_session_timeout_rocksdb",
-    # round-10 batch 43: the pinned ANN twins
     "q_sim_ivf_pinned",
     "q_sim_pq_pinned",
     "q_sim_ivfpq_pinned",
-    # round-10 batch 44: image dedup resolved to clusters
     "q_dedup_image_clusters",
-    # round-11 batch 62: audio dedup resolved to clusters
     "q_dedup_audio_hash",
-    # round-11 batch 63: temperature mix + audio band features
     "q_sample_temperature",
     "q_audio_band_energies",
-    # round-11 batch 64: textrank keywords + int8 quantization
     "q_keyword_textrank",
     "q_embed_quantize_int8",
-    # round-11 batch 65: padding audit + sliding-window chunking
     "q_padding_waste",
     "q_chunk_fixed_overlap",
-    # round-11 batch 66: tf-idf features + exact centroids
     "q_tfidf_topk",
     "q_embed_centroid_exact",
-    # round-11 batch 67: crawl-refresh cross-corpus dedup
     "q_dedup_cross_corpus",
-    # round-11 batch 68: governance audits
     "q_kanonymity_audit",
     "q_freshness_lag",
-    # round-11 batch 69: late interaction + rocksdb dedup
     "q_maxsim_late_interaction",
     "s_dedup_watermark_rocksdb",
-    # round-11 batch 70: retrieval evaluation metrics
     "q_mrr_eval",
     "q_ndcg_eval",
-    # round-11 batch 71: churn labels + negative sampling
     "q_label_churn",
     "q_negative_sampling",
-    # round-11 batch 72: feature transforms
     "q_quantile_normalize",
     "q_winsorize_clip",
-    # round-11 batch 73: hard-negative mining
     "q_hard_negatives",
-    # round-12: the last streaming-join-matrix cell (LEFT SEMI)
     "s_stream_semi_join",
-    # round-12: q_udtf_native (the native @udtf API-parity twin) is
-    # registered + oracle-gated but HEADLINE-EXCLUDED, same spirit as
-    # the pairs rule: the @udtf eval contract is definitionally
-    # row-at-a-time Python (19.5s at sf0.1 for 337k yielded rows,
-    # probed 2.9x at 30x), while q_udtf above IS the production form
-    # of the same operator (JVM explode). Benching the API twin beside
-    # linear deliverables would read as an undocumented scale flag.
-    # round-12 batch 76: training-pipeline widening
+    # q_udtf_native (the @udtf API-parity twin) is excluded: the @udtf eval
+    # contract is row-at-a-time Python by definition (19.5 s at sf0.1 for
+    # 337k yielded rows), while q_udtf is the production form of the same
+    # operator (JVM explode).
     "q_event_debounce",
     "q_dedup_prefix_tokens",
     "q_span_corruption",
     "q_embed_dim_stats",
     "q_regex_funcs",
-    # round-12 batch 77
     "q_graph_bfs_kstep",
     "q_asof_join_nearest",
     "q_map_funcs",
-    # round-12 batch 78
     "q_image_channel_stats",
-    # round-12 batch 79
     "q_sql_scripting",
-    # round-12 batch 80
     "q_parameterized_sql",
-    # round-12 batch 81
     "q_udf_iterator",
     "q_udaf_window",
     "q_collated_group",
-    # round-12 batch 82
     "s_window_sliding_rocksdb",
-    # round-13 batch 83: physical-execution cells + distributed kmeans
     "q_join_skew_aqe",
     "x_cbo_broadcast",
     "q_kmeans_kstep",
-    # round-13 batch 84: state-store reader (checkpoint cached per sf)
     "x_statestore_scan",
-    # round-14 batch 85: operational-surface cells
     "q_sql_session_vars",
     "x_state_metadata_scan",
     "q_read_corrupt_tolerant",
-    # round-14 batch 86: SQL-front-end parity cells
     "q_sql_table_function",
     "x_column_defaults",
     "q_execute_immediate",
-    # round-10 batch 45: exact substring-span dedup + mask transform
     "q_dedup_substring_spans",
     "q_dedup_substring_mask",
-    # round-10 batch 46: the fixed-round LPA twin
     "q_label_propagation_kstep",
-    # round-10 batch 47: JL random projection (map-only)
     "q_embed_randproj",
-    # round-10 batch 48: BPE tokenizer application (map-only regex chain)
     "q_bpe_encode",
-    # round-10 batch 49: collocation lift + winnowing fingerprints
     "q_collocations_lift",
     "q_winnow_fingerprints",
-    # round-10 batch 50: MOSS overlap, CDC chunking, rank fusion
-    # (q_winnow_overlap emits PAIRS — headline-excluded r11, same rule
-    # as q_dedup_embedding; q_winnow_clusters represents the family)
     "q_chunk_cdc",
     "q_rrf_fusion",
-    # round-10 batch 51: CDC storage report + JSONL interop
     "q_cdc_dedup_ratio",
     "x_jsonl_roundtrip",
-    # round-10 batch 52: PSI drift + native JSONL file stream
     "q_drift_psi",
     "s_jsonl_autoload",
-    # round-10 batch 53: Zipf slope + embedding-norm QA
     "q_zipf_slope",
     "q_embedding_norm_hist",
-    # round-10 batches 54-55: bigram LM + JSONL stream sink
     "q_bigram_lm_score",
     "s_jsonl_stream_sink",
-    # round-10 batch 56: CSV write round-trip
     "x_csv_roundtrip",
-    # round-10 batch 57: winnow clusters
     "q_winnow_clusters",
-    # round-10 batch 58: tokenizer-design curves
     "q_vocab_coverage_curve",
     "q_distinct_ngrams",
-    # round-10 batch 59: multi-probe LSH
     "q_sim_ann_multiprobe",
-    # round-10 batch 60: RocksDB window state
     "s_window_tumbling_rocksdb",
-    # round-10 batch 61: langid eval + partition-pruned JSONL
     "q_langid_confusion",
     "x_jsonl_partitioned",
 ]
@@ -485,8 +410,7 @@ def _warm_python_workers(spark) -> None:
 def _warm_streaming(spark) -> None:
     """Run one throwaway micro-batch query so streaming engine init
     (state-store providers, streaming codegen paths, checkpoint IO) is
-    not billed to the first streaming headline query — measured as a
-    flapping ~0.6s tripwire false-positive on s_kafka_to_s3."""
+    not billed to the first streaming query (about 0.6 s)."""
     from kafka_s3_etl_spark.streaming.runner import run_stream, scratch_dir
 
     src = scratch_dir("warm_src")
@@ -495,475 +419,140 @@ def _warm_streaming(spark) -> None:
     run_stream(warm, output_mode="complete", timeout_sec=60)
 
 
-def _artifact_queries(
-    path: str, sf: float | str | None = None
-) -> dict[str, float] | None:
-    """Per-query timings out of one bench artifact, surviving every
-    layout the driver has produced so far: this script's own JSON
-    (BENCH_LOCAL.json), the driver wrapper with "parsed", and — the
-    r5 failure mode — "parsed": null with the JSON line truncated
-    inside the driver's 2000-char "tail" capture window.
-
-    When ``sf`` is given, an artifact that RECORDS a different scale
-    factor is rejected: a quick sf0.01 local run must not become the
-    baseline that flags every subsequent sf0.1 query as a regression.
-    Artifacts whose sf can't be recovered are accepted (best effort).
-    Any malformed artifact (non-numeric timing values, etc.) yields
-    None instead of raising — the caller falls through to the next."""
-    import re
-
-    def _sf_ok(recorded) -> bool:
-        if sf is None or recorded is None:
-            return True
-        try:
-            return float(recorded) == float(sf)
-        except (TypeError, ValueError):
-            return str(recorded) == str(sf)
-
+def measure(spark, name: str, fn, sf_dir: str) -> dict:
+    """Build and noop-write one query ``REPS`` times; return the best
+    wall time and the last rep's record (see the module docstring)."""
+    sc = spark.sparkContext
+    best = float("inf")
     try:
-        with open(path) as fh:
-            data = json.load(fh)
-        if not isinstance(data, dict):
-            return None
-        for payload in (data, data.get("parsed")):
-            if isinstance(payload, dict) and isinstance(
-                payload.get("queries"), dict
-            ):
-                if not _sf_ok(payload.get("sf")):
-                    return None
-                return {k: float(v) for k, v in payload["queries"].items()}
-        tail = data.get("tail")
-        if not isinstance(tail, str):
-            return None
-        # Recover the JSON line from the tail if it survived intact...
-        for line in reversed(tail.strip().splitlines()):
-            line = line.strip()
-            if line.startswith("{"):
-                try:
-                    payload = json.loads(line)
-                    if isinstance(payload.get("queries"), dict):
-                        if not _sf_ok(payload.get("sf")):
-                            return None
-                        return {
-                            k: float(v)
-                            for k, v in payload["queries"].items()
-                        }
-                except ValueError:
-                    pass
-                break
-        # ...else salvage whatever per-query pairs the window kept.
-        # Query names are q_/s_/x_-prefixed, so "sf"/"value"/nested
-        # regression fields can't false-match.
-        m = re.search(r'"sf":\s*([0-9]+(?:\.[0-9]+)?)', tail)
-        if m and not _sf_ok(m.group(1)):
-            return None
-        pairs = re.findall(r'"([qsx]_\w+)":\s*([0-9]+(?:\.[0-9]+)?)', tail)
-        queries = {k: float(v) for k, v in pairs}
-        return queries if len(queries) >= 10 else None
-    except (OSError, ValueError, TypeError, AttributeError):
-        return None
+        # The first rep also pays one-time whole-stage-codegen compilation
+        # and, for some streams, first-run jobs; the last rep measures the
+        # query itself.
+        for rep in range(REPS):
+            group = f"{name}#{rep}"
+            sc.setJobGroup(group, name)
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            build_s = time.perf_counter() - t0
+            build_end = time.time()
+            plan_s, exchanges = plan_phases(df)
+            t1 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            exec_s = time.perf_counter() - t1
+            best = min(best, build_s + exec_s)
+        counts = spark_counts(spark, group, build_end)
+        sc.setJobGroup(f"{name}#rows", name)
+        rows = df.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return {
+        "best_s": round(best, 3),
+        "build_s": round(build_s, 3),
+        "plan_s": round(plan_s, 3),
+        "exec_s": round(exec_s, 3),
+        "build_jobs": counts["build_jobs"],
+        "exec_jobs": counts["jobs"] - counts["build_jobs"],
+        "stages": counts["stages"],
+        "tasks": counts["tasks"],
+        "shuffle_bytes": counts["shuffle_write_bytes"],
+        "exchanges": exchanges,
+        "rows": rows,
+    }
 
 
-def _previous_bench(
-    here: str | None = None, sf: float | str | None = None
-) -> tuple[str, dict[str, float]] | None:
-    """Newest usable bench baseline next to this script: committed
-    BENCH_LOCAL.json from the previous run if present, else the
-    BENCH_r{N}.json driver artifacts newest-first, skipping any whose
-    timings can't be recovered (VERDICT r5 #1) or whose recorded scale
-    factor differs from ``sf``."""
-    import glob
-    import re
-
-    if here is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-    candidates: list[tuple[int, str, str]] = []
-    local = os.path.join(here, "BENCH_LOCAL.json")
-    if os.path.exists(local):
-        candidates.append((1 << 30, "r-local", local))
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            candidates.append((int(m.group(1)), f"r{int(m.group(1))}", p))
-    for _, label, path in sorted(candidates, reverse=True):
-        queries = _artifact_queries(path, sf)
-        if queries:
-            return label, queries
-    return None
+def _counters(rec: dict) -> dict[str, int]:
+    return {
+        "rows": rec["rows"],
+        "jobs": rec["build_jobs"] + rec["exec_jobs"],
+        "exchanges": rec["exchanges"],
+    }
 
 
-# Slowdowns with a NAMED, accepted cause (design tradeoffs taken on
-# purpose, with the scale evidence that justifies them). They surface
-# under "regressions_explained" so a reader sees the reason instead of
-# an unexplained red flag; anything not listed here still trips.
-# Variance-driven flaps (scheduling floors, sub-2s churn) do NOT
-# belong here — they are class-tagged in QUERY_VARIANCE below
-# (VERDICT r11 #5: envelopes, not narratives).
-KNOWN_SLOWER = {
-    "s_cdc_upsert": (
-        "r5 partition-pruned CDC apply (VERDICT r4 #2): each micro-batch "
-        "now MERGEs via dynamic partition overwrite of only affected "
-        "key-range partitions — ~2x constant cost at sf0.1 local, but "
-        "per-batch cost is bounded by affected partitions, not O(table): "
-        "1.1x at the 10x scaling probe (SCALE.md) vs full-table rewrite "
-        "before"
-    ),
-}
-
-# Measured variance classes (VERDICT r11 #5). Each class carries the
-# ratio envelope that idle A/B runs of IDENTICAL code have been
-# measured to flap within (SCALE.md r9-r11 flag-A/B episodes). The
-# flag logic widens the 1.5x tripwire to the class envelope for tagged
-# queries; a tagged query exceeding ITS envelope still trips as a real
-# regression, and tagged flaps inside the envelope land in
-# "regressions_explained" with the class tag — visible, never silent.
-VARIANCE_CLASSES = {
-    "scheduling-floor": {
-        "ratio": 2.0,
-        "why": (
-            "many-small-jobs chains (iterative fits, multi-job "
-            "pipelines, forced streaming triggers) whose sf0.1 cost is "
-            "per-job scheduling overhead, not data; idle A/B runs of "
-            "identical code land 1.3-2.0x apart (SCALE.md r8-r11 "
-            "episodes: q_graph_pagerank checkpoint-cadence profile, "
-            "q_sim_pq 1.49->2.63 same-day flap)"
-        ),
-    },
-    "localCheckpoint-chain": {
-        "ratio": 1.8,
-        "why": (
-            "iterative plans with per-round localCheckpoint jobs; the "
-            "round-count-proportional scheduling floor flaps 1.3-1.6x "
-            "idle on identical code (q_label_propagation family A/Bs, "
-            "SCALE.md r10-r11)"
-        ),
-    },
-    "sub-2s-churn": {
-        "ratio": 1.8,
-        "why": (
-            "sub-2s queries flap past 1.5x between back-to-back idle "
-            "runs of identical code from codegen/GC jitter alone "
-            "(r10 close-out: 9 flags -> settle -> 6 different flags, "
-            "totals within 10%)"
-        ),
-    },
-}
-
-# query -> variance class; consulted by _regressions and echoed in the
-# bench payload so the artifact shows WHICH envelope absolved a flap.
-QUERY_VARIANCE = {
-    "q_graph_pagerank": "scheduling-floor",
-    "q_recursive_tree": "scheduling-floor",
-    "q_interval_overlap_scalable": "scheduling-floor",
-    "q_chunk_cdc": "scheduling-floor",
-    "q_sim_pq": "scheduling-floor",
-    "q_sim_pq_pinned": "scheduling-floor",
-    "s_chained_windows": "scheduling-floor",
-    "q_label_propagation": "localCheckpoint-chain",
-    "q_label_propagation_capped": "localCheckpoint-chain",
-    "q_label_propagation_kstep": "localCheckpoint-chain",
-    "q_doc_keyterms": "sub-2s-churn",
-    "q_knn_join": "sub-2s-churn",
-    "q_corr_matrix": "sub-2s-churn",
-    "q_dedup_frame_phash": "sub-2s-churn",
-    # r12 close-out: flapped in 2 of 3 idle full-bench runs of
-    # identical code (q_kcore 1.48 min -> 2.26/2.28; q_embed_randproj
-    # 0.64 -> 1.03) while run 1 was clean — the churn signature, and
-    # both sit in the sub-2.3s band where per-job scheduling dominates
-    "q_kcore": "sub-2s-churn",
-    "q_embed_randproj": "sub-2s-churn",
-}
-
-# Explicit baseline rebases (VERDICT r11 #4): per-query FLOORS for the
-# BENCH_LOCAL min-merge, each backed by an idle A/B episode in SCALE.md
-# showing the pre-rebase min was an unreproducible best-case sample.
-# The merge never writes a baseline below a floor; lowering one
-# requires editing this table (the explicit-evidence act), so a stray
-# fast sample of a variance-class query can never silently re-tighten
-# the tripwire. Values are the reproducible idle bests recorded in the
-# SCALE.md episodes named in each comment.
-REBASES = {
-    # r11 flag-A/B table: 5.659 stale -> 7.375/7.459 idle; close-out
-    # min-merge landed 7.054
-    "q_label_propagation": 7.054,
-    # r11 flag-A/B table: 1.479 unreachable -> 2.017/2.279 idle
-    "q_dedup_frame_phash": 1.606,
-    # r11 close-out episode: reproduced elevated across final+settle
-    "s_chained_windows": 2.579,
-    "q_sim_pq_pinned": 2.617,
-    "q_label_propagation_kstep": 5.737,
-    # ADVICE r11 #3: the 1.315 min was the r10 unreproducible sample;
-    # idle re-checks land 2.2-2.4 (r11 raw: 2.209)
-    "q_sim_pq": 2.209,
-    # r12 close-out flag A/B: 2.537 min unreachable on identical code
-    # (additive-only graph.py diff since r11); three idle runs 4.31 /
-    # 3.96 / 3.88 — rebased to the reproducible idle best
-    "q_graph_triangles_capped": 3.882,
-}
-
-
-def _env_drift(
-    timings: dict[str, float], old: dict[str, float]
-) -> float:
-    """Whole-run environment drift vs the baseline: the MEDIAN ratio
-    across shared non-trivial queries. When the host itself got slower
-    (reboot, co-tenant, CPU-frequency change — r9 measured a reboot
-    shifting the median 1.5x with a stash A/B proving identical code),
-    every query shifts together; per-query "regressions" must be read
-    RELATIVE to that shift or one environment event brands dozens of
-    queries. Only engaged when the evidence is broad (>= 8 shared
-    queries) and the shift is real (median > 1.25x); the drift itself
-    is reported in the bench payload so it is never silent."""
-    ratios = sorted(
-        now / old[n]
-        for n, now in timings.items()
-        if n in old and old[n] >= 0.2 and now >= 0.2
-    )
-    if len(ratios) < 8:
-        return 1.0
-    mid = len(ratios) // 2
-    med = (
-        ratios[mid]
-        if len(ratios) % 2
-        else (ratios[mid - 1] + ratios[mid]) / 2
-    )
-    return med if med > 1.25 else 1.0
-
-
-def _regressions(
-    timings: dict[str, float], sf: float | str | None = None
-) -> tuple[dict, dict, float]:
-    prev = _previous_bench(sf=sf)
-    if prev is None:
-        return {}, {}, {}, 1.0
-    label, old = prev
-    drift = _env_drift(timings, old)
-
-    # now > 1.0s: a query that still finishes under a second cannot be
-    # a meaningful regression at sf0.1 — measured: back-to-back idle
-    # runs flap different sub-second entries past 1.5x (0.47->0.82,
-    # 0.60->0.94) from codegen/GC jitter alone, and each flap vanished
-    # on the next run. Real regressions on fast queries surface once
-    # they cost real time. Variance-class-tagged queries use their
-    # measured class envelope instead of the default 1.5x; envelope
-    # status rides on each record so the class absolution is explicit.
-    def _envelope(name: str) -> float:
-        cls = QUERY_VARIANCE.get(name)
-        return VARIANCE_CLASSES[cls]["ratio"] if cls else 1.5
-
-    def _flag(d: float, ratio=None) -> dict:
-        return {
-            name: {"prev": old[name], "now": now, "vs": label}
-            for name, now in timings.items()
-            if name in old
-            and now > (ratio or _envelope(name)) * d * old[name]
-            and now - d * old[name] > 0.3
-            and now > 1.0
+def tripwire(old: dict, new: dict) -> dict:
+    """Flags of run ``new`` against the earlier run ``old`` (both in the
+    BENCH_RUN.json layout): {name: {counter: [before, now]}} for each
+    query whose rows differ or whose jobs or exchanges rose. A run at
+    another sf is not compared."""
+    if old.get("sf") != new["sf"]:
+        return {}
+    before = old.get("records", {})
+    flags = {}
+    for name, rec in new["records"].items():
+        if name not in before:
+            continue
+        was, now = _counters(before[name]), _counters(rec)
+        changed = {
+            key: [was[key], now[key]]
+            for key in was
+            if now[key] > was[key] or (key == "rows" and now[key] != was[key])
         }
+        if changed:
+            flags[name] = changed
+    return flags
 
-    flagged = _flag(drift)
-    # Tagged flaps INSIDE their class envelope (would trip at 1.5x but
-    # not at the envelope): explained with the class tag, never silent.
-    within_envelope = {
-        name: {
-            **rec,
-            "variance_class": QUERY_VARIANCE[name],
-            "why": VARIANCE_CLASSES[QUERY_VARIANCE[name]]["why"],
-        }
-        for name, rec in _flag(drift, ratio=1.5).items()
-        if name not in flagged and name in QUERY_VARIANCE
+
+def summary(run: dict) -> dict:
+    """The printed line of ``run``: bounded whatever the number of
+    records and flags (the full records stay in BENCH_RUN.json)."""
+    recs, flags = run["records"], run["regressions"]
+    slowest = sorted(recs, key=lambda n: recs[n]["best_s"], reverse=True)
+    return {
+        "metric": run["metric"],
+        "value": run["value"],
+        "unit": run["unit"],
+        "sf": run["sf"],
+        "queries": {n: recs[n]["best_s"] for n in slowest[:LINE_QUERIES]},
+        "regressions": dict(list(flags.items())[:LINE_FLAGS]),
+        "flagged": len(flags),
     }
-    # Drift normalization can mask a REAL slowdown in a widely-shared
-    # code path (e.g. load_table): a uniform >=1.25x shift reads exactly
-    # like a reboot. Queries that would have been flagged at drift=1.0
-    # but were absolved by the drift ratio are therefore reported in an
-    # advisory field — suppressed from "regressions", never silent
-    # (ADVICE r9 #1).
-    suppressed = {
-        k: v
-        for k, v in _flag(1.0).items()
-        if k not in flagged and k not in within_envelope
-    } if drift != 1.0 else {}
-    explained = {
-        name: {**rec, "why": KNOWN_SLOWER[name]}
-        for name, rec in flagged.items()
-        if name in KNOWN_SLOWER
-    }
-    explained.update(within_envelope)
-    unexplained = {k: v for k, v in flagged.items() if k not in KNOWN_SLOWER}
-    return unexplained, explained, suppressed, drift
 
 
-def _min_merge_baseline(
-    timings: dict[str, float], sf_val, here: str
-) -> dict[str, float] | None:
-    """The BENCH_LOCAL.json convention, enforced in-process (VERDICT
-    r11 #4 — it lived in prose and was violated by running the tool):
-    BENCH_LOCAL carries the per-query MIN across idle runs, floored by
-    the explicit REBASES table, and the raw run goes to BENCH_RUN.json
-    instead. Returns the merged map, or None when the existing
-    baseline records a DIFFERENT scale factor (a quick sf0.01 run must
-    not replace the sf0.1 baseline — leave BENCH_LOCAL untouched).
-
-    Baseline entries for queries not timed this run survive only while
-    they remain in HEADLINE, so deliberately retired queries age out
-    but a partial run cannot drop live baselines."""
-    local = os.path.join(here, "BENCH_LOCAL.json")
-    existing: dict[str, float] = {}
-    if os.path.exists(local):
-        existing = _artifact_queries(local, sf_val) or {}
-        if not existing and _artifact_queries(local) is not None:
-            return None  # readable baseline, different sf
-    merged = {
-        name: v for name, v in existing.items() if name in HEADLINE
-    }
-    for name, now in timings.items():
-        if name in REBASES:
-            # A rebased query is pinned at EXACTLY its recorded floor,
-            # in both directions: the stale pre-rebase min is
-            # unreachable, anything above the floor is a slow run, and
-            # a genuinely faster observation earns a new REBASES entry
-            # with evidence (the SCALE.md act), never a silent write.
-            # Pinning (rather than max-clamping min(existing, now))
-            # makes the SEED path agree with the existing-file path —
-            # ADVICE r12: seeding a fresh BENCH_LOCAL from a slow run
-            # stored a value the tripwire's working<=floor then
-            # rejected.
-            base = REBASES[name]
-        else:
-            base = min(existing.get(name, float("inf")), now)
-        merged[name] = round(base, 3)
-    return merged
-
-
-def main() -> None:
+def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    spark = build_session(app_name="kafka_s3_etl_spark_bench")
-
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
     catalog = all_queries()
-    names = [n for n in HEADLINE if n in catalog]
+    subset = bool(names)
+    names = names or HEADLINE
+    unknown = [n for n in names if n not in catalog]
+    if unknown:
+        raise SystemExit(f"not in the catalog: {' '.join(unknown)}")
+    # Read the baseline before measuring: a full run overwrites it.
+    baseline = {}
+    if os.path.exists(RUN_FILE):
+        with open(RUN_FILE) as fh:
+            baseline = json.load(fh)
 
+    spark = build_session(app_name="kafka_s3_etl_spark_bench")
     # Warm up the JVM + parquet footers + Python UDF workers once so
-    # timings measure the query, not process startup (spawning the 32
-    # Arrow workers costs ~4s and would otherwise be billed to the first
-    # pandas-UDF query).
+    # timings measure the query, not process startup (spawning the Arrow
+    # workers would otherwise be billed to the first pandas-UDF query).
     catalog["q_scan_project"].fn(spark, sf_dir).count()
     _warm_python_workers(spark)
     _warm_streaming(spark)
 
-    # Best of 2 runs per query: the first execution of each plan pays
-    # one-time whole-stage-codegen compilation (0.5-2s of JIT noise that
-    # varies run to run); the second run measures the query itself.
-    timings: dict[str, float] = {}
+    records = {}
     for name in names:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            catalog[name].fn(spark, sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-
-    total = round(sum(timings.values()), 3)
-    # Baseline lookup must happen BEFORE this run overwrites
-    # BENCH_LOCAL.json, or the tripwire would compare a run to itself.
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    unexplained, explained, suppressed, drift = _regressions(
-        timings, sf=sf_val
-    )
-    payload = {
+        records[name] = measure(spark, name, catalog[name].fn, sf_dir)
+        if subset:
+            print(json.dumps({"query": name, **records[name]}), flush=True)
+    run = {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(r["best_s"] for r in records.values()), 3),
         "unit": "sec",
-        "queries": timings,
-        "sf": sf_val,
-        "regressions": unexplained,
-        "regressions_explained": explained,
+        "sf": sf,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "records": records,
     }
-    if drift != 1.0:
-        payload["env_drift_median_ratio"] = round(drift, 3)
-        payload["regressions_suppressed_by_drift"] = suppressed
-    payload["variance_classes"] = {
-        n: QUERY_VARIANCE[n] for n in timings if n in QUERY_VARIANCE
-    }
-    # Full per-query map goes to committed files; the driver's
-    # BENCH_r{N}.json only captures the last 2000 chars of stdout, and
-    # the 90-query line outgrew that window in r5 (VERDICT r5 #2). The
-    # printed line keeps the contract keys but trims "queries" to the
-    # slowest 25 so it stays parseable inside the tail capture.
-    # The RAW run goes to BENCH_RUN.json; BENCH_LOCAL.json is the
-    # min-merged baseline the tripwire compares against, maintained
-    # in-process so running the tool can never loosen it (VERDICT r11
-    # #4 — the prose convention was violated two rounds running).
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "BENCH_RUN.json"), "w") as fh:
-        json.dump(payload, fh)
-        fh.write("\n")
-    merged = _min_merge_baseline(timings, sf_val, here)
-    if merged is not None:
-        baseline = {
-            "metric": "headline_queries_min_baseline",
-            "value": round(sum(merged.values()), 3),
-            "unit": "sec",
-            "queries": merged,
-            "sf": sf_val,
-            "rebases": REBASES,
-            "raw_run": "BENCH_RUN.json",
-        }
-        with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as fh:
-            json.dump(baseline, fh)
+    run["regressions"] = tripwire(baseline, run)
+    if not subset:
+        with open(RUN_FILE, "w") as fh:
+            json.dump(run, fh, indent=1)
             fh.write("\n")
-    slowest = dict(
-        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:25]
-    )
-    # Bound EVERY catalog-growing payload on the printed line, not just
-    # "queries": r13's driver-side parse failure cost a full round of
-    # per-query PERF comparison (VERDICT r14 #6) because the diagnostic
-    # dicts (regressions / suppressed / variance_classes) grow with the
-    # catalog and a noisy host can flag dozens of entries at once. The
-    # complete, untruncated payload is always in BENCH_RUN.json; the
-    # line carries the worst offenders plus an explicit truncation
-    # count so nothing is silently dropped.
-    def _cap(d: dict, n: int) -> dict:
-        if not isinstance(d, dict) or len(d) <= n:
-            return d
-        worst = sorted(
-            d.items(),
-            key=lambda kv: kv[1].get("now", 0) / max(kv[1].get("prev", 1e-9), 1e-9)
-            if isinstance(kv[1], dict)
-            else 0,
-            reverse=True,
-        )[:n]
-        return dict(worst)
-
-    compact = {
-        **payload,
-        "queries": {k: timings[k] for k in timings if k in slowest},
-        "queries_total_count": len(timings),
-        "queries_full": "BENCH_RUN.json",
-        "regressions": _cap(unexplained, 10),
-        "regressions_explained": _cap(explained, 8),
-    }
-    for key, full in (
-        ("regressions", unexplained),
-        ("regressions_explained", explained),
-    ):
-        if len(compact[key]) < len(full):
-            compact[key + "_truncated"] = len(full) - len(compact[key])
-    if "regressions_suppressed_by_drift" in payload:
-        compact["regressions_suppressed_by_drift"] = _cap(suppressed, 8)
-        if len(compact["regressions_suppressed_by_drift"]) < len(suppressed):
-            compact["regressions_suppressed_truncated"] = len(suppressed) - 8
-    # Variance-class tags only for queries actually named on the line.
-    named = set(compact["queries"]) | set(compact["regressions"]) | set(
-        compact["regressions_explained"]
-    )
-    compact["variance_classes"] = {
-        n: QUERY_VARIANCE[n] for n in named if n in QUERY_VARIANCE
-    }
-    print(json.dumps(compact))
+    print(json.dumps(summary(run)))
     spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

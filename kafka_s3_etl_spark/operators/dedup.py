@@ -584,6 +584,13 @@ def connected_components_star(
     (chains of pairwise near-dups); for shallow boilerplate cliques the
     label-propagation loop does fewer shuffles per round.
 
+    Skew: both stars take the neighbourhood minimum with a window over
+    ``src``, so a hub's whole neighbourhood goes through one window task,
+    with no partial aggregation and no AQE skew split (a grouped min
+    would have both). On hub-heavy graphs, where edges grow faster than
+    nodes, that one task bounds the round; measure tasks and the maximum
+    task time on a hub graph before relying on this for such closures.
+
     Returns (doc_id, cluster_id) with cluster_id = the component's
     smallest doc_id, exactly like ``connected_components``.
     """

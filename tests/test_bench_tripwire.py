@@ -1,10 +1,14 @@
-"""The bench regression tripwire must read the driver's BENCH_r{N}
-artifacts (which wrap this script's JSON line under "parsed") and flag
-only real slowdowns — >1.5x AND >0.3s, filtering sub-second codegen/GC
-noise. Pure-Python: no Spark session."""
+"""bench.py's per-query record and its counter tripwire.
+
+The tripwire compares exact counters (rows, jobs, exchanges) with the
+previous BENCH_RUN.json at the same sf; the pure-Python tests below need
+no Spark session. The last test measures two real queries on the shared
+session.
+"""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -13,265 +17,104 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench  # noqa: E402
 
 
-def test_previous_bench_reads_driver_wrapped_artifact():
-    prev = bench._previous_bench()
-    assert prev is not None, "repo carries BENCH_r{N}.json artifacts"
-    label, queries = prev
-    assert label.startswith("r") and len(queries) > 10
-    assert all(isinstance(v, float) for v in queries.values())
-
-
-def test_regressions_flags_only_real_slowdowns():
-    _, prev = bench._previous_bench()
-    sample = dict(list(prev.items())[:8])
-
-    # identical -> clean, no drift
-    assert bench._regressions(dict(sample)) == ({}, {}, {}, 1.0)
-
-    # ONE query doubling while the rest hold is a real regression
-    # (drift stays 1.0: the median ratio is 1)
-    stable = dict(list(prev.items())[:12])
-    victim = max(stable, key=stable.get)  # big enough to clear floors
-    if stable[victim] > 0.7:
-        bumped = {**stable, victim: stable[victim] * 2}
-        flagged, explained, suppressed, drift = bench._regressions(bumped)
-        assert drift == 1.0 and suppressed == {}
-        both = {**flagged, **explained}
-        assert victim in both
-        assert both[victim]["prev"] == stable[victim]
-        # known-slower entries route to the explained channel
-        for k in set(both) & set(bench.KNOWN_SLOWER):
-            assert k in explained and explained[k]["why"]
-        assert not set(flagged) & set(bench.KNOWN_SLOWER)
-
-    # 2x on a tiny query (<=0.3s absolute delta) is noise, not a regression
-    tiny = {k: v for k, v in sample.items() if v <= 0.3}
-    if tiny:
-        assert bench._regressions({k: v * 2 for k, v in tiny.items()}) == (
-            {},
-            {},
-            {},
-            1.0,
-        )
-
-
-def test_uniform_environment_drift_reported_not_flagged():
-    """A whole-boot slowdown (host reboot / co-tenant — r9 proved one
-    with a stash A/B: identical code, ~1.5x across the board) must
-    surface as ONE reported drift ratio, not dozens of per-query
-    regression flags; a query slowing MORE than the drift still trips."""
-    _, prev = bench._previous_bench()
-    sample = {
-        k: v for k, v in list(prev.items())[:20] if v >= 0.2
+def _rec(rows=100, build_jobs=0, exec_jobs=2, exchanges=1, best_s=0.5) -> dict:
+    return {
+        "best_s": best_s,
+        "build_s": 0.1,
+        "plan_s": 0.01,
+        "exec_s": best_s - 0.1,
+        "build_jobs": build_jobs,
+        "exec_jobs": exec_jobs,
+        "stages": 3,
+        "tasks": 9,
+        "shuffle_bytes": 71833,
+        "exchanges": exchanges,
+        "rows": rows,
     }
-    if len(sample) < 8:
-        return
-    drifted = {k: v * 2 for k, v in sample.items()}
-    flagged, explained, suppressed, drift = bench._regressions(drifted)
-    assert abs(drift - 2.0) < 1e-9
-    assert flagged == {} and explained == {}
-    # ...but the absolution is never silent: everything the 1.5x/0.3s
-    # gate would have flagged at drift=1.0 lands in the advisory field
-    # (ADVICE r9 #1 — a real slowdown in a shared code path reads like
-    # drift; the advisory list is how a reviewer tells them apart).
-    assert any(
-        sample[k] * 2 > 1.0 and sample[k] > 0.3 for k in sample
-    ) == bool(suppressed)
-    for name, rec in suppressed.items():
-        assert rec["now"] == drifted[name]
-
-    # one query 4x while the rest are 2x: flagged even under drift
-    victim = max(sample, key=sample.get)
-    if sample[victim] * 4 > 1.0 and sample[victim] > 0.3:
-        drifted[victim] = sample[victim] * 4
-        flagged, explained, suppressed, drift = bench._regressions(drifted)
-        assert victim in {**flagged, **explained}
 
 
-def test_artifact_queries_salvages_truncated_r5_artifact():
-    """The driver-written BENCH_r05.json has "parsed": null and a JSON
-    line whose head fell outside the 2000-char tail window. Recovery
-    must still yield the per-query pairs the window kept (VERDICT r5
-    #1) instead of returning None and silently disarming the tripwire."""
-    path = os.path.join(os.path.dirname(bench.__file__), "BENCH_r05.json")
-    if not os.path.exists(path):  # artifact set varies by checkout
-        return
-    queries = bench._artifact_queries(path)
-    assert queries is not None and len(queries) >= 10
-    assert queries["s_cdc_upsert"] == 2.876  # from the intact tail end
-    assert all(isinstance(v, float) for v in queries.values())
+def _run(records: dict, sf=0.1) -> dict:
+    return {"sf": sf, "records": records}
 
 
-def test_previous_bench_never_returns_empty_map(tmp_path):
-    """An unrecoverable newest artifact must fall back to the next
-    older one, not return None/empty; a BENCH_LOCAL.json from a prior
-    run outranks the driver artifacts."""
-    (tmp_path / "BENCH_r09.json").write_text('{"parsed": null, "tail": "x"}')
-    (tmp_path / "BENCH_r08.json").write_text(
-        '{"parsed": {"queries": {"q_a": 1.0, "q_b": 2.0}}}'
-    )
-    label, queries = bench._previous_bench(str(tmp_path))
-    assert label == "r8" and queries == {"q_a": 1.0, "q_b": 2.0}
-
-    (tmp_path / "BENCH_LOCAL.json").write_text('{"queries": {"q_c": 3.0}}')
-    label, queries = bench._previous_bench(str(tmp_path))
-    assert label == "r-local" and queries == {"q_c": 3.0}
-
-
-def test_min_merge_baseline_cannot_loosen(tmp_path):
-    """Running bench.py must never loosen BENCH_LOCAL (VERDICT r11 #4:
-    the prose convention was violated two rounds running by the
-    round-end raw-run overwrite). The in-process merge takes the
-    per-query min, floors it at the explicit REBASES table, refuses to
-    merge across scale factors, and ages out retired queries."""
-    import json
-
-    (tmp_path / "BENCH_LOCAL.json").write_text(
-        json.dumps(
-            {
-                "sf": 0.1,
-                "queries": {
-                    "q_filter_conj": 0.2,
-                    "q_agg_group": 0.5,
-                    "q_sim_pq": 2.209,
-                    "q_ghost_retired": 9.9,
-                },
-            }
-        )
-    )
-    timings = {
-        "q_filter_conj": 0.3,  # slower -> baseline keeps 0.2
-        "q_agg_group": 0.4,  # faster -> tightens to 0.4
-        "q_sim_pq": 1.3,  # faster, but REBASED floor holds 2.209
-        "q_rollup": 0.7,  # new -> enters at raw
+def test_identical_records_flag_nothing():
+    recs = {"q_a": _rec(), "q_b": _rec(rows=7, build_jobs=3), "q_c": _rec()}
+    assert bench.tripwire(_run(recs), _run(dict(recs))) == {}
+    # wall-clock and shuffle bytes are reported, never compared
+    slower = {
+        n: {**r, "best_s": 9.0, "exec_s": 8.9, "shuffle_bytes": 71754}
+        for n, r in recs.items()
     }
-    merged = bench._min_merge_baseline(timings, 0.1, str(tmp_path))
-    assert merged == {
-        "q_filter_conj": 0.2,
-        "q_agg_group": 0.4,
-        "q_sim_pq": bench.REBASES["q_sim_pq"],
-        "q_rollup": 0.7,
+    assert bench.tripwire(_run(recs), _run(slower)) == {}
+    # fewer jobs or exchanges is not a flag; a query new to the run is not either
+    leaner = {**recs, "q_a": _rec(exec_jobs=1, exchanges=0), "q_new": _rec()}
+    assert bench.tripwire(_run(recs), _run(leaner)) == {}
+
+
+def test_one_more_job_or_exchange_or_changed_rows_flags_the_query():
+    old = _run({"q_a": _rec(), "q_b": _rec(), "q_c": _rec(), "q_d": _rec()})
+    new = _run(
+        {
+            "q_a": _rec(build_jobs=1),  # one localCheckpoint more
+            "q_b": _rec(exchanges=2),
+            "q_c": _rec(rows=99),
+            "q_d": _rec(),
+        }
+    )
+    assert bench.tripwire(old, new) == {
+        "q_a": {"jobs": [2, 3]},
+        "q_b": {"exchanges": [1, 2]},
+        "q_c": {"rows": [100, 99]},
     }
-    # ghost (not in HEADLINE) aged out; live-but-untimed entries survive
-    assert "q_ghost_retired" not in merged
-    merged2 = bench._min_merge_baseline(
-        {"q_agg_group": 0.45}, 0.1, str(tmp_path)
+
+
+def test_baseline_at_another_sf_is_not_compared():
+    old = _run({"q_a": _rec(rows=1)}, sf=0.01)
+    new = _run({"q_a": _rec(rows=1000, exec_jobs=9)}, sf=0.1)
+    assert bench.tripwire(old, new) == {}
+    # an empty baseline (no earlier run) compares nothing either
+    assert bench.tripwire({}, new) == {}
+
+
+def test_printed_line_for_400_records_stays_bounded():
+    # 32-char names: longer than any catalog name
+    names = [f"q_synthetic_entry_of_length_{i:04d}" for i in range(400)]
+    old = _run({n: _rec() for n in names})
+    new = _run(
+        {
+            n: _rec(rows=123456789, build_jobs=40, exchanges=12, best_s=100.0 + i)
+            for i, n in enumerate(names)
+        }
     )
-    assert merged2["q_filter_conj"] == 0.2 and merged2["q_agg_group"] == 0.45
-    # an sf0.01 run must not replace the sf0.1 baseline
-    assert bench._min_merge_baseline(timings, 0.01, str(tmp_path)) is None
-    # no existing baseline -> raw run seeds it (with floors)
-    seeded = bench._min_merge_baseline(timings, 0.1, str(tmp_path / "x"))
-    assert seeded["q_sim_pq"] == bench.REBASES["q_sim_pq"]
-
-
-def test_committed_bench_local_never_loosened():
-    """The working-tree BENCH_LOCAL.json must never carry a looser
-    per-query baseline than the committed one, except through an entry
-    in bench.REBASES (the explicit-evidence act recorded in SCALE.md).
-    This is the guard that catches the r10/r11 failure mode — a raw
-    run wholesale-replacing the min baseline — before it is committed."""
-    import json
-    import subprocess
-
-    here = os.path.dirname(bench.__file__)
-    res = subprocess.run(
-        ["git", "show", "HEAD:BENCH_LOCAL.json"],
-        capture_output=True,
-        text=True,
-        cwd=here,
-    )
-    if res.returncode != 0:  # fresh clone without the artifact
-        return
-    committed = json.loads(res.stdout).get("queries", {})
-    with open(os.path.join(here, "BENCH_LOCAL.json")) as fh:
-        working = json.load(fh).get("queries", {})
-    loosened = {
-        name: (committed[name], now)
-        for name, now in working.items()
-        if name in committed
-        and name not in bench.REBASES
-        and now > committed[name] + 1e-9
+    new.update(metric="headline_queries_total", value=123456.789, unit="sec")
+    new["regressions"] = bench.tripwire(old, new)
+    assert len(new["regressions"]) == 400
+    line = json.dumps(bench.summary(new))
+    assert len(line) < 2000, len(line)
+    parsed = json.loads(line)
+    assert set(parsed) == {
+        "metric", "value", "unit", "sf", "queries", "regressions", "flagged",
     }
-    assert not loosened, (
-        "BENCH_LOCAL baselines loosened without a REBASES record "
-        f"(min-merge violated): {loosened}"
-    )
-    for name, floor in bench.REBASES.items():
-        if name in working:
-            assert working[name] <= floor + 1e-9, (
-                f"{name} above its recorded rebase floor: "
-                f"{working[name]} > {floor}"
-            )
+    assert len(parsed["queries"]) == 25 and parsed["flagged"] == 400
+    # the slowest queries are the ones named
+    assert min(parsed["queries"].values()) == 100.0 + 375
 
 
-def test_variance_envelope_consulted_by_flag_logic(tmp_path, monkeypatch):
-    """A variance-class-tagged query flapping INSIDE its envelope lands
-    in regressions_explained with the class tag; exceeding the envelope
-    still trips as a real regression (VERDICT r11 #5)."""
-    import json
+def test_record_splits_build_and_exec_jobs(spark, sf_dir):
+    from kafka_s3_etl_spark.plans.registry import all_queries
 
-    assert set(bench.QUERY_VARIANCE.values()) <= set(bench.VARIANCE_CLASSES)
-    (tmp_path / "BENCH_LOCAL.json").write_text(
-        json.dumps(
-            {
-                "sf": 0.1,
-                "queries": {
-                    "q_sim_pq": 2.0,
-                    "q_agg_group": 2.0,
-                    "q_a": 1.0,
-                    "q_b": 1.0,
-                    "q_c": 1.0,
-                    "q_d": 1.0,
-                    "q_e": 1.0,
-                    "q_f": 1.0,
-                },
-            }
-        )
+    catalog = all_queries()
+    lazy = bench.measure(spark, "q_filter_conj", catalog["q_filter_conj"].fn, sf_dir)
+    assert lazy["build_jobs"] == 0 and lazy["exec_jobs"] >= 1
+    assert lazy["rows"] == catalog["q_filter_conj"].fn(spark, sf_dir).count()
+    assert set(lazy) == {
+        "best_s", "build_s", "plan_s", "exec_s", "build_jobs", "exec_jobs",
+        "stages", "tasks", "shuffle_bytes", "exchanges", "rows",
+    }
+    # q_resample_ffill localCheckpoints inside its builder
+    eager = bench.measure(
+        spark, "q_resample_ffill", catalog["q_resample_ffill"].fn, sf_dir
     )
-    orig = bench._previous_bench
-    monkeypatch.setattr(
-        bench,
-        "_previous_bench",
-        lambda here=None, sf=None: orig(str(tmp_path), sf),
-    )
-    base = {n: 1.0 for n in ("q_a", "q_b", "q_c", "q_d", "q_e", "q_f")}
-    # 1.8x on the scheduling-floor query (envelope 2.0): explained, tagged
-    flagged, explained, _, _ = bench._regressions(
-        {**base, "q_sim_pq": 3.6, "q_agg_group": 2.0}
-    )
-    assert "q_sim_pq" not in flagged
-    assert explained["q_sim_pq"]["variance_class"] == "scheduling-floor"
-    # same ratio on an untagged query: real flag
-    flagged2, _, _, _ = bench._regressions(
-        {**base, "q_sim_pq": 2.0, "q_agg_group": 3.6}
-    )
-    assert "q_agg_group" in flagged2
-    # 2.5x on the tagged query EXCEEDS the envelope: real flag
-    flagged3, explained3, _, _ = bench._regressions(
-        {**base, "q_sim_pq": 5.0, "q_agg_group": 2.0}
-    )
-    assert "q_sim_pq" in flagged3 and "q_sim_pq" not in explained3
-
-
-def test_previous_bench_rejects_mismatched_sf(tmp_path):
-    """A quick sf0.01 local run must not poison the sf0.1 baseline:
-    artifacts recording a different sf are skipped; malformed timing
-    values degrade to skipping the artifact, never raising."""
-    (tmp_path / "BENCH_LOCAL.json").write_text(
-        '{"sf": 0.01, "queries": {"q_a": 0.1, "q_b": 0.2}}'
-    )
-    (tmp_path / "BENCH_r07.json").write_text(
-        '{"parsed": {"sf": 0.1, "queries": {"q_a": 1.0, "q_b": 2.0}}}'
-    )
-    label, queries = bench._previous_bench(str(tmp_path), sf=0.1)
-    assert label == "r7" and queries == {"q_a": 1.0, "q_b": 2.0}
-    # without an expected sf, newest still wins (back-compat)
-    label, _ = bench._previous_bench(str(tmp_path))
-    assert label == "r-local"
-    # malformed values -> skip, don't raise
-    (tmp_path / "BENCH_LOCAL.json").write_text(
-        '{"sf": 0.1, "queries": {"q_a": "1.2s"}}'
-    )
-    label, _ = bench._previous_bench(str(tmp_path), sf=0.1)
-    assert label == "r7"
+    assert eager["build_jobs"] > 0
+    # the job group does not outlive the measurement
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
