@@ -782,7 +782,10 @@ def bfs_kstep(
     hash-matches every distance. Self-loops (added here over the full
     ``nodes`` universe) carry settled distances forward at +0 — the
     relaxation is then a single MIN(dist + step) over the edge set.
-    ``localCheckpoint`` cuts the iterative lineage.
+    Only ``edges`` (read by every round) is checkpointed; the rounds
+    stay one plan. Nothing acts between rounds and each round reads
+    ``dist`` once, so the plan grows by one join + aggregation per
+    round and the action runs all of them as one job chain.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -800,7 +803,7 @@ def bfs_kstep(
     dist = seeds.select(
         F.col(seeds.columns[0]).alias("node"),
         F.lit(0).cast("bigint").alias("dist"),
-    ).localCheckpoint()
+    )
     step = F.when(F.col("src") == F.col("dst"), 0).otherwise(1)
     for _ in range(iters):
         dist = (
@@ -813,6 +816,5 @@ def bfs_kstep(
             .groupBy("src")
             .agg(F.min(F.col("dist") + step).cast("bigint").alias("dist"))
             .select(F.col("src").alias("node"), "dist")
-            .localCheckpoint()
         )
     return dist

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_s3_etl_spark.plans.registry import register
+from kafka_s3_etl_spark.session import pinned_confs
 from kafka_s3_etl_spark.sources.tables import load_table, local_frame
 
 _LI_CENTS = "CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
@@ -191,18 +192,9 @@ def q_join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     confs["spark.sql.adaptive.forceOptimizeSkewedJoin"] = (
         "true" if SKEW_FORCE else "false"
     )
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with pinned_confs(spark, confs):
         out = joined.localCheckpoint()
         LAST_SKEW_PLAN["text"] = joined._jdf.queryExecution().toString()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return out
 
 
@@ -304,19 +296,10 @@ def x_cbo_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # planner confs are read at (lazy, cached) optimization — force it
     # under the pins, then restore (the x_bloom_filter_join discipline)
-    saved = {k: spark.conf.get(k, None) for k in _CBO_CONFS}
-    for k, v in _CBO_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with pinned_confs(spark, _CBO_CONFS):
         LAST_CBO_PLAN["text"] = (
             df._jdf.queryExecution().executedPlan().toString()
         )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return df
 
 

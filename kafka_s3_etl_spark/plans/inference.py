@@ -207,7 +207,10 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_s3_etl_spark.operators.prep import md5_int32
 
     orders = load_table(spark, sf_dir, "orders")
-    reps = orders.select(
+    # orders reads as one split here, so without the round-robin spread
+    # one task would explode and hash all _B replicates while the other
+    # cores idle. The sums are integer: partitioning cannot move them.
+    reps = orders.repartition(spark.sparkContext.defaultParallelism).select(
         F.col("o_orderpriority").alias("pri"),
         F.explode(F.sequence(F.lit(1), F.lit(_B))).alias("b"),
         F.expr(_OC).alias("c"),

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_s3_etl_spark.plans.registry import register
+from kafka_s3_etl_spark.session import pinned_confs
 from kafka_s3_etl_spark.sources.tables import load_table
 
 _N_RANGES = 8
@@ -55,10 +56,9 @@ def sorted_events_dir(spark: SparkSession, sf_dir: str) -> str:
         # parquet min/max statistics, which would defeat the entire
         # point of the sorted layout (footer-based file skipping).
         # Save/restore the session conf (house conf-pin pattern).
-        conf_key = "spark.sql.parquet.outputTimestampType"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "TIMESTAMP_MICROS")
-        try:
+        with pinned_confs(
+            spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+        ):
             (
                 load_table(spark, sf_dir, "events")
                 .repartitionByRange(_N_RANGES, "ts")
@@ -66,11 +66,6 @@ def sorted_events_dir(spark: SparkSession, sf_dir: str) -> str:
                 .write.mode("overwrite")
                 .parquet(out)
             )
-        finally:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
         _SCRATCH[key] = out
     return _SCRATCH[key]
 

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_s3_etl_spark.plans.registry import register
+from kafka_s3_etl_spark.session import pinned_confs
 from kafka_s3_etl_spark.sources.tables import load_table
 
 # ------------------------------------------------- SQL session variables
@@ -273,10 +274,7 @@ def _corrupt_layout(spark: SparkSession, sf_dir: str) -> str:
 )
 def q_read_corrupt_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _corrupt_layout(spark, sf_dir)
-    key = "spark.sql.files.ignoreCorruptFiles"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
+    with pinned_confs(spark, {"spark.sql.files.ignoreCorruptFiles": "true"}):
         # localCheckpoint materializes the read under the pinned conf
         # (ignoreCorruptFiles is read at SCAN time, not plan time —
         # same discipline as the skew cell's runtime confs) so the
@@ -295,11 +293,6 @@ def q_read_corrupt_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
         return out
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 # ------------------------------------------------- SQL table function

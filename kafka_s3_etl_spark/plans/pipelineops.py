@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_s3_etl_spark.plans.registry import register
+from kafka_s3_etl_spark.session import pinned_confs
 from kafka_s3_etl_spark.sources.tables import load_table
 
 _DEBOUNCE_US = 300_000_000  # 5 minutes
@@ -587,12 +588,8 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # scripting.enabled gates PARSING only — the returned df is an
     # ordinary plan, so set/restore around spark.sql() is leak-free on
-    # the shared session (the pinned_rocksdb_state_store discipline;
-    # ADVICE r12 flagged the bare set).
-    key = "spark.sql.scripting.enabled"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
+    # the shared session (session.pinned_confs).
+    with pinned_confs(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql("""
     BEGIN
       DECLARE n_total BIGINT;
@@ -610,11 +607,6 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
       HAVING COUNT(*) * min_denom >= n_total;
     END
     """)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 # ---------------------------------------------------- round 12, batch 80

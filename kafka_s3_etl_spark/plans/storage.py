@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_s3_etl_spark.plans.registry import register
+from kafka_s3_etl_spark.session import pinned_confs
 from kafka_s3_etl_spark.sources.tables import load_table, local_frame
 
 _O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
@@ -316,14 +317,8 @@ def x_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (lazy, cached) optimization now, under the pinned confs, then
     # restore the session exactly: the returned DataFrame keeps the
     # bloom-filtered plan, later catalog queries see a vanilla session.
-    saved = {k: spark.conf.get(k) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with pinned_confs(spark, _BLOOM_CONFS):
         df._jdf.queryExecution().executedPlan()
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     return df
 
 
@@ -403,10 +398,7 @@ _AGG_PUSH_CONFS = {
     """,
 )
 def x_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    saved = {k: spark.conf.get(k) for k in _AGG_PUSH_CONFS}
-    for k, v in _AGG_PUSH_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with pinned_confs(spark, _AGG_PUSH_CONFS):
         # the v1/v2 source choice is made when the read resolves, so
         # both the read AND the forced optimization sit inside the
         # pinned-conf window; routed through the house loader so the
@@ -420,9 +412,6 @@ def x_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("o_totalprice").alias("max_price"),
         )
         df._jdf.queryExecution().executedPlan()
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     return df
 
 

@@ -15,11 +15,16 @@ but expressed as Spark configs. Scale-minded defaults:
 * the whole-stage codegen class cache sized to 1000 classes, so a
   session that reruns its queries reuses their compiled classes instead
   of recompiling them with Janino (and re-warming the JIT) every pass.
+
+``pinned_confs`` is the one way code here changes a session conf for a
+narrow window (a stream start, a plan, a write) and puts it back.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
@@ -73,3 +78,21 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def pinned_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body of the with-block, then
+    put each key back exactly as it was: reset to its prior value if it
+    was set, unset if it was not."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -12,11 +12,19 @@ differ (see sources/kafka.py for the broker-facing builders).
 
 Every scratch directory (checkpoints, sinks, materialized sources)
 lives under one per-process root that is removed at interpreter exit.
+
+Every query starts under ``_STREAM_START_CONFS``: 8 shuffle partitions,
+and Spark's FileSystem-based checkpoint file manager, because the
+default one forks a ``readlink`` process for every checkpoint file it
+renames on a local path. Checkpoint checksums stay on (the
+``fileChecksum.enabled`` conf is left alone): the checkpoint holds the
+same files, ``.crc`` checksums included, under either manager.
 """
 
 from __future__ import annotations
 
 import atexit
+import contextlib
 import datetime
 import functools
 import glob
@@ -34,6 +42,7 @@ from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
 from kafka_s3_etl_spark.schemas import TESTDATA_SCHEMAS
+from kafka_s3_etl_spark.session import pinned_confs
 from kafka_s3_etl_spark.sources.kafka import to_kafka_value
 from kafka_s3_etl_spark.sources.tables import (
     EVENTS_LOADED_SCHEMA,
@@ -179,32 +188,42 @@ def events_then_sentinel(
     return ev.schema, src, deliveries
 
 
-class _pinned_stream_partitions:
-    """Temporarily pin spark.sql.shuffle.partitions for a stream start.
+# The session confs every run_stream query starts under. A query clones
+# its session at start, so a pin held for the start alone lasts the
+# whole run; the session gets each conf back as it was (see
+# session.pinned_confs).
+STREAM_PARTITIONS = "8"
+_STREAM_START_CONFS = {
+    # A stateful query's state-store partition count is frozen at the
+    # FIRST run of its checkpoint from this conf; under a vanilla session
+    # the default 200 means 200 state-store tasks per micro-batch for
+    # kilobytes of state (~13s of pure task overhead per query in the
+    # driver's harness). Results are partition-count-independent.
+    "spark.sql.shuffle.partitions": STREAM_PARTITIONS,
+    # Spark's default manager renames every checkpoint file (each
+    # offset, commit and source log entry, each state-store delta)
+    # through FileContext.rename, which on the local filesystem without
+    # Hadoop native IO forks a `readlink` process per rename. This one
+    # renames with File.renameTo and gives the same check-then-rename
+    # guarantee on a local path, which every runner checkpoint is
+    # (scratch_dir). Spark's checksum wrapper goes around either
+    # manager, so the checksum files are written as before.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
+}
 
-    A stateful query's state-store partition count is frozen at the
-    FIRST run of its checkpoint from this conf; under a vanilla session
-    the default 200 means 200 state-store tasks per micro-batch for
-    kilobytes of state (~13s of pure task overhead per query in the
-    driver's harness). Results are partition-count-independent; the conf
-    is restored on exit. The count is only read at query start, so the
-    narrow window is safe for sequential harnesses (tests, driver).
-    Takes the stream's DataFrame or its session."""
 
-    N = "8"
-
-    def __init__(self, df_or_spark: DataFrame | SparkSession):
-        spark = df_or_spark
-        if isinstance(df_or_spark, DataFrame):
-            spark = df_or_spark.sparkSession
-        self.conf = spark.conf
-
-    def __enter__(self) -> None:
-        self.prev = self.conf.get("spark.sql.shuffle.partitions")
-        self.conf.set("spark.sql.shuffle.partitions", self.N)
-
-    def __exit__(self, *exc: object) -> None:
-        self.conf.set("spark.sql.shuffle.partitions", self.prev)
+def _pinned_stream_start(
+    df_or_spark: DataFrame | SparkSession,
+) -> contextlib.AbstractContextManager[None]:
+    """Pin the stream-start confs on the session of a stream's DataFrame
+    (or the session itself) for a ``writeStream.start()``."""
+    spark = df_or_spark
+    if isinstance(df_or_spark, DataFrame):
+        spark = df_or_spark.sparkSession
+    return pinned_confs(spark, _STREAM_START_CONFS)
 
 
 @dataclass(frozen=True)
@@ -240,7 +259,7 @@ def run_stream(
     DataStreamWriter whose sink the caller configured (file path,
     foreachBatch, a Python data source), in which case the caller reads
     its own sink and None is returned. The runner adds the checkpoint,
-    the trigger and the shuffle-partition pin.
+    the trigger and the stream-start confs (``_STREAM_START_CONFS``).
 
     ``deliveries=None`` runs under ``Trigger.AvailableNow`` and raises
     TimeoutError if the query is still running after ``timeout_sec``
@@ -268,7 +287,7 @@ def run_stream(
     if deliveries is None:
         writer = writer.trigger(availableNow=True)
     ckpt = scratch_dir("ckpt")
-    with _pinned_stream_partitions(spark):
+    with _pinned_stream_start(spark):
         q = writer.option("checkpointLocation", ckpt).start()
     try:
         if deliveries is None:

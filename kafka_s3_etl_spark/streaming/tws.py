@@ -12,9 +12,9 @@ gap-sessionizer oracle.
 
 transformWithState requires the RocksDB state-store provider; the
 ``pinned_rocksdb_state_store`` context pins the conf for the query
-start only (same narrow-window pattern as
-``runner._pinned_stream_partitions`` — the provider class is frozen
-into the checkpoint at first start).
+start only (``session.pinned_confs``, as ``run_stream`` pins its own
+start confs — the provider class is frozen into the checkpoint at
+first start).
 
 Scale: identical to gap_sessions — state is one (s, e, n) row plus one
 timer per open key, watermark-bounded; one hash shuffle per
@@ -24,6 +24,7 @@ a 100 TB keyspace needs (the HDFS-backed default keeps state on-heap).
 
 from __future__ import annotations
 
+import contextlib
 from collections.abc import Iterator
 from typing import Any
 
@@ -36,6 +37,7 @@ from pyspark.sql.streaming.stateful_processor import (
     TimerValues,
 )
 
+from kafka_s3_etl_spark.session import pinned_confs
 from kafka_s3_etl_spark.streaming.stateful import (  # noqa: E402
     fold_gap_segments,
     sessions_frame,
@@ -95,33 +97,29 @@ class GapSessionProcessor(StatefulProcessor):
         pass
 
 
-class pinned_rocksdb_state_store:
+_ROCKSDB = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )
+}
+CHANGELOG = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+
+def pinned_rocksdb_state_store(
+    df: DataFrame,
+) -> contextlib.AbstractContextManager[None]:
     """Pin the RocksDB state-store provider for a stream start.
 
     transformWithState refuses the default HDFS-backed provider; the
     provider class is read once at query start and frozen into the
     checkpoint, so the narrow set/restore window is safe for the
-    sequential harnesses (tests, driver) exactly like
-    runner._pinned_stream_partitions."""
-
-    KEY = "spark.sql.streaming.stateStore.providerClass"
-    ROCKS = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-    def __init__(self, df: DataFrame):
-        self.conf = df.sparkSession.conf
-
-    def __enter__(self) -> None:
-        self.prev = self.conf.get(self.KEY, None)
-        self.conf.set(self.KEY, self.ROCKS)
-
-    def __exit__(self, *exc: object) -> None:
-        if self.prev is None:
-            self.conf.unset(self.KEY)
-        else:
-            self.conf.set(self.KEY, self.prev)
+    sequential harnesses (tests, driver)."""
+    return pinned_confs(df.sparkSession, _ROCKSDB)
 
 
-class pinned_rocksdb_changelog(pinned_rocksdb_state_store):
+def pinned_rocksdb_changelog(
+    df: DataFrame,
+) -> contextlib.AbstractContextManager[None]:
     """RocksDB provider + incremental CHANGELOG checkpointing: each
     micro-batch commits a small .changelog delta instead of re-uploading
     full SST snapshots — the failover-cost story a 100 TB stateful
@@ -129,23 +127,7 @@ class pinned_rocksdb_changelog(pinned_rocksdb_state_store):
     maintenance thread). Results are pinned identical to the
     non-changelog sibling by test; the flag is read at query start,
     same narrow set/restore window as the provider pin."""
-
-    CHANGELOG = (
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled"
-    )
-
-    def __enter__(self) -> None:
-        super().__enter__()
-        self.prev_changelog = self.conf.get(self.CHANGELOG, None)
-        self.conf.set(self.CHANGELOG, "true")
-
-    def __exit__(self, *exc: object) -> None:
-        if self.prev_changelog is None:
-            self.conf.unset(self.CHANGELOG)
-        else:
-            self.conf.set(self.CHANGELOG, self.prev_changelog)
-        super().__exit__(*exc)
+    return pinned_confs(df.sparkSession, {**_ROCKSDB, CHANGELOG: "true"})
 
 
 def gap_sessions_tws(events: DataFrame, gap_minutes: int = 10) -> DataFrame:

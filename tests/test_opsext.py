@@ -68,15 +68,13 @@ def test_state_metadata_matches_statestore(spark, sf_dir):
     reads: same operator, the engine's pinned partition count, and the
     single availableNow batch."""
     from kafka_s3_etl_spark.plans.execution import _STATESTORE_CKPT
-    from kafka_s3_etl_spark.streaming.runner import (
-        _pinned_stream_partitions,
-    )
+    from kafka_s3_etl_spark.streaming.runner import STREAM_PARTITIONS
 
     rows = _CAT["x_state_metadata_scan"].fn(spark, sf_dir).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r.operator_name == "stateStoreSave"
-    assert r.num_partitions == int(_pinned_stream_partitions.N)
+    assert r.num_partitions == int(STREAM_PARTITIONS)
     assert r.min_batch_id == 0 and r.max_batch_id == 0
     # and the checkpoint it describes is the cached one
     assert sf_dir in _STATESTORE_CKPT

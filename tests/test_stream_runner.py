@@ -94,6 +94,45 @@ def test_run_stream_raises_when_the_eviction_batch_is_missing(spark, tmp_path):
     assert runner.LAST_RUN.progress[-1]["numInputRows"] == 0  # the eviction batch
 
 
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_MANAGERS = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+@pytest.mark.parametrize(
+    "prior", [None, _MANAGERS + "FileContextBasedCheckpointFileManager"]
+)
+def test_streams_run_under_the_filesystem_checkpoint_manager(
+    spark, tmp_path, prior
+):
+    """Every micro-batch of a run_stream query runs with the
+    FileSystem-based checkpoint manager (the default one forks a
+    ``readlink`` per checkpoint rename on a local path); the session
+    gets the key back as it was, unset or set; and the stateful run's
+    checkpoint still holds the state-store checksum file of every
+    partition."""
+    t0 = datetime.datetime(2024, 1, 1)
+    src = str(tmp_path / "src")
+    rows = [(t0 + datetime.timedelta(seconds=i),) for i in range(20)]
+    spark.createDataFrame(rows, "ts timestamp").coalesce(1).write.parquet(src)
+    seen = []
+
+    def record(batch_df, batch_id: int) -> None:
+        seen.append(batch_df.sparkSession.conf.get(_MANAGER_KEY, None))
+        batch_df.write.format("noop").mode("overwrite").save()
+
+    if prior is not None:
+        spark.conf.set(_MANAGER_KEY, prior)
+    try:
+        run_stream(_window_counts(spark, src).writeStream.foreachBatch(record))
+        assert spark.conf.get(_MANAGER_KEY, None) == prior
+    finally:
+        spark.conf.unset(_MANAGER_KEY)
+    assert seen and set(seen) == {_MANAGERS + "FileSystemBasedCheckpointFileManager"}
+    state = os.path.join(runner.LAST_RUN.checkpoint, "state", "0")
+    for p in range(int(runner.STREAM_PARTITIONS)):
+        assert os.path.isfile(os.path.join(state, str(p), "1.delta.crc")), p
+
+
 def test_check_drained_raises_when_no_batch_took_the_delivery(tmp_path):
     class _Query:
         name, id = "idle_q", "0"

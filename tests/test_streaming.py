@@ -133,7 +133,7 @@ def test_checkpoint_recovery_after_midstream_crash_is_exactly_once(
     from kafka_s3_etl_spark.sources.tables import load_table
     from kafka_s3_etl_spark.streaming.runner import (
         _await_or_fail,
-        _pinned_stream_partitions,
+        _pinned_stream_start,
     )
 
     src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
@@ -154,7 +154,7 @@ def test_checkpoint_recovery_after_midstream_crash_is_exactly_once(
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        with _pinned_stream_partitions(df):
+        with _pinned_stream_start(df):
             return (
                 df.writeStream.foreachBatch(apply)
                 .trigger(availableNow=True)
@@ -225,7 +225,7 @@ def test_chained_windows_runs_two_stateful_operators(spark):
     from kafka_s3_etl_spark.streaming.jobs import chained_window_counts
     from kafka_s3_etl_spark.streaming.runner import (
         _await_or_fail,
-        _pinned_stream_partitions,
+        _pinned_stream_start,
         scratch_dir,
     )
 
@@ -244,7 +244,7 @@ def test_chained_windows_runs_two_stateful_operators(spark):
     stream = spark.readStream.schema(schema).parquet(src)
     agg = chained_window_counts(stream)
     name = f"mem_{uuid.uuid4().hex[:10]}"
-    with _pinned_stream_partitions(agg):
+    with _pinned_stream_start(agg):
         q = (
             agg.writeStream.outputMode("append")
             .format("memory")
@@ -279,7 +279,7 @@ def test_stateful_aggregation_state_survives_restart(spark, tmp_path):
 
     from kafka_s3_etl_spark.streaming.runner import (
         _await_or_fail,
-        _pinned_stream_partitions,
+        _pinned_stream_start,
     )
 
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
@@ -289,7 +289,7 @@ def test_stateful_aggregation_state_survives_restart(spark, tmp_path):
         name = f"rec_{uuid.uuid4().hex[:8]}"
         df = spark.readStream.schema("id long, g long").parquet(src)
         agg = df.groupBy("g").count()
-        with _pinned_stream_partitions(agg):
+        with _pinned_stream_start(agg):
             q = (
                 agg.writeStream.outputMode("complete")
                 .format("memory")
@@ -472,7 +472,7 @@ def test_pyds_stream_restart_from_checkpoint_no_dup_no_loss(spark):
     from kafka_s3_etl_spark.shiplib import ensure_workers_can_import
     from kafka_s3_etl_spark.sources.pyds import register_python_sources
     from kafka_s3_etl_spark.streaming.runner import (
-        _pinned_stream_partitions,
+        _pinned_stream_start,
     )
 
     ensure_workers_can_import(spark)
@@ -490,7 +490,7 @@ def test_pyds_stream_restart_from_checkpoint_no_dup_no_loss(spark):
             .option("cursor_path", f"{ckpt}/graft_range.cursor")
             .load()
         )
-        with _pinned_stream_partitions(stream):
+        with _pinned_stream_start(stream):
             q = (
                 stream.select("id")
                 .writeStream.outputMode("append")
@@ -524,7 +524,7 @@ def test_session_timeout_state_survives_restart(spark, sf_dir, tmp_path):
 
     from kafka_s3_etl_spark.sources.tables import load_table
     from kafka_s3_etl_spark.streaming.runner import (
-        _pinned_stream_partitions,
+        _pinned_stream_start,
     )
     from kafka_s3_etl_spark.streaming.stateful import gap_sessions
 
@@ -556,7 +556,7 @@ def test_session_timeout_state_survives_restart(spark, sf_dir, tmp_path):
     def start():
         stream = spark.readStream.schema(ev.schema).parquet(str(src))
         sessions = gap_sessions(stream)
-        with _pinned_stream_partitions(sessions):
+        with _pinned_stream_start(sessions):
             return (
                 sessions.writeStream.outputMode("append")
                 .format("parquet")
@@ -635,7 +635,7 @@ def test_stream_join_state_survives_restart(spark, sf_dir, tmp_path):
         _purchase_followups,
     )
     from kafka_s3_etl_spark.streaming.runner import (
-        _pinned_stream_partitions,
+        _pinned_stream_start,
     )
 
     ev = load_table(spark, sf_dir, "events")
@@ -669,7 +669,7 @@ def test_stream_join_state_survives_restart(spark, sf_dir, tmp_path):
         joined = _purchase_followups(stream, stream, "inner").select(
             "a_id", "b_id"
         )
-        with _pinned_stream_partitions(joined):
+        with _pinned_stream_start(joined):
             return (
                 joined.writeStream.outputMode("append")
                 .format("parquet")
@@ -801,11 +801,11 @@ def test_gap_sessions_rocksdb_changelog_checkpointing(spark):
     import uuid
 
     from kafka_s3_etl_spark.streaming.runner import (
-        _pinned_stream_partitions,
+        _pinned_stream_start,
         scratch_dir,
     )
     from kafka_s3_etl_spark.streaming.stateful import gap_sessions
-    from kafka_s3_etl_spark.streaming.tws import pinned_rocksdb_changelog
+    from kafka_s3_etl_spark.streaming.tws import CHANGELOG, pinned_rocksdb_changelog
 
     base = datetime.datetime(2024, 1, 1, 0, 0, 0)
     later = base + datetime.timedelta(hours=2)
@@ -825,7 +825,7 @@ def test_gap_sessions_rocksdb_changelog_checkpointing(spark):
     sessions = gap_sessions(stream)
     ckpt = scratch_dir("rockslog_ckpt")
     name = f"rlog_{uuid.uuid4().hex[:10]}"
-    with pinned_rocksdb_changelog(sessions), _pinned_stream_partitions(
+    with pinned_rocksdb_changelog(sessions), _pinned_stream_start(
         sessions
     ):
         q = (
@@ -844,8 +844,7 @@ def test_gap_sessions_rocksdb_changelog_checkpointing(spark):
     )
     assert logs, "no .changelog files — incremental checkpointing did not engage"
     # conf restored after the context
-    key = pinned_rocksdb_changelog.CHANGELOG
-    assert spark.conf.get(key, "false") == "false"
+    assert spark.conf.get(CHANGELOG, "false") == "false"
 
 
 def test_statestore_reader_reads_rocksdb_checkpoint(spark):
@@ -859,7 +858,7 @@ def test_statestore_reader_reads_rocksdb_checkpoint(spark):
     import uuid
 
     from kafka_s3_etl_spark.streaming.runner import (
-        _pinned_stream_partitions,
+        _pinned_stream_start,
         scratch_dir,
     )
     from kafka_s3_etl_spark.streaming.tws import pinned_rocksdb_state_store
@@ -876,7 +875,7 @@ def test_statestore_reader_reads_rocksdb_checkpoint(spark):
     )
     ckpt = scratch_dir("ssrocks_ckpt")
     name = f"ssr_{uuid.uuid4().hex[:10]}"
-    with pinned_rocksdb_state_store(agg), _pinned_stream_partitions(agg):
+    with pinned_rocksdb_state_store(agg), _pinned_stream_start(agg):
         q = (
             agg.writeStream.outputMode("update")
             .format("memory")
@@ -907,7 +906,7 @@ def test_statestore_reader_batchid_time_travel(spark):
     import uuid
 
     from kafka_s3_etl_spark.streaming.runner import (
-        _pinned_stream_partitions,
+        _pinned_stream_start,
         scratch_dir,
     )
 
@@ -938,7 +937,7 @@ def test_statestore_reader_batchid_time_travel(spark):
     agg = stream.groupBy("k").agg(F.sum("v").alias("s"))
     ckpt = scratch_dir("sstt_ckpt")
     name = f"tt_{uuid.uuid4().hex[:10]}"
-    with _pinned_stream_partitions(agg):
+    with _pinned_stream_start(agg):
         q = (
             agg.writeStream.outputMode("update")
             .format("memory")
