@@ -55,7 +55,6 @@ def sorted_events_dir(spark: SparkSession, sf_dir: str) -> str:
         # Write micros, not Spark's default INT96: INT96 carries NO
         # parquet min/max statistics, which would defeat the entire
         # point of the sorted layout (footer-based file skipping).
-        # Save/restore the session conf (house conf-pin pattern).
         with pinned_confs(
             spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
         ):
