@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kafka_s3_etl_spark.operators.graph import fixpoint, symmetrize_pairs
+
 MINHASH_K = 16  # number of hash functions
 LSH_BANDS = 4  # bands of r = K/bands rows each
 SHINGLE_N = 3  # word-shingle width
@@ -504,20 +506,15 @@ def connected_components(
     keep doc_id == cluster_id (the smallest member of each cluster).
     """
     if max_iter < 1:
-        # A zero-iteration run would fall through to the non-convergence
-        # branch with no round ever executed (and `changed` unbound).
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     # Both orientations in ONE pass over the pair lineage: the
     # union-with-swap shape executed the (often expensive,
     # un-checkpointed) pairs pipeline twice — see
     # operators/graph.py::symmetrize_pairs.
-    from kafka_s3_etl_spark.operators.graph import symmetrize_pairs
-
     edges = symmetrize_pairs(pairs).localCheckpoint()
-    labels = nodes.select(
-        F.col("doc_id").alias("node"), F.col("doc_id").alias("label")
-    )
-    for _ in range(max_iter):
+
+    def relax(state: DataFrame) -> DataFrame:
+        labels = state.select("node", "label")
         # shuffle_hash: feeds an unordered MIN aggregation; the
         # sort-merge sorts of the edge side were waste every round.
         nbr_min = (
@@ -531,32 +528,25 @@ def connected_components(
         # checkpointed result — the previous separate
         # new-labels x old-labels join paid one full shuffle join per
         # round just to ask "did anything move".
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-                (
-                    F.coalesce("nbr_label", F.col("label")) < F.col("label")
-                ).alias("chg"),
-            )
-            .localCheckpoint()  # cut lineage: iterative joins otherwise stack plans
+        return labels.join(nbr_min, labels.node == nbr_min.src, "left").select(
+            "node",
+            F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias(
+                "label"
+            ),
+            (F.coalesce("nbr_label", F.col("label")) < F.col("label")).alias("chg"),
         )
-        changed = new_labels.filter(F.col("chg")).count()
-        labels = new_labels.select("node", "label")
-        if changed == 0:
-            break
-    else:
-        # Silent exit at max_iter would hand back inconsistent labels (a
-        # node's cluster_id naming a node whose own cluster_id differs)
-        # and the keep-flag policy would quietly keep extra survivors.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); raise max_iter or use "
-            "connected_components_star for high-diameter graphs"
-        )
+
+    # A run cut at max_iter would hand back inconsistent labels (a
+    # node's cluster_id naming a node whose own cluster_id differs), so
+    # fixpoint raises instead; connected_components_star suits
+    # high-diameter graphs.
+    labels = fixpoint(
+        nodes.select(F.col("doc_id").alias("node"), F.col("doc_id").alias("label")),
+        relax,
+        lambda state: state.filter(F.col("chg")).count(),
+        max_rounds=max_iter,
+        name="connected_components",
+    )
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
@@ -613,8 +603,6 @@ def connected_components_star(
         # the neighborhood minimum rides a WINDOW over the same
         # src-partitioning the old groupBy+join needed TWO exchanges
         # for (partial-agg exchange + join-side exchange).
-        from kafka_s3_etl_spark.operators.graph import symmetrize_pairs
-
         sym = symmetrize_pairs(e, a="src", b="dst")
         w = Window.partitionBy("src")
         return (
@@ -648,29 +636,29 @@ def connected_components_star(
         ).select("e.src", "e.dst")
         return linked.filter(F.col("src") != F.col("dst"))
 
-    def _fingerprint(e: DataFrame) -> tuple[int, int]:
+    last = [None]
+
+    def fingerprint_moved(e: DataFrame) -> bool:
         # xor-fold, not sum: order-independent like sum but cannot
         # overflow bigint under ANSI arithmetic
-        row = e.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-        ).first()
-        return row["n"], row["h"]
-
-    edges = _canon(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    ).localCheckpoint()
-    prev = None
-    for _ in range(max_iter):
-        edges = _canon(_small_star(_large_star(edges))).localCheckpoint()
-        fp = _fingerprint(edges)
-        if fp == prev:
-            break
-        prev = fp
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
+        fp = tuple(
+            e.agg(
+                F.count("*"),
+                F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)),
+            ).first()
         )
+        moved, last[0] = fp != last[0], fp
+        return moved
+
+    edges = fixpoint(
+        _canon(
+            pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        ).localCheckpoint(),
+        lambda e: _canon(_small_star(_large_star(e))),
+        fingerprint_moved,
+        max_rounds=max_iter,
+        name="connected_components_star",
+    )
     # Converged: canonical edges form (child -> component root) stars.
     roots = edges.select(
         F.col("src").alias("node"), F.col("dst").alias("label")

@@ -12,8 +12,19 @@ as connected_components):
 * per-iteration cost is one groupBy shuffle on dst + one join on src —
   both partition on node id, so a 100 TB edge list iterates at the cost
   of `iters` hash aggregations;
-* ``localCheckpoint`` after every iteration cuts the lineage (iterative
-  join plans otherwise nest `iters` deep and analysis time explodes);
+* every loop that stops when a round changes nothing (connected
+  components, both forms; ``kcore``; ``label_propagation``) runs on
+  ``fixpoint``: it checkpoints each round (the convergence test that
+  follows is an action on the new state), stops when the round moved
+  nothing, raises at its cap and records each round in
+  ``LAST_FIXPOINT``;
+* a fixed-round loop stays ONE plan where that measured faster:
+  ``bfs_kstep`` and ``label_propagation_kstep`` read their state once
+  per round, so nothing is recomputed and the checkpoint jobs go;
+* ``integer_power_rounds`` (markov and fixed-point PageRank) and the
+  float ``pagerank`` checkpoint every round: as one plan the 12-round
+  markov chain measured slower, and float PageRank's round reads
+  ``ranks`` twice, so one plan would double every round;
 * dangling mass (nodes with no out-edges) is redistributed uniformly
   each iteration via a 1-row aggregate broadcast, keeping the rank a
   proper probability distribution (sums to 1).
@@ -21,8 +32,93 @@ as connected_components):
 
 from __future__ import annotations
 
+import time
+from dataclasses import dataclass
+from typing import Any, Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+
+@dataclass(frozen=True)
+class FixpointRun:
+    """What one ``fixpoint`` call leaves behind: the loop's name and,
+    per round run, ``{"moved": <what the round changed>, "s": <seconds>}``."""
+
+    name: str
+    rounds: list
+
+
+# The record of the latest fixpoint call, filled round by round, so a
+# run that hit its cap still leaves its rounds.
+LAST_FIXPOINT: FixpointRun | None = None
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    moved: Callable[[DataFrame], Any],
+    *,
+    max_rounds: int,
+    name: str,
+) -> DataFrame:
+    """Run ``state = step(state)`` until a round moves nothing; return
+    the last state.
+
+    Each round checkpoints the new state (``moved`` is an action on it,
+    and the cut keeps the next round's plan from nesting this one),
+    then calls ``moved(state)``: what the round changed, a count or a
+    flag. 0 or False ends the run. Reaching ``max_rounds`` without that
+    raises: a loop stopped short would hand back a state that looks
+    like an answer but is not one.
+    """
+    global LAST_FIXPOINT
+    LAST_FIXPOINT = FixpointRun(name, [])
+    for _ in range(max_rounds):
+        t0 = time.perf_counter()
+        state = step(state).localCheckpoint()
+        change = moved(state)
+        LAST_FIXPOINT.rounds.append(
+            {"moved": change, "s": round(time.perf_counter() - t0, 3)}
+        )
+        if not change:
+            return state
+    raise RuntimeError(f"{name} did not converge in {max_rounds} rounds")
+
+
+def _canonical(edges: DataFrame, x: str, y: str) -> DataFrame:
+    """One (x, y) row per undirected edge of the (a, b) list, x < y:
+    orientation, self-loops and duplicates dropped."""
+    return (
+        edges.select(F.least("a", "b").alias(x), F.greatest("a", "b").alias(y))
+        .filter(F.col(x) != F.col(y))
+        .distinct()
+    )
+
+
+def _degrees(edges: DataFrame, x: str, y: str) -> DataFrame:
+    """(node, deg) over an undirected (x, y) edge list."""
+    return (
+        edges.select(F.col(x).alias("node"))
+        .unionAll(edges.select(F.col(y).alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("deg"))
+    )
+
+
+def _strip_hubs(canon: DataFrame, x: str, y: str, max_degree: int) -> DataFrame:
+    """``canon`` without the edges that touch a node of degree above
+    ``max_degree``. At most 2m/cap nodes can exceed the cap, so the hub
+    set is tiny and both exclusion joins broadcast."""
+    hubs = (
+        _degrees(canon, x, y).filter(F.col("deg") > max_degree).select("node")
+    )
+    return (
+        canon.join(F.broadcast(hubs.withColumnRenamed("node", x)), x, "left_anti")
+        .join(F.broadcast(hubs.withColumnRenamed("node", y)), y, "left_anti")
+        .select(x, y)
+    )
 
 
 def symmetrize_pairs(
@@ -96,14 +192,21 @@ def pagerank(
         raise ValueError(f"iters must be >= 1, got {iters}")
     # One pass over the (possibly expensive) pair lineage — see
     # symmetrize_pairs for why union-with-swap would execute it twice.
-    edges = symmetrize_pairs(pairs).distinct().localCheckpoint()
-    degrees = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    # Symmetrized edges carry every endpoint in src, so one union covers
-    # both columns of `pairs`.
-    base = (
-        nodes.select(F.col("doc_id").alias("node"))
-        .unionByName(edges.select(F.col("src").alias("node")))
+    # Each edge carries its source's out-degree, so no round
+    # re-aggregates the degrees.
+    edges = (
+        symmetrize_pairs(pairs)
         .distinct()
+        .withColumn("deg", F.count("*").over(Window.partitionBy("src")))
+        .localCheckpoint()
+    )
+    # Symmetrized edges carry every endpoint in src, so one union covers
+    # both columns of `pairs`; `out` marks the nodes that emit rank.
+    base = (
+        nodes.select(F.col("doc_id").alias("node"), F.lit(False).alias("out"))
+        .unionByName(edges.select(F.col("src").alias("node"), F.lit(True).alias("out")))
+        .groupBy("node")
+        .agg(F.max("out").alias("out"))
         .localCheckpoint()
     )
     n_nodes = base.count()
@@ -111,32 +214,34 @@ def pagerank(
         raise ValueError("pagerank: nodes is empty; nothing to rank")
     ranks = base.withColumn("rank", F.lit(1.0 / n_nodes)).localCheckpoint()
 
+    # A zero inflow per node stands in for a left join from `base` (see
+    # integer_power_rounds); it also carries the node's `out` flag.
+    zeros = base.select("node", "out", F.lit(0.0).alias("c"))
     for _ in range(iters):
-        contribs = (
-            edges.join(ranks.hint("shuffle_hash"), edges.src == ranks.node)
-            .join(degrees.hint("shuffle_hash"), "src")
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inflow"))
-        )
         # Mass parked on dangling nodes (no out-edges) teleports
         # uniformly; computed as 1 - mass actually emitted.
-        emitted = (
-            ranks.join(degrees, ranks.node == degrees.src, "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m"))
+        emitted = ranks.filter("out").agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m")
+        )
+        inflow = (
+            edges.join(ranks.hint("shuffle_hash"), edges.src == ranks.node)
+            .select(
+                F.col("dst").alias("node"),
+                F.lit(False).alias("out"),
+                (F.col("rank") / F.col("deg")).alias("c"),
+            )
+            .unionByName(zeros)
+            .groupBy("node")
+            .agg(F.max("out").alias("out"), F.sum("c").alias("inflow"))
         )
         ranks = (
-            base.join(contribs, base.node == contribs.dst, "left")
-            .crossJoin(F.broadcast(emitted))
+            inflow.crossJoin(F.broadcast(emitted))
             .select(
                 "node",
+                "out",
                 (
                     (1.0 - alpha) / n_nodes
-                    + alpha
-                    * (
-                        F.coalesce(F.col("inflow"), F.lit(0.0))
-                        + (1.0 - F.col("m")) / n_nodes
-                    )
+                    + alpha * (F.col("inflow") + (1.0 - F.col("m")) / n_nodes)
                 ).alias("rank"),
             )
             .localCheckpoint()
@@ -174,43 +279,75 @@ def pagerank_fixedpoint(
     operator beyond that.
 
     Scale shape is identical to ``pagerank``: per round one join on src
-    + one groupBy shuffle on dst, both partitioned on node id;
-    localCheckpoint cuts the iterative lineage.
+    + one groupBy shuffle on dst, both partitioned on node id — the
+    ``integer_power_rounds`` step with unit edge weights, so each
+    source's total weight is its degree.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     # One pass over the pair lineage (see symmetrize_pairs).
-    edges = symmetrize_pairs(pairs).distinct().localCheckpoint()
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    nodes = edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
-    teleport = (alpha_den - alpha_num) * init // alpha_den
-    ranks = nodes.select(
-        "node", F.lit(init).cast("bigint").alias("pr")
+    weights = symmetrize_pairs(pairs).distinct().withColumn("n", F.lit(1))
+    ranks = integer_power_rounds(
+        weights,
+        iters=iters,
+        init=init,
+        teleport=(alpha_den - alpha_num) * init // alpha_den,
+        alpha_num=alpha_num,
+        alpha_den=alpha_den,
+    )
+    return ranks.select(F.col("node").alias("doc_id"), F.col("r").alias("rank_fp"))
+
+
+def integer_power_rounds(
+    weights: DataFrame,
+    *,
+    iters: int,
+    init: int,
+    teleport: int = 0,
+    alpha_num: int = 1,
+    alpha_den: int = 1,
+    nodes: DataFrame | None = None,
+) -> DataFrame:
+    """(node, r) after ``iters`` rounds of the integer power step over
+    the weighted edges ``weights`` (src, dst, n), from r = ``init`` on
+    every node:
+
+        r'(u)  = teleport + (alpha_num * inflow(u)) div alpha_den
+        inflow = sum over edges (v, u) of (r(v) * n) div tot(v)
+        tot(v) = sum of n over v's out-edges
+
+    Every operation is bigint, so the result is bit-exact across
+    engines and summation orders. ``nodes`` (node) is the ranked set
+    and must hold every ``dst``; by default every ``src``. Each round
+    is checkpointed: as one plan the 12-round markov chain measured
+    slower.
+    """
+    mat = weights.withColumn(
+        "tot", F.sum("n").over(Window.partitionBy("src")).cast("bigint")
     ).localCheckpoint()
+    if nodes is None:
+        nodes = mat.select(F.col("src").alias("node")).distinct()
+    nodes = nodes.localCheckpoint()
+    ranks = nodes.select("node", F.lit(init).cast("bigint").alias("r")).localCheckpoint()
+    # A zero contribution per node stands in for a left join from
+    # `nodes`: nodes without in-edges still get a row, and the round
+    # pays no extra shuffle.
+    zeros = nodes.select("node", F.lit(0).cast("bigint").alias("c"))
     for _ in range(iters):
         inflow = (
-            edges.join(ranks.hint("shuffle_hash"), edges.src == ranks.node)
-            .join(deg.hint("shuffle_hash"), "src")
-            .select("dst", F.expr("pr div deg").alias("c"))
-            .groupBy("dst")
+            mat.join(ranks.hint("shuffle_hash"), mat.src == ranks.node)
+            .select(F.col("dst").alias("node"), F.expr("(r * n) div tot").alias("c"))
+            .unionByName(zeros)
+            .groupBy("node")
             .agg(F.sum("c").alias("inflow"))
         )
-        ranks = (
-            nodes.join(inflow, nodes.node == inflow.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.expr(
-                        f"({alpha_num} * coalesce(inflow, 0L)) div {alpha_den}"
-                    )
-                )
-                .cast("bigint")
-                .alias("pr"),
-            )
-            .localCheckpoint()
-        )
-    return ranks.select(F.col("node").alias("doc_id"), F.col("pr").alias("rank_fp"))
+        ranks = inflow.select(
+            "node",
+            F.expr(f"{teleport} + ({alpha_num} * inflow) div {alpha_den}")
+            .cast("bigint")
+            .alias("r"),
+        ).localCheckpoint()
+    return ranks
 
 
 def triangle_counts(
@@ -254,45 +391,13 @@ def triangle_counts(
     Total cost: two equi-join shuffles + one agg over m^(3/2)-bounded
     wedges; never an all-pairs product.
     """
-    canon = (
-        edges.select(
-            F.least("a", "b").alias("x"), F.greatest("a", "b").alias("y")
-        )
-        .filter(F.col("x") != F.col("y"))
-        .distinct()
-        # Materialize once: the edge set feeds three consumers (degree
-        # rollup, orientation, wedge closure); without the cut Spark
-        # recomputes the upstream pair generation three times.
-        .localCheckpoint()
-    )
+    # Materialize once: the edge set feeds three consumers (degree
+    # rollup, orientation, wedge closure); without the cut Spark
+    # recomputes the upstream pair generation three times.
+    canon = _canonical(edges, "x", "y").localCheckpoint()
     if max_degree is not None:
-        pre_deg = (
-            canon.select(F.col("x").alias("node"))
-            .unionAll(canon.select(F.col("y").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
-        hubs = pre_deg.filter(F.col("deg") > max_degree).select("node")
-        canon = (
-            canon.join(
-                F.broadcast(hubs.withColumnRenamed("node", "x")),
-                "x",
-                "left_anti",
-            )
-            .join(
-                F.broadcast(hubs.withColumnRenamed("node", "y")),
-                "y",
-                "left_anti",
-            )
-            .select("x", "y")
-            .localCheckpoint()
-        )
-    deg = (
-        canon.select(F.col("x").alias("node"))
-        .unionAll(canon.select(F.col("y").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
+        canon = _strip_hubs(canon, "x", "y", max_degree).localCheckpoint()
+    deg = _degrees(canon, "x", "y")
     ranked = (
         canon.join(deg.withColumnRenamed("node", "x"), "x")
         .withColumnRenamed("deg", "dx")
@@ -368,39 +473,11 @@ def jaccard_neighbors(
     set is tiny by construction (<= 2m/cap nodes), so the exclusion
     joins broadcast.
     """
-    canon = (
-        edges.select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        # Multiple consumers (degree rollup, hub anti-joins, wedge
-        # sides, adjacency anti-join) — materialize the pair
-        # generation once.
-        .localCheckpoint()
-    )
+    # Multiple consumers (degree rollup, hub anti-joins, wedge sides,
+    # adjacency anti-join) — materialize the pair generation once.
+    canon = _canonical(edges, "a", "b").localCheckpoint()
     if max_degree is not None:
-        pre_deg = (
-            canon.select(F.col("a").alias("node"))
-            .unionAll(canon.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
-        hubs = pre_deg.filter(F.col("deg") > max_degree).select("node")
-        canon = (
-            canon.join(
-                F.broadcast(hubs.withColumnRenamed("node", "a")),
-                "a",
-                "left_anti",
-            )
-            .join(
-                F.broadcast(hubs.withColumnRenamed("node", "b")),
-                "b",
-                "left_anti",
-            )
-            .select("a", "b")
-            .localCheckpoint()
-        )
+        canon = _strip_hubs(canon, "a", "b", max_degree).localCheckpoint()
     sym = canon.select(
         F.col("a").alias("u"), F.col("b").alias("p")
     ).unionAll(canon.select(F.col("b").alias("u"), F.col("a").alias("p")))
@@ -456,9 +533,9 @@ def kcore(
     time, so each round is one degree aggregation (shuffle on node id)
     + two semi-joins, and the round count is the graph's "peeling
     depth" (<= max coreness ladder length, in practice a handful —
-    NEVER the sequential algorithm's O(n) steps). ``localCheckpoint``
-    cuts the per-round lineage, and the loop stops at the fixpoint
-    (edge count unchanged). The result is identical to sequential
+    NEVER the sequential algorithm's O(n) steps). The rounds run on
+    ``fixpoint`` and stop when a round removes no edge (an empty graph
+    stops after one such round). The result is identical to sequential
     peeling because deleting any degree<k node never rescues another:
     the k-core is unique, order-independent.
 
@@ -475,28 +552,16 @@ def kcore(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    cur = (
-        edges.select(
-            F.least("a", "b").alias("x"), F.greatest("a", "b").alias("y")
-        )
-        .filter(F.col("x") != F.col("y"))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_edges = cur.count()
+    cur = _canonical(edges, "x", "y").localCheckpoint()
+    n_edges = [cur.count()]
     if max_iters is None:
         # Universal bound: each non-fixpoint round deletes >= 1 edge.
-        max_iters = max(50, n_edges + 1)
-    for _ in range(max_iters):
-        deg = (
-            cur.select(F.col("x").alias("node"))
-            .unionAll(cur.select(F.col("y").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
-        keep = deg.filter(F.col("deg") >= k).select("node")
-        nxt = (
-            cur.join(
+        max_iters = max(50, n_edges[0] + 1)
+
+    def peel(e: DataFrame) -> DataFrame:
+        keep = _degrees(e, "x", "y").filter(F.col("deg") >= k).select("node")
+        return (
+            e.join(
                 keep.withColumnRenamed("node", "x").hint("shuffle_hash"),
                 "x",
                 "left_semi",
@@ -507,25 +572,15 @@ def kcore(
                 "left_semi",
             )
             .select("x", "y")
-            .localCheckpoint()
         )
-        n_next = nxt.count()
-        if n_next == n_edges:
-            # Fixpoint: every remaining endpoint has degree >= k.
-            return (
-                cur.select(F.col("x").alias("node"))
-                .unionAll(cur.select(F.col("y").alias("node")))
-                .groupBy("node")
-                .agg(F.count("*").cast("bigint").alias("deg"))
-            )
-        cur, n_edges = nxt, n_next
-        if n_edges == 0:
-            return cur.select(
-                F.col("x").alias("node"), F.lit(0).cast("bigint").alias("deg")
-            )
-    raise RuntimeError(
-        f"kcore did not converge within {max_iters} peeling rounds"
-    )
+
+    def removed(e: DataFrame) -> int:
+        before, n_edges[0] = n_edges[0], e.count()
+        return before - n_edges[0]
+
+    core = fixpoint(cur, peel, removed, max_rounds=max_iters, name="kcore")
+    # Fixpoint: every remaining endpoint has degree >= k.
+    return _degrees(core, "x", "y")
 
 
 def label_propagation(
@@ -542,17 +597,17 @@ def label_propagation(
 
     ``pairs`` is (a, b) undirected in any orientation. Returns
     (node, community) with community = the converged label (a member's
-    node id). Iterates to the fixpoint (no label changed) with
-    ``max_iters`` as a wall-clock bound: synchronous mode-updates can
-    2-cycle on symmetric graphs, so unlike ``kcore`` hitting the cap is
-    NOT a logic bug — the cap is the documented cycle-breaker and the
-    current labeling (still deterministic) is returned.
+    node id). Iterates on ``fixpoint`` until no label changes. Hitting
+    ``max_iters`` raises RuntimeError ("did not converge"): synchronous
+    mode-updates can 2-cycle on symmetric graphs, and a labeling cut at
+    the cap is not a fixpoint. (Earlier versions returned the labeling
+    at the cap silently; the catalog's graphs converge in 3-4 rounds.)
 
     Spark-first iterative shape (Pregel-lite, same discipline as
     ``pagerank``/``kcore``): per round one join (edges x labels, both
     partitioned on node id) + two map-side-combinable aggregations
     (vote count, then per-node arg-min-of-(-count, label) via the
-    min(struct) house pattern); ``localCheckpoint`` cuts lineage.
+    min(struct) house pattern); ``fixpoint`` checkpoints each round.
 
     FRONTIER-PRUNED: a synchronous update can only flip v's label if
     some u in N(v) + {v} changed last round, so each round re-votes
@@ -576,42 +631,16 @@ def label_propagation(
     Self-loops are merged into the edge set once at setup, which makes
     the self-vote a plain neighbor vote AND puts every changed node in
     its own neighborhood (so `affected` is one semi-join). The label
-    merge each round is a LEFT JOIN + coalesce, never a union:
-    localCheckpoint of a plan containing a Union over already-
-    checkpointed branches trips Spark's LogicalRDD constraint rewrite
-    (NoSuchElementException in UnionBase.rewriteConstraints), so
-    in-loop plans that get checkpointed must stay union-free.
+    merge each round is a join (LEFT JOIN + coalesce in pruned rounds),
+    not a union: checkpointing the union form of this merge over
+    already-checkpointed branches tripped Spark's LogicalRDD constraint
+    rewrite (NoSuchElementException in UnionBase.rewriteConstraints).
     """
     if max_iters < 1:
         raise ValueError(f"max_iters must be >= 1, got {max_iters}")
     if max_degree is not None:
-        canon = (
-            pairs.select(
-                F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint()
-        )
-        pre_deg = (
-            canon.select(F.col("a").alias("node"))
-            .unionAll(canon.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
-        hubs = pre_deg.filter(F.col("deg") > max_degree).select("node")
-        pairs = (
-            canon.join(
-                F.broadcast(hubs.withColumnRenamed("node", "a")),
-                "a",
-                "left_anti",
-            )
-            .join(
-                F.broadcast(hubs.withColumnRenamed("node", "b")),
-                "b",
-                "left_anti",
-            )
-            .select("a", "b")
+        pairs = _strip_hubs(
+            _canonical(pairs, "a", "b").localCheckpoint(), "a", "b", max_degree
         )
     # (v, v) self-loops: one vote for a node's own current label, and
     # frontier membership implies affected membership. Built in ONE
@@ -631,26 +660,25 @@ def label_propagation(
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("lbl"))
+        .select("node", F.col("node").alias("lbl"), F.lit(True).alias("chg"))
         .localCheckpoint()
     )
     n_nodes = labels.count()  # bounded: one integer for the prune gate
-    frontier = labels.select("node")  # round 0: every node votes
-    fr_n = n_nodes
-    for i in range(max_iters):
+    fr_n = [n_nodes]  # the last round's frontier; round 0: every node votes
+
+    def vote(state: DataFrame) -> DataFrame:
         # Pruning pays only once the frontier is small: while most
         # nodes are still changing, `affected` IS the graph and the
         # extra semi-joins are pure overhead (measured: the ungated
         # version was 1.3x SLOWER at 10x because rounds 1-2 churn
         # nearly every node).
-        full_round = i == 0 or fr_n * 4 > n_nodes
-        if full_round:
-            aff_edges = edges
-        else:
+        labels = state.select("node", "lbl")
+        full = fr_n[0] * 4 > n_nodes
+        aff_edges = edges
+        if not full:
+            frontier = state.filter(F.col("chg")).select(F.col("node").alias("src"))
             affected = (
-                edges.join(
-                    frontier.withColumnRenamed("node", "src"), "src", "semi"
-                )
+                edges.join(frontier, "src", "semi")
                 .select(F.col("dst").alias("node"))
                 .distinct()
                 .localCheckpoint()
@@ -658,56 +686,51 @@ def label_propagation(
             aff_edges = edges.join(
                 affected.withColumnRenamed("node", "dst"), "dst", "semi"
             )
-        # shuffle_hash: the vote join feeds an unordered aggregation,
-        # and LPA node keys are strings here — the sort-merge sorts of
-        # the edge side were pure waste every round (same house rule as
-        # triangles/jaccard; broadcast would be faster at sf0.1 but the
-        # label table is node-count-sized, not broadcastable at scale).
-        votes = aff_edges.join(
-            labels.withColumnRenamed("node", "src").hint("shuffle_hash"),
-            "src",
-        ).select(F.col("dst").alias("node"), "lbl")
-        counted = votes.groupBy("node", "lbl").agg(
-            F.count("*").alias("n")
+        # In a full round the self-loops made every node re-vote, so an
+        # inner join adopts the new labels; a pruned round keeps every
+        # unaffected label through an outer join + coalesce. The change
+        # flag rides the one merge join, so the frontier is a filter
+        # over the checkpointed result.
+        new = _lpa_vote(aff_edges, labels)
+        return new.join(labels, "node", "inner" if full else "right").select(
+            "node",
+            F.coalesce("new_lbl", "lbl").alias("lbl"),
+            F.coalesce(F.col("new_lbl") != F.col("lbl"), F.lit(False)).alias("chg"),
         )
-        nxt_aff = (
-            counted.groupBy("node")
-            .agg(F.min(F.struct((-F.col("n")).alias("neg"), "lbl")).alias("s"))
-            .select("node", F.col("s.lbl").alias("new_lbl"))
-        )
-        if full_round:
-            # Self-loops guarantee every node re-voted: adopt the new
-            # labels outright. The change flag rides the one merge
-            # join so the frontier is a filter over the checkpointed
-            # result — the previous shape paid a SECOND new x old join
-            # per round just to find the changed nodes.
-            j = (
-                nxt_aff.join(labels, "node")
-                .select(
-                    "node",
-                    F.col("new_lbl").alias("lbl"),
-                    (F.col("new_lbl") != F.col("lbl")).alias("chg"),
-                )
-                .localCheckpoint()
-            )
-            frontier = j.filter(F.col("chg")).select("node")
-            labels = j.select("node", "lbl")
-        else:
-            j = labels.join(nxt_aff, "node", "left").localCheckpoint()
-            frontier = j.filter(
-                F.col("new_lbl").isNotNull()
-                & (F.col("new_lbl") != F.col("lbl"))
-            ).select("node")
-            labels = j.select(
-                "node", F.coalesce("new_lbl", "lbl").alias("lbl")
-            )
+
+    def frontier_size(state: DataFrame) -> int:
         # The gate only needs "zero / small / big": a limit-bounded
         # count stops scanning once the frontier is provably big
         # instead of materializing the exact count every round.
-        fr_n = frontier.limit(n_nodes // 4 + 1).count()
-        if fr_n == 0:
-            break
+        fr_n[0] = state.filter(F.col("chg")).limit(n_nodes // 4 + 1).count()
+        return fr_n[0]
+
+    labels = fixpoint(
+        labels, vote, frontier_size, max_rounds=max_iters, name="label_propagation"
+    )
     return labels.select("node", F.col("lbl").alias("community"))
+
+
+def _lpa_vote(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """(node, new_lbl) for every ``dst`` of ``edges``: the most frequent
+    label among its in-neighbours' ``labels`` (node, lbl), ties to the
+    smallest label — arg-max-count/min-label via the min(struct) house
+    pattern (struct comparison is lexicographic in both engines)."""
+    # shuffle_hash: the vote join feeds an unordered aggregation, and
+    # LPA node keys are strings here — the sort-merge sorts of the edge
+    # side were pure waste every round (same house rule as
+    # triangles/jaccard; broadcast would be faster at sf0.1 but the
+    # label table is node-count-sized, not broadcastable at scale).
+    votes = edges.join(
+        labels.withColumnRenamed("node", "src").hint("shuffle_hash"), "src"
+    ).select(F.col("dst").alias("node"), "lbl")
+    return (
+        votes.groupBy("node", "lbl")
+        .agg(F.count("*").alias("n"))
+        .groupBy("node")
+        .agg(F.min(F.struct((-F.col("n")).alias("neg"), "lbl")).alias("s"))
+        .select("node", F.col("s.lbl").alias("new_lbl"))
+    )
 
 
 def label_propagation_kstep(
@@ -725,11 +748,10 @@ def label_propagation_kstep(
 
     ``nodes`` is one node id per row (isolated nodes keep their own
     label — the self-loop gives every node a self-vote AND a vote row
-    even with no neighbors). Per round: one equi join (edges x labels,
-    partitioned on node id) + two map-side-combinable aggregations
-    (vote count, then arg-max-count/min-label via the min(struct)
-    house pattern — struct comparison is lexicographic in both
-    engines). localCheckpoint cuts the iterative lineage.
+    even with no neighbors). Each round is ``_lpa_vote``, the vote of
+    ``label_propagation``'s rounds. Only ``edges`` is checkpointed; the
+    rounds read ``labels`` once each, so they stay one plan (as in
+    ``bfs_kstep``) and the action runs them as one job chain.
 
     Returns (node, community) after ``iters`` rounds.
     """
@@ -745,25 +767,9 @@ def label_propagation_kstep(
         .distinct()
         .localCheckpoint()
     )
-    labels = base.select("node", F.col("node").alias("lbl")).localCheckpoint()
+    labels = base.select("node", F.col("node").alias("lbl"))
     for _ in range(iters):
-        votes = (
-            edges.join(
-                labels.select(F.col("node").alias("dst"), "lbl").hint(
-                    "shuffle_hash"
-                ),
-                "dst",
-            )
-            .groupBy("src", "lbl")
-            .agg(F.count("*").alias("c"))
-        )
-        labels = (
-            votes.groupBy("src")
-            .agg(F.min(F.struct((-F.col("c")).alias("c"),
-                                F.col("lbl").alias("l"))).alias("m"))
-            .select(F.col("src").alias("node"), F.col("m.l").alias("lbl"))
-            .localCheckpoint()
-        )
+        labels = _lpa_vote(edges, labels).withColumnRenamed("new_lbl", "lbl")
     return labels.select("node", F.col("lbl").alias("community"))
 
 

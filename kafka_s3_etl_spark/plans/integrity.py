@@ -522,8 +522,9 @@ def q_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "Deterministic synchronous label-propagation communities on "
         "the edit-distance-1 customer-name graph: most-frequent "
-        "neighbor+self label, min-label tie-break, fixpoint/capped "
-        "rounds (operators/graph.py::label_propagation). Iterative -> "
+        "neighbor+self label, min-label tie-break, rounds to the "
+        "fixpoint, raising at the cap (operators/graph.py::"
+        "label_propagation on graph.fixpoint). Iterative -> "
         "rows-only + sequential-reference property test. Output: "
         "community size histogram."
     ),

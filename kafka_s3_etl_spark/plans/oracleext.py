@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kafka_s3_etl_spark.operators.dedup import LSH_BANDS, MINHASH_K, SHINGLE_N
+from kafka_s3_etl_spark.operators.graph import integer_power_rounds
 from kafka_s3_etl_spark.plans.registry import register
 from kafka_s3_etl_spark.sources.tables import load_table
 
@@ -253,56 +254,32 @@ def markov_kstep(
     Unlike markov_stationary (which collects the k x k matrix driver-
     side for numpy), this stays entirely distributed: the matrix is a
     k^2-row DataFrame and each step is one broadcast-size join + one
-    map-side-combined rollup. Types never observed as a source get a
-    unit self-loop (dangling-state fix). Overflow headroom:
-    mass <= k*init, times max transition count must fit bigint —
-    ~1e9 events at the default init.
+    map-side-combined rollup: operators/graph.py::integer_power_rounds
+    with no teleport and unit damping, so mass' = inflow. Types never
+    observed as a source get a unit self-loop (dangling-state fix).
+    Overflow headroom: mass <= k*init, times max transition count must
+    fit bigint — ~1e9 events at the default init.
     """
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
-        F.col("event_type").alias("from_t"),
-        F.lead("event_type").over(w).alias("to_t"),
+        F.col("event_type").alias("src"),
+        F.lead("event_type").over(w).alias("dst"),
     )
-    tr = (
-        seq.filter(F.col("to_t").isNotNull())
-        .groupBy("from_t", "to_t")
-        .agg(F.count("*").alias("n"))
+    tr = seq.filter(F.col("dst").isNotNull()).groupBy("src", "dst").agg(
+        F.count("*").alias("n")
     )
-    types = events.select(F.col("event_type").alias("t")).distinct()
-    dangling = (
-        types.join(tr.select(F.col("from_t").alias("t")).distinct(), "t", "left_anti")
-        .select(
-            F.col("t").alias("from_t"),
-            F.col("t").alias("to_t"),
-            F.lit(1).cast("bigint").alias("n"),
-        )
+    types = events.select(F.col("event_type").alias("node")).distinct()
+    dangling = types.join(
+        tr.select(F.col("src").alias("node")).distinct(), "node", "left_anti"
+    ).select(
+        F.col("node").alias("src"),
+        F.col("node").alias("dst"),
+        F.lit(1).cast("bigint").alias("n"),
     )
-    rowtot = Window.partitionBy("from_t")
-    mat = (
-        tr.unionByName(dangling)
-        .withColumn("tot", F.sum("n").over(rowtot).cast("bigint"))
-        .localCheckpoint()
+    ranks = integer_power_rounds(
+        tr.unionByName(dangling), iters=iters, init=init, nodes=types
     )
-    types = types.localCheckpoint()
-    ranks = types.select(
-        F.col("t").alias("et"), F.lit(init).cast("bigint").alias("mass")
-    ).localCheckpoint()
-    for _ in range(iters):
-        inflow = (
-            mat.join(ranks, mat.from_t == ranks.et)
-            .select("to_t", F.expr("(mass * n) div tot").alias("c"))
-            .groupBy("to_t")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            types.join(inflow, types.t == inflow.to_t, "left")
-            .select(
-                F.col("t").alias("et"),
-                F.coalesce(F.col("s"), F.lit(0).cast("bigint")).alias("mass"),
-            )
-            .localCheckpoint()
-        )
-    return ranks.select(F.col("et").alias("event_type"), F.col("mass").alias("mass_fp"))
+    return ranks.select(F.col("node").alias("event_type"), F.col("r").alias("mass_fp"))
 
 
 # ---------------------------------------------------------- registrations

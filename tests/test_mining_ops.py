@@ -12,6 +12,7 @@ from __future__ import annotations
 import itertools
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_s3_etl_spark.operators.graph import triangle_counts
@@ -550,6 +551,41 @@ def test_kcore_backstop_scales_with_peel_depth(spark):
     with pytest.raises(RuntimeError, match="did not converge"):
         kcore(spark.createDataFrame(chain[:30], ["a", "b"]), k=2,
               max_iters=3).collect()
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["connected_components", "connected_components_star", "kcore", "label_propagation"],
+)
+def test_convergence_loops_raise_at_their_cap(spark, op):
+    """Every convergence loop runs on graph.fixpoint: on a 12-node path
+    a round cap of 2 is too small for each of them, and each raises
+    "did not converge" instead of returning a state that is not a
+    fixpoint. LAST_FIXPOINT names the loop and holds one entry per round
+    run; with the default cap the same loop converges and its last
+    round moved nothing."""
+    from kafka_s3_etl_spark.operators import dedup, graph
+
+    path = [(i, i + 1) for i in range(11)]
+    if op.startswith("connected"):
+        pairs = spark.createDataFrame(path, "doc_a bigint, doc_b bigint")
+        nodes = spark.createDataFrame([(i,) for i in range(12)], "doc_id bigint")
+        run = lambda **cap: getattr(dedup, op)(pairs, nodes, **cap)  # noqa: E731
+        cap = "max_iter"
+    else:
+        edges = spark.createDataFrame(path, "a bigint, b bigint")
+        run = lambda **cap: getattr(graph, op)(edges, **cap)  # noqa: E731
+        cap = "max_iters"
+    with pytest.raises(RuntimeError, match=f"^{op} did not converge in 2 rounds$"):
+        run(**{cap: 2})
+    assert graph.LAST_FIXPOINT.name == op
+    assert len(graph.LAST_FIXPOINT.rounds) == 2
+    assert all(r["moved"] for r in graph.LAST_FIXPOINT.rounds)
+
+    run().collect()
+    assert graph.LAST_FIXPOINT.name == op
+    assert not graph.LAST_FIXPOINT.rounds[-1]["moved"]
+    assert all(r["moved"] for r in graph.LAST_FIXPOINT.rounds[:-1])
 
 
 def test_set_similarity_join_complete_vs_brute_force(spark):

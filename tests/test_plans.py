@@ -1323,6 +1323,25 @@ def test_pq_encodes_per_row_within_job_bound(spark, sf_dir, name, max_jobs):
     assert "Window" in plan  # the shortlist and re-rank windows remain
 
 
+def test_label_propagation_kstep_rounds_run_as_one_plan(spark, sf_dir):
+    """The k-step LPA rounds read the label table once each, so only
+    the edge set is checkpointed and the rounds run in the noop write:
+    build + write stay within 16 jobs in their own job group (26 when
+    each of the 4 rounds was checkpointed)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"lpa_kstep_jobs_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "q_label_propagation_kstep build + noop write")
+    try:
+        df = _CAT["q_label_propagation_kstep"].fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 16
+
+
 def test_collocations_single_pair_rollup(spark, sf_dir):
     """q_collocations_lift (batch 49): the corpus-sized pair rollup is
     materialized ONCE (localCheckpoint -> ExistingRDD scans downstream)
