@@ -806,12 +806,56 @@ def _moto_endpoint() -> str:
     return _S3_SCAN["endpoint"]
 
 
+def _put_jsonl(client, bucket: str, key: str, rows: list, objects: int) -> None:
+    """Put `rows` as JSONL in `objects` contiguous slices at keys
+    `key.format(i)`: the layout a real ingestion job leaves behind."""
+    import json
+
+    step = max(1, (len(rows) + objects - 1) // objects)
+    for i in range(0, len(rows), step):
+        body = "\n".join(json.dumps(r) for r in rows[i : i + step])
+        client.put_object(
+            Bucket=bucket, Key=key.format(i // step), Body=body.encode("utf-8")
+        )
+
+
+def _s3_entry(spark: SparkSession, bucket: str) -> tuple:
+    """The set-up of the S3 entries: ship the workers, register the S3
+    formats and create `bucket` on the moto endpoint. Returns the
+    endpoint, a client and a fresh `run-<id>/` prefix."""
+    import uuid
+
+    from kafka_s3_etl_spark.shiplib import ensure_workers_can_import
+    from kafka_s3_etl_spark.sources.objectstore import (
+        make_s3_client,
+        register_s3jsonl_source,
+    )
+
+    ensure_workers_can_import(spark)
+    register_s3jsonl_source(spark)
+    endpoint = _moto_endpoint()
+    client = make_s3_client(endpoint_url=endpoint)
+    try:
+        client.create_bucket(Bucket=bucket)
+    except client.exceptions.BucketAlreadyOwnedByYou:
+        pass
+    return endpoint, client, f"run-{uuid.uuid4().hex[:8]}/"
+
+
+def _s3_docs(reader, endpoint: str, bucket: str, prefix: str) -> DataFrame:
+    """The documents under (bucket, prefix) through `graft_s3jsonl`;
+    `reader` is spark.read or spark.readStream."""
+    return (
+        reader.format("graft_s3jsonl")
+        .options(endpoint=endpoint, bucket=bucket, prefix=prefix)
+        .load()
+    )
+
+
 def _stage_documents_jsonl(sf_dir: str) -> tuple[str, str]:
     """Stage the documents table as JSONL objects in the object store
-    (once per sf_dir): contiguous row slices over 8 keys — the layout a
-    real ingestion job leaves behind."""
+    (once per sf_dir): contiguous row slices over 8 keys."""
     import hashlib
-    import json as _json
 
     import pyarrow.parquet as pq
 
@@ -823,18 +867,10 @@ def _stage_documents_jsonl(sf_dir: str) -> tuple[str, str]:
     bucket = "graft-scan-" + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     client = make_s3_client(endpoint_url=endpoint)
     client.create_bucket(Bucket=bucket)
-    tbl = pq.read_table(
+    rows = pq.read_table(
         f"{sf_dir}/documents.parquet", columns=["doc_id", "lang", "text"]
-    )
-    rows = tbl.to_pylist()
-    step = max(1, (len(rows) + _S3_SCAN_OBJECTS - 1) // _S3_SCAN_OBJECTS)
-    for i in range(0, len(rows), step):
-        body = "\n".join(_json.dumps(r) for r in rows[i : i + step])
-        client.put_object(
-            Bucket=bucket,
-            Key=f"docs/part-{i // step:04d}.jsonl",
-            Body=body.encode("utf-8"),
-        )
+    ).to_pylist()
+    _put_jsonl(client, bucket, "docs/part-{:04d}.jsonl", rows, _S3_SCAN_OBJECTS)
     _S3_SCAN["staged"][sf_dir] = bucket
     return endpoint, bucket
 
@@ -864,13 +900,7 @@ def x_s3_object_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     endpoint, bucket = _stage_documents_jsonl(sf_dir)
     register_s3jsonl_source(spark)
-    return (
-        spark.read.format("graft_s3jsonl")
-        .option("endpoint", endpoint)
-        .option("bucket", bucket)
-        .option("prefix", "docs/")
-        .load()
-    )
+    return _s3_docs(spark.read, endpoint, bucket, "docs/")
 
 
 @register(
@@ -879,8 +909,8 @@ def x_s3_object_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost=2,
     doc=(
         "Incremental object-store ingestion (the notification-less "
-        "Auto-Loader shape) through the streaming S3 Python "
-        "DataSource: offsets are positions in the sorted object "
+        "Auto-Loader shape) through graft_s3jsonl in stream mode: "
+        "offsets are key high-water marks over the sorted object "
         "listing, so each micro-batch reads exactly the NEWLY arrived "
         "objects with per-object executor-side boto3 fetches. The "
         "entry stages wave 1, drains it, stages wave 2 ONLY after the "
@@ -893,53 +923,22 @@ def x_s3_object_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT doc_id, lang, text FROM documents",
 )
 def s_s3_autoloader(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json as _json
-    import uuid
-
     import pyarrow.parquet as pq
 
-    from kafka_s3_etl_spark.shiplib import ensure_workers_can_import
-    from kafka_s3_etl_spark.sources.objectstore import (
-        make_s3_client,
-        register_s3jsonl_source,
-    )
     from kafka_s3_etl_spark.streaming.runner import run_stream
 
-    ensure_workers_can_import(spark)
-    register_s3jsonl_source(spark)
-    endpoint = _moto_endpoint()
-    client = make_s3_client(endpoint_url=endpoint)
-    bucket = "graft-autoload"
-    try:
-        client.create_bucket(Bucket=bucket)
-    except client.exceptions.BucketAlreadyOwnedByYou:
-        pass
-    run_prefix = f"run-{uuid.uuid4().hex[:8]}/"
-
+    endpoint, client, run_prefix = _s3_entry(spark, "graft-autoload")
     rows = pq.read_table(
         f"{sf_dir}/documents.parquet", columns=["doc_id", "lang", "text"]
     ).to_pylist()
     waves = [rows[: len(rows) // 2], rows[len(rows) // 2 :]]
 
     def put_wave(w: int) -> None:
-        wave = waves[w]
-        step = max(1, (len(wave) + 3) // 4)
-        for j in range(0, len(wave), step):
-            body = "\n".join(_json.dumps(r) for r in wave[j : j + step])
-            client.put_object(
-                Bucket=bucket,
-                Key=f"{run_prefix}w{w}-part-{j // step:04d}.jsonl",
-                Body=body.encode("utf-8"),
-            )
+        key = f"{run_prefix}w{w}-part-{{:04d}}.jsonl"
+        _put_jsonl(client, "graft-autoload", key, waves[w], 4)
 
     put_wave(0)
-    stream = (
-        spark.readStream.format("graft_s3jsonl_stream")
-        .option("endpoint", endpoint)
-        .option("bucket", bucket)
-        .option("prefix", run_prefix)
-        .load()
-    )
+    stream = _s3_docs(spark.readStream, endpoint, "graft-autoload", run_prefix)
     # wave 1 drains first; wave 2's objects arrive after that drain and
     # are picked up incrementally
     return run_stream(stream, deliveries=[lambda: put_wave(1)])
@@ -950,56 +949,30 @@ def s_s3_autoloader(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="sink",
     cost=1,
     doc=(
-        "The WRITE direction of the S3 client transport, completing "
-        "the matrix (client put/get, batch scan, streaming autoload, "
-        "batch SINK): documents written through the graft_s3jsonl_sink "
-        "Python DataSource with the REAL two-phase commit translated "
-        "to object semantics — tasks put to _staged/ keys, only the "
-        "driver-side commit() publishes via copy_object + _SUCCESS "
-        "manifest, abort() deletes the stage — then read BACK through "
-        "the underscore-skipping scan source and hash-checked against "
-        "the parquet source of truth: write, commit protocol, listing "
-        "hygiene, and read-back all value-verified in one loop."
+        "The WRITE direction of the S3 client transport: documents "
+        "written through graft_s3jsonl_sink, which runs the package's "
+        "one staged publish (sources/pyds.py::_StagedPublish) on S3 — "
+        "tasks put `_staged-` parts, only the driver-side commit() "
+        "publishes them via copy_object plus a _SUCCESS manifest, "
+        "abort() deletes the stages — then read BACK through the "
+        "underscore-skipping graft_s3jsonl scan and hash-checked "
+        "against the parquet source of truth: write, commit protocol, "
+        "listing hygiene and read-back value-verified in one loop."
     ),
     oracle="SELECT doc_id, lang, text FROM documents",
 )
 def x_s3_object_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from kafka_s3_etl_spark.shiplib import ensure_workers_can_import
-    from kafka_s3_etl_spark.sources.objectstore import (
-        make_s3_client,
-        register_s3jsonl_source,
-    )
-
-    ensure_workers_can_import(spark)
-    register_s3jsonl_source(spark)
-    endpoint = _moto_endpoint()
-    client = make_s3_client(endpoint_url=endpoint)
-    bucket = "graft-sink"
-    try:
-        client.create_bucket(Bucket=bucket)
-    except client.exceptions.BucketAlreadyOwnedByYou:
-        pass
-    prefix = f"run-{uuid.uuid4().hex[:8]}/"
+    endpoint, _, prefix = _s3_entry(spark, "graft-sink")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
     (
         docs.write.format("graft_s3jsonl_sink")
         .mode("append")  # Python DataSource writers reject ErrorIfExists
-        .option("endpoint", endpoint)
-        .option("bucket", bucket)
-        .option("prefix", prefix)
+        .options(endpoint=endpoint, bucket="graft-sink", prefix=prefix)
         .save()
     )
-    return (
-        spark.read.format("graft_s3jsonl")
-        .option("endpoint", endpoint)
-        .option("bucket", bucket)
-        .option("prefix", prefix)
-        .load()
-    )
+    return _s3_docs(spark.read, endpoint, "graft-sink", prefix)
 
 
 @register(
@@ -1007,55 +980,30 @@ def x_s3_object_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="streaming",
     cost=2,
     doc=(
-        "Streaming WRITE to the object store, the last cell of the S3 "
-        "matrix: the documents stream drains through "
-        "graft_s3jsonl_stream_sink — per-micro-batch staged puts, "
-        "driver-side publish via copy_object to batchId-embedded part "
-        "keys + a per-batch _SUCCESS manifest (idempotent under "
-        "checkpoint replay: re-running batch N overwrites batch-N "
-        "parts, never appends duplicates) — then the bucket is read "
-        "BACK through the underscore-skipping scan source and hash-"
+        "Streaming WRITE to the object store: the documents stream "
+        "drains through graft_s3jsonl_sink in stream mode — the same "
+        "staged publish as the batch sink, per micro-batch: batch N "
+        "publishes part-bN-* keys plus a _SUCCESS-N manifest after "
+        "removing every part an earlier attempt of batch N published, "
+        "so a checkpoint replay never leaves duplicates — then the "
+        "bucket is read BACK through the graft_s3jsonl scan and hash-"
         "checked against the parquet source of truth."
     ),
     oracle="SELECT doc_id, lang, text FROM documents",
 )
 def s_s3_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from kafka_s3_etl_spark.shiplib import ensure_workers_can_import
-    from kafka_s3_etl_spark.sources.objectstore import (
-        make_s3_client,
-        register_s3jsonl_source,
-    )
     from kafka_s3_etl_spark.streaming.runner import run_stream, stream_table
 
-    ensure_workers_can_import(spark)
-    register_s3jsonl_source(spark)
-    endpoint = _moto_endpoint()
-    client = make_s3_client(endpoint_url=endpoint)
-    bucket = "graft-streamsink"
-    try:
-        client.create_bucket(Bucket=bucket)
-    except client.exceptions.BucketAlreadyOwnedByYou:
-        pass
-    prefix = f"run-{uuid.uuid4().hex[:8]}/"
-
+    endpoint, _, prefix = _s3_entry(spark, "graft-streamsink")
     stream = stream_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
     run_stream(
-        stream.writeStream.format("graft_s3jsonl_stream_sink")
-        .option("endpoint", endpoint)
-        .option("bucket", bucket)
-        .option("prefix", prefix)
+        stream.writeStream.format("graft_s3jsonl_sink").options(
+            endpoint=endpoint, bucket="graft-streamsink", prefix=prefix
+        )
     )
-    return (
-        spark.read.format("graft_s3jsonl")
-        .option("endpoint", endpoint)
-        .option("bucket", bucket)
-        .option("prefix", prefix)
-        .load()
-    )
+    return _s3_docs(spark.read, endpoint, "graft-streamsink", prefix)
 
 
 # ---------------------------------------------------------------------------

@@ -259,11 +259,13 @@ def s_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_python_datasink",
     category="sink",
     doc=(
-        "Spark 4 Python DataSource WRITE side: Arrow-batch JSONL sink "
-        "with real two-phase commit (task-staged files -> commit "
-        "messages -> driver publish + _SUCCESS); the readback of what "
-        "the sink wrote hash-checks against the source table, proving "
-        "the float/timestamp JSON roundtrip is exact."
+        "Spark 4 Python DataSource WRITE side: the graft_jsonl sink, "
+        "one of the two formats (with graft_s3jsonl_sink) that run the "
+        "one staged publish, sources/pyds.py::_StagedPublish — task-"
+        "staged parts -> commit messages -> driver publish + _SUCCESS; "
+        "the readback of what the sink wrote hash-checks against the "
+        "source table, proving the float/timestamp JSON roundtrip is "
+        "exact."
     ),
     oracle="""
         SELECT event_id, user_id, event_type,

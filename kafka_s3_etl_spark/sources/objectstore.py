@@ -8,6 +8,16 @@ including the in-process moto server the integration test boots
 (tests/test_objectstore.py). The Spark-side s3a transport remains a
 separate, jar-gated seam (tests/test_integration_gated.py).
 
+Two of the package's four Python DataSource formats live here, each
+serving batch and stream mode (the other two, `graft_range` and
+`graft_jsonl`, are in sources/pyds.py):
+
+* `graft_s3jsonl` scans JSONL objects under (bucket, prefix), one
+  partition per object; a stream batch reads the objects whose keys sort
+  past the last committed key.
+* `graft_s3jsonl_sink` runs the one staged publish of the package
+  (`pyds._StagedPublish`) on `_S3Store`.
+
 boto3 is import-gated: the functions raise a clear error when the SDK
 is absent rather than breaking module import for the whole package.
 """
@@ -16,6 +26,15 @@ from __future__ import annotations
 
 import json
 from typing import Any
+
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceStreamReader,
+    InputPartition,
+)
+
+from kafka_s3_etl_spark.sources import pyds
 
 
 def make_s3_client(
@@ -91,7 +110,7 @@ def list_keys(
 
 
 # ---------------------------------------------------------------------------
-# S3 -> Spark without hadoop-aws: a Python DataSource whose partitions
+# S3 -> Spark without hadoop-aws: Python DataSources whose partitions
 # each fetch one object through the S3 client API. This is the
 # production fallback when the JVM-side s3a jars are unavailable (as in
 # this container) — and structurally the right scan shape regardless:
@@ -101,78 +120,173 @@ def list_keys(
 # ---------------------------------------------------------------------------
 
 
-def _s3jsonl_classes():
-    """Import-gated construction of the DataSource classes (pyspark's
-    datasource module + boto3 on executors)."""
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
-    )
+class _S3Key(InputPartition):
+    def __init__(self, key: str):
+        self.key = key
 
-    class _S3Key(InputPartition):
-        def __init__(self, key: str):
-            self.key = key
 
-    class _S3JsonlReader(DataSourceReader):
-        def __init__(self, options):
-            self.endpoint = options.get("endpoint")
-            self.bucket = options["bucket"]
-            self.prefix = options.get("prefix", "")
+class _S3Objects:
+    """What the batch and stream readers share: the options, one listing
+    of the data keys and one object read."""
 
-        def partitions(self):
-            client = make_s3_client(endpoint_url=self.endpoint)
-            return [
-                _S3Key(k)
-                for k in list_keys(client, self.bucket, self.prefix)
-                # Hadoop convention: _SUCCESS manifests / _staged keys
-                # are metadata, not data
-                if not k.rsplit("/", 1)[-1].startswith("_")
-            ]
+    def __init__(self, options):
+        self.endpoint = options.get("endpoint")
+        self.bucket = options["bucket"]
+        self.prefix = options.get("prefix", "")
 
-        def read(self, partition):
-            import pyarrow as pa
+    def _keys(self) -> list[str]:
+        client = make_s3_client(endpoint_url=self.endpoint)
+        return [
+            k
+            for k in list_keys(client, self.bucket, self.prefix)
+            # Hadoop convention: _SUCCESS manifests and _staged- parts
+            # are metadata, not data
+            if not k.rsplit("/", 1)[-1].startswith("_")
+        ]
 
-            client = make_s3_client(endpoint_url=self.endpoint)
-            body = client.get_object(
-                Bucket=self.bucket, Key=partition.key
-            )["Body"].read()
-            docs = [
-                json.loads(line)
-                for line in body.decode("utf-8").splitlines()
-                if line
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([d["doc_id"] for d in docs], pa.int64()),
-                    pa.array([d["lang"] for d in docs], pa.string()),
-                    pa.array([d["text"] for d in docs], pa.string()),
-                ],
-                names=["doc_id", "lang", "text"],
+    def read(self, partition):
+        import pyarrow as pa
+
+        client = make_s3_client(endpoint_url=self.endpoint)
+        body = client.get_object(Bucket=self.bucket, Key=partition.key)[
+            "Body"
+        ].read()
+        docs = [
+            json.loads(line) for line in body.decode("utf-8").splitlines() if line
+        ]
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([d["doc_id"] for d in docs], pa.int64()),
+                pa.array([d["lang"] for d in docs], pa.string()),
+                pa.array([d["text"] for d in docs], pa.string()),
+            ],
+            names=["doc_id", "lang", "text"],
+        )
+
+
+class _S3Reader(_S3Objects, DataSourceReader):
+    def partitions(self):
+        return [_S3Key(k) for k in self._keys()]
+
+
+class _S3StreamReader(_S3Objects, DataSourceStreamReader):
+    """The notification-less Auto-Loader shape: offsets are lexicographic
+    KEY high-water marks over the sorted object listing, so immutable
+    objects whose keys sort after the committed mark (the natural layout
+    of part-file ingestion) are picked up exactly once per listing — and,
+    unlike an index-based offset, a slice boundary can never shift under
+    a concurrent arrival. A key arriving BELOW the committed mark would
+    be silently unreachable, so the reader detects that case and fails
+    loudly (the fix is append-ordered keys or a notification-queue
+    source)."""
+
+    def __init__(self, options):
+        super().__init__(options)
+        # out-of-order arrival guard (driver-side, best effort across
+        # restarts): the count of keys at or below the high-water mark
+        # must never GROW between listings
+        self._hwm = ""
+        self._n_below = 0
+
+    def initialOffset(self):
+        return {"hwm": ""}
+
+    def latestOffset(self):
+        keys = self._keys()
+        below = sum(1 for k in keys if k <= self._hwm)
+        if below > self._n_below:
+            raise RuntimeError(
+                "graft_s3jsonl: object key(s) arrived BELOW the committed "
+                f"high-water mark {self._hwm!r} — out-of-order key arrival "
+                "breaks listing-offset exactly-once; use append-ordered "
+                "keys or a notification-queue source"
             )
+        if keys:
+            self._hwm = max(self._hwm, keys[-1])
+            self._n_below = sum(1 for k in keys if k <= self._hwm)
+        return {"hwm": self._hwm}
 
-    class GraftS3JsonlDataSource(DataSource):
-        """spark.read.format("graft_s3jsonl"): one partition per S3
-        object under (bucket, prefix), fetched with the boto3 client
-        and emitted as Arrow batches."""
+    def partitions(self, start, end):
+        lo, hi = start["hwm"], end["hwm"]
+        return [_S3Key(k) for k in self._keys() if lo < k <= hi]
 
-        @classmethod
-        def name(cls) -> str:
-            return "graft_s3jsonl"
+    def commit(self, end):
+        pass
 
-        def schema(self) -> str:
-            return "doc_id bigint, lang string, text string"
 
-        def reader(self, schema):
-            return _S3JsonlReader(self.options)
+class GraftS3JsonlSource(DataSource):
+    """spark.read / spark.readStream .format("graft_s3jsonl") with options
+    endpoint, bucket and prefix."""
 
-    return GraftS3JsonlDataSource
+    @classmethod
+    def name(cls) -> str:
+        return "graft_s3jsonl"
+
+    def schema(self) -> str:
+        return "doc_id bigint, lang string, text string"
+
+    def reader(self, schema):
+        return _S3Reader(self.options)
+
+    def streamReader(self, schema):
+        return _S3StreamReader(self.options)
+
+
+class _S3Store:
+    """The storage steps of the staged publish on (bucket, prefix); names
+    are relative to the prefix. S3 has no rename, so a move is
+    copy_object + delete_object."""
+
+    def __init__(self, options):
+        self.endpoint = options.get("endpoint")
+        self.bucket = options["bucket"]
+        self.prefix = options.get("prefix", "")
+        self._client = None  # made on first use, after the writer is pickled
+
+    @property
+    def client(self):
+        if self._client is None:
+            self._client = make_s3_client(endpoint_url=self.endpoint)
+        return self._client
+
+    def put(self, name: str, chunks) -> None:
+        body = "".join(chunks).encode("utf-8")
+        self.client.put_object(Bucket=self.bucket, Key=self.prefix + name, Body=body)
+
+    def move(self, src: str, dst: str) -> None:
+        self.client.copy_object(
+            Bucket=self.bucket,
+            Key=self.prefix + dst,
+            CopySource={"Bucket": self.bucket, "Key": self.prefix + src},
+        )
+        self.delete(src)
+
+    def delete(self, name: str) -> None:
+        self.client.delete_object(Bucket=self.bucket, Key=self.prefix + name)
+
+    def names(self, prefix: str) -> list:
+        keys = list_keys(self.client, self.bucket, self.prefix + prefix)
+        return [k[len(self.prefix) :] for k in keys]
+
+
+class GraftS3JsonlSink(DataSource):
+    """df.write / df.writeStream .format("graft_s3jsonl_sink") with
+    options endpoint, bucket and prefix."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "graft_s3jsonl_sink"
+
+    def writer(self, schema, overwrite: bool):
+        return pyds._StagedPublish(_S3Store(self.options))
+
+    streamWriter = writer
 
 
 def register_s3jsonl_source(spark) -> None:
-    """Register the S3-client-backed Python DataSource on the session
-    (idempotent). The module is pickled BY VALUE (the sources/pyds.py
-    discipline) so executor tasks deserialize a self-contained reader
+    """Register the S3 formats on the session (idempotent). This module
+    and sources/pyds.py are pickled BY VALUE so executor tasks and the
+    stream runners deserialize self-contained readers and writers
     without needing the package on their import path."""
     if getattr(spark, "_graft_s3jsonl_registered", False):
         return
@@ -181,300 +295,7 @@ def register_s3jsonl_source(spark) -> None:
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    spark.dataSource.register(_s3jsonl_classes())
-    spark.dataSource.register(_s3stream_classes())
-    spark.dataSource.register(_s3sink_classes())
-    spark.dataSource.register(_s3streamsink_classes())
+    cloudpickle.register_pickle_by_value(pyds)
+    spark.dataSource.register(GraftS3JsonlSource)
+    spark.dataSource.register(GraftS3JsonlSink)
     spark._graft_s3jsonl_registered = True
-
-
-def _s3stream_classes():
-    """Import-gated construction of the STREAMING S3 source — the
-    notification-less Auto-Loader shape: offsets are lexicographic KEY
-    high-water marks over the sorted object listing, so immutable
-    objects whose keys sort after the already-committed mark (the
-    natural layout of part-file ingestion) are picked up exactly once
-    per listing — and, unlike an index-based offset, a slice boundary
-    can never shift under a concurrent arrival. A key arriving BELOW
-    the committed mark would be silently unreachable, so the reader
-    detects that case and fails loudly (the fix is append-ordered keys
-    or a notification-queue source). Each micro-batch plans one
-    InputPartition per NEW object; executors fetch their own keys with
-    the boto3 client."""
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-
-    class _S3Key(InputPartition):
-        def __init__(self, key: str):
-            self.key = key
-
-    class _S3JsonlStreamReader(DataSourceStreamReader):
-        def __init__(self, options):
-            self.endpoint = options.get("endpoint")
-            self.bucket = options["bucket"]
-            self.prefix = options.get("prefix", "")
-            # out-of-order arrival guard (driver-side, best effort
-            # across restarts): the count of keys at or below the
-            # high-water mark must never GROW between listings — a key
-            # sorting into the already-read region would otherwise be
-            # skipped silently. Better to stop the stream loudly.
-            self._hwm = ""
-            self._n_below = 0
-
-        def _keys(self) -> list[str]:
-            client = make_s3_client(endpoint_url=self.endpoint)
-            return [
-                k
-                for k in list_keys(client, self.bucket, self.prefix)
-                if not k.rsplit("/", 1)[-1].startswith("_")
-            ]
-
-        def initialOffset(self):
-            return {"hwm": ""}
-
-        def latestOffset(self):
-            keys = self._keys()
-            below = sum(1 for k in keys if k <= self._hwm)
-            if below > self._n_below:
-                raise RuntimeError(
-                    "graft_s3jsonl_stream: object key(s) arrived BELOW "
-                    f"the committed high-water mark {self._hwm!r} — "
-                    "out-of-order key arrival breaks listing-offset "
-                    "exactly-once; use append-ordered keys or a "
-                    "notification-queue source"
-                )
-            if keys:
-                self._hwm = max(self._hwm, keys[-1])
-                self._n_below = sum(1 for k in keys if k <= self._hwm)
-            return {"hwm": self._hwm}
-
-        def partitions(self, start, end):
-            lo, hi = start["hwm"], end["hwm"]
-            return [
-                _S3Key(k) for k in self._keys() if lo < k <= hi
-            ]
-
-        def commit(self, end):
-            pass
-
-        def read(self, partition):
-            import pyarrow as pa
-
-            client = make_s3_client(endpoint_url=self.endpoint)
-            body = client.get_object(
-                Bucket=self.bucket, Key=partition.key
-            )["Body"].read()
-            docs = [
-                json.loads(line)
-                for line in body.decode("utf-8").splitlines()
-                if line
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([d["doc_id"] for d in docs], pa.int64()),
-                    pa.array([d["lang"] for d in docs], pa.string()),
-                    pa.array([d["text"] for d in docs], pa.string()),
-                ],
-                names=["doc_id", "lang", "text"],
-            )
-
-    class GraftS3JsonlStreamSource(DataSource):
-        """spark.readStream.format("graft_s3jsonl_stream"): incremental
-        object-listing ingestion over the S3 client API."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "graft_s3jsonl_stream"
-
-        def schema(self) -> str:
-            return "doc_id bigint, lang string, text string"
-
-        def streamReader(self, schema):
-            return _S3JsonlStreamReader(self.options)
-
-    return GraftS3JsonlStreamSource
-
-
-def _s3sink_classes():
-    """Import-gated construction of the S3 SINK — the write direction
-    of the client transport, with the REAL two-phase commit the local
-    JSONL sink (sources/pyds.py) established, translated to object
-    semantics: tasks put their batches to `_staged/` keys and return
-    the key list as their commit message; only the driver-side
-    commit() publishes (copy_object to final part names + a _SUCCESS
-    manifest, then delete the stage), and abort() deletes staged keys
-    — a failed task can never leave a half-written part visible to the
-    underscore-skipping readers."""
-    from dataclasses import dataclass
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceArrowWriter,
-        WriterCommitMessage,
-    )
-
-    @dataclass
-    class _StagedKeys(WriterCommitMessage):
-        staged: tuple
-
-    class _S3JsonlWriter(DataSourceArrowWriter):
-        def __init__(self, options):
-            self.endpoint = options.get("endpoint")
-            self.bucket = options["bucket"]
-            self.prefix = options.get("prefix", "")
-
-        def write(self, iterator):
-            import json as _json
-            import uuid as _uuid
-
-            lines = []
-            for batch in iterator:
-                lines.extend(
-                    _json.dumps(row, sort_keys=True)
-                    for row in batch.to_pylist()
-                )
-            if not lines:
-                return _StagedKeys(staged=())
-            key = f"{self.prefix}_staged/{_uuid.uuid4().hex}.jsonl"
-            client = make_s3_client(endpoint_url=self.endpoint)
-            client.put_object(
-                Bucket=self.bucket,
-                Key=key,
-                Body="\n".join(lines).encode("utf-8"),
-            )
-            return _StagedKeys(staged=(key,))
-
-        def commit(self, messages):
-            client = make_s3_client(endpoint_url=self.endpoint)
-            i = 0
-            for msg in messages:
-                for staged in getattr(msg, "staged", ()) or ():
-                    client.copy_object(
-                        Bucket=self.bucket,
-                        Key=f"{self.prefix}part-{i:05d}.jsonl",
-                        CopySource={"Bucket": self.bucket, "Key": staged},
-                    )
-                    client.delete_object(Bucket=self.bucket, Key=staged)
-                    i += 1
-            client.put_object(
-                Bucket=self.bucket, Key=f"{self.prefix}_SUCCESS", Body=b""
-            )
-
-        def abort(self, messages):
-            client = make_s3_client(endpoint_url=self.endpoint)
-            for msg in messages:
-                for staged in getattr(msg, "staged", ()) or ():
-                    try:
-                        client.delete_object(
-                            Bucket=self.bucket, Key=staged
-                        )
-                    except Exception:
-                        pass
-
-    class GraftS3JsonlSink(DataSource):
-        """df.write.format("graft_s3jsonl_sink").option("bucket", b)
-        .option("prefix", p).save()"""
-
-        @classmethod
-        def name(cls) -> str:
-            return "graft_s3jsonl_sink"
-
-        def writer(self, schema, overwrite: bool):
-            return _S3JsonlWriter(self.options)
-
-    return GraftS3JsonlSink
-
-
-def _s3streamsink_classes():
-    """Import-gated construction of the STREAMING S3 sink: same staged-
-    put discipline as the batch sink, but publish is per MICRO-BATCH
-    and IDEMPOTENT under replay — part keys embed the batchId
-    (batch-{id}-part-{i}), so a re-run of batch N after a crash
-    overwrites batch-N parts instead of appending duplicates (the
-    exactly-once contract checkpoint replay requires), and each batch
-    publishes its own _SUCCESS-{id} manifest."""
-    from dataclasses import dataclass
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamArrowWriter,
-        WriterCommitMessage,
-    )
-
-    @dataclass
-    class _StagedKeys(WriterCommitMessage):
-        staged: tuple
-
-    class _S3JsonlStreamWriter(DataSourceStreamArrowWriter):
-        def __init__(self, options):
-            self.endpoint = options.get("endpoint")
-            self.bucket = options["bucket"]
-            self.prefix = options.get("prefix", "")
-
-        def write(self, iterator):
-            import json as _json
-            import uuid as _uuid
-
-            lines = []
-            for batch in iterator:
-                lines.extend(
-                    _json.dumps(row, sort_keys=True)
-                    for row in batch.to_pylist()
-                )
-            if not lines:
-                return _StagedKeys(staged=())
-            key = f"{self.prefix}_staged/{_uuid.uuid4().hex}.jsonl"
-            client = make_s3_client(endpoint_url=self.endpoint)
-            client.put_object(
-                Bucket=self.bucket,
-                Key=key,
-                Body="\n".join(lines).encode("utf-8"),
-            )
-            return _StagedKeys(staged=(key,))
-
-        def commit(self, messages, batchId):
-            client = make_s3_client(endpoint_url=self.endpoint)
-            i = 0
-            for msg in messages:
-                for staged in getattr(msg, "staged", ()) or ():
-                    client.copy_object(
-                        Bucket=self.bucket,
-                        Key=(
-                            f"{self.prefix}batch-{batchId:05d}"
-                            f"-part-{i:05d}.jsonl"
-                        ),
-                        CopySource={"Bucket": self.bucket, "Key": staged},
-                    )
-                    client.delete_object(Bucket=self.bucket, Key=staged)
-                    i += 1
-            client.put_object(
-                Bucket=self.bucket,
-                Key=f"{self.prefix}_SUCCESS-{batchId:05d}",
-                Body=b"",
-            )
-
-        def abort(self, messages, batchId):
-            client = make_s3_client(endpoint_url=self.endpoint)
-            for msg in messages:
-                for staged in getattr(msg, "staged", ()) or ():
-                    try:
-                        client.delete_object(
-                            Bucket=self.bucket, Key=staged
-                        )
-                    except Exception:
-                        pass
-
-    class GraftS3JsonlStreamSink(DataSource):
-        """df.writeStream.format("graft_s3jsonl_stream_sink")..."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "graft_s3jsonl_stream_sink"
-
-        def streamWriter(self, schema, overwrite: bool):
-            return _S3JsonlStreamWriter(self.options)
-
-    return GraftS3JsonlStreamSink

@@ -1,27 +1,34 @@
-"""Custom Spark 4 Python DataSource (pyspark.sql.datasource).
+"""Custom Spark 4 Python DataSources (pyspark.sql.datasource).
 
-The Python DataSource API is the Spark-4 seam for ingesting from
-systems without a JVM connector — each `InputPartition` is planned
-driver-side and `read()` runs distributed on executors, yielding Arrow
-RecordBatches (the vectorized path; never row tuples).
+The Python DataSource API is the Spark-4 seam for systems without a JVM
+connector: each `InputPartition` is planned driver-side and `read()`
+runs distributed on executors, yielding Arrow RecordBatches (the
+vectorized path; never row tuples). The package registers four formats,
+each serving batch and stream mode from one class:
 
-`GraftRangeDataSource` is the registered demo source: a deterministic
-partitioned generator (id, bucket, val) whose output is closed-form,
-so the catalog entry `x_python_datasource` can hash-check the ENTIRE
-custom-source path (partition planning -> executor Arrow batches ->
-Spark types) against a plain DuckDB range() oracle. Swapping the
-arithmetic body for an external client call (REST page, message queue
-slice, proprietary file decoder) is the intended production use; the
-partition-planning and Arrow-emission plumbing is what this verifies.
+* `graft_range` (here): a deterministic partitioned generator (id,
+  bucket, val) whose output is closed-form, so `x_python_datasource`
+  hash-checks the whole custom-source path (partition planning ->
+  executor Arrow batches -> Spark types) against a DuckDB range()
+  oracle. Partitions are planned up front (option `partitions`) and
+  each materializes only its own slice as one Arrow batch.
+* `graft_jsonl` (here): the JSONL sink on a directory.
+* `graft_s3jsonl` and `graft_s3jsonl_sink` (sources/objectstore.py):
+  the same scan and sink over the S3 client API.
 
-Scale: partitions are independent and planned up front (option
-`partitions`), so the source parallelizes like any file scan; each
-partition materializes only its own slice as one Arrow batch.
+Both sinks run one staged publish, `_StagedPublish`: tasks stage their
+parts, the driver-side commit publishes them with a manifest, and a
+replayed stream batch first removes what its earlier attempt published.
+Only the storage steps differ per transport (`_LocalStore`,
+`objectstore._S3Store`).
 """
 
 from __future__ import annotations
 
+import itertools
+import json
 import os
+import uuid
 from dataclasses import dataclass
 
 import numpy as np
@@ -113,8 +120,6 @@ class _RangeReader(DataSourceReader):
         return [InputPartition(i) for i in range(self.num_parts)]
 
     def read(self, partition: InputPartition):
-        import pyarrow as pa
-
         i = partition.value
         start = self.n * i // self.num_parts
         end = self.n * (i + 1) // self.num_parts
@@ -135,16 +140,23 @@ class _RangeReader(DataSourceReader):
             ids = np.arange(first, end, 16, dtype="int64")
         else:
             ids = np.arange(start, end, dtype="int64")
-        yield pa.record_batch(
-            [
-                pa.array(ids, type=pa.int64()),
-                pa.array((ids % 16).astype("int32"), type=pa.int32()),
-                # one IEEE division: bit-identical to any engine's
-                # DOUBLE division of the same integers
-                pa.array(ids / 7.0, type=pa.float64()),
-            ],
-            names=["id", "bucket", "val"],
-        )
+        yield _range_batch(ids)
+
+
+def _range_batch(ids):
+    """The (id, bucket, val) Arrow batch of the range log at `ids`."""
+    import pyarrow as pa
+
+    return pa.record_batch(
+        [
+            pa.array(ids, type=pa.int64()),
+            pa.array((ids % 16).astype("int32"), type=pa.int32()),
+            # one IEEE division: bit-identical to any engine's DOUBLE
+            # division of the same integers
+            pa.array(ids / 7.0, type=pa.float64()),
+        ],
+        names=["id", "bucket", "val"],
+    )
 
 
 class GraftRangeDataSource(DataSource):
@@ -262,27 +274,12 @@ class _RangeStreamReader(DataSourceStreamReader):
         return [_Slice(a, b) for a, b in zip(bounds, bounds[1:]) if b > a]
 
     def read(self, partition: _Slice):
-        import pyarrow as pa
-
-        ids = np.arange(partition.s, partition.e, dtype="int64")
-        yield pa.record_batch(
-            [
-                pa.array(ids, type=pa.int64()),
-                pa.array((ids % 16).astype("int32"), type=pa.int32()),
-                pa.array(ids / 7.0, type=pa.float64()),
-            ],
-            names=["id", "bucket", "val"],
-        )
+        yield _range_batch(np.arange(partition.s, partition.e, dtype="int64"))
 
     def commit(self, end: dict) -> None:
         # Same re-seat as partitions(): an ack for offsets ahead of the
         # cursor means this is a restarted reader catching up.
         self._advance_to(int(end["pos"]))
-
-
-@dataclass
-class _StagedFiles(WriterCommitMessage):
-    staged: tuple  # task-local staged file paths
 
 
 def _jsonl_lines(batch) -> list:
@@ -299,8 +296,6 @@ def _jsonl_lines(batch) -> list:
     beyond \\n/\\r/\\t, non-finite floats) fall back to json.dumps for
     that batch; JSON-unrepresentable column types raise, as the
     row-at-a-time writer did via json.dumps TypeError."""
-    import json as _json
-
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -344,14 +339,14 @@ def _jsonl_lines(batch) -> list:
             )
         else:
             raise NotImplementedError(
-                f"graft_jsonl: column {name!r} has JSON-unrepresentable "
+                f"JSONL sink: column {name!r} has JSON-unrepresentable "
                 f"Arrow type {t} — cast it before writing (the sink "
                 "serializes JSON-native scalars only)"
             )
         cols.append(pc.fill_null(s, "null"))
     pieces: list = []
     for i, (name, s) in enumerate(zip(names, cols)):
-        prefix = ("{" if i == 0 else ", ") + _json.dumps(name) + ": "
+        prefix = ("{" if i == 0 else ", ") + json.dumps(name) + ": "
         pieces.extend((pa.scalar(prefix), s))
     pieces.extend((pa.scalar("}"), pa.scalar("")))
     return pc.binary_join_element_wise(*pieces).to_pylist()
@@ -362,116 +357,95 @@ class _SlowPath(Exception):
     reproduce byte-compatibly; fall back to per-row json.dumps."""
 
 
-class _JsonlArrowWriter(DataSourceArrowWriter):
-    """Arrow-batch JSONL writer with the real two-phase commit: each
-    task streams its RecordBatches into a STAGED file and returns the
-    path as its commit message; only the driver-side commit() publishes
-    (rename + _SUCCESS manifest), and abort() deletes the stage — a
-    failed task can never leave a half-written part visible. On a
-    cluster the staging directory must be shared storage (S3/HDFS);
-    the pattern is identical. Byte production is Arrow-vectorized
-    (_jsonl_lines) — no per-row Python in the hot path."""
+def _jsonl_text(batch) -> str:
+    """One RecordBatch as JSONL text: the vectorized encoder, or per-row
+    json.dumps for a batch it cannot reproduce exactly."""
+    try:
+        lines = _jsonl_lines(batch)
+    except _SlowPath:
+        lines = [json.dumps(row, sort_keys=True) for row in batch.to_pylist()]
+    return "\n".join(lines) + "\n" if lines else ""
+
+
+@dataclass
+class _StagedParts(WriterCommitMessage):
+    staged: tuple  # store names of one task's staged parts
+
+
+class _StagedPublish(DataSourceArrowWriter, DataSourceStreamArrowWriter):
+    """The two-phase publish behind every JSONL sink mode (graft_jsonl and
+    graft_s3jsonl_sink, batch and stream). Each task stages its part under
+    a `_staged-` name that readers skip and returns it as its commit
+    message; only the driver-side commit() publishes the parts and a
+    manifest, and abort() deletes the stages, so a failed task never
+    leaves a half-written part visible. A batch write publishes
+    `part-{i}` + `_SUCCESS`; stream batch N publishes `part-bN-{i}` +
+    `_SUCCESS-N`, after removing every part an earlier attempt of batch
+    N published, so a replay that stages fewer parts leaves no
+    duplicates. `store` supplies the storage steps: put, move, delete
+    and names (_LocalStore here, objectstore._S3Store for S3)."""
+
+    def __init__(self, store):
+        self.store = store
+
+    def write(self, iterator):
+        chunks = (text for text in map(_jsonl_text, iterator) if text)
+        first = next(chunks, None)
+        if first is None:
+            return _StagedParts(staged=())
+        name = f"_staged-{uuid.uuid4().hex}.jsonl"
+        self.store.put(name, itertools.chain((first,), chunks))
+        return _StagedParts(staged=(name,))
+
+    def commit(self, messages, batchId=None):
+        tag, manifest = "", "_SUCCESS"
+        if batchId is not None:
+            tag, manifest = f"b{batchId:05d}-", f"_SUCCESS-{batchId:05d}"
+            for stale in self.store.names(f"part-{tag}"):
+                self.store.delete(stale)
+        staged = [name for msg in messages for name in msg.staged]
+        for i, name in enumerate(staged):
+            self.store.move(name, f"part-{tag}{i:05d}.jsonl")
+        self.store.put(manifest, ())
+
+    def abort(self, messages, batchId=None):
+        for msg in messages:
+            for name in getattr(msg, "staged", ()) or ():
+                try:
+                    self.store.delete(name)
+                except Exception:
+                    pass
+
+
+class _LocalStore:
+    """The storage steps on a directory (shared storage on a cluster);
+    names are relative to it."""
 
     def __init__(self, options: dict):
         self.path = options["path"]
 
-    def write(self, iterator):
-        import json as _json
-        import uuid as _uuid
+    def put(self, name: str, chunks) -> None:
+        with open(os.path.join(self.path, name), "w") as fh:
+            fh.writelines(chunks)
 
-        staged = os.path.join(self.path, f"_staged-{_uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(staged, "w") as fh:
-            for batch in iterator:
-                try:
-                    lines = _jsonl_lines(batch)
-                except _SlowPath:
-                    lines = [
-                        _json.dumps(row, sort_keys=True)
-                        for row in batch.to_pylist()
-                    ]
-                if lines:
-                    fh.write("\n".join(lines) + "\n")
-                    n += len(lines)
-        if n == 0:
-            os.remove(staged)
-            return _StagedFiles(staged=())
-        return _StagedFiles(staged=(staged,))
+    def move(self, src: str, dst: str) -> None:
+        os.replace(os.path.join(self.path, src), os.path.join(self.path, dst))
 
-    def commit(self, messages):
-        i = 0
-        for msg in messages:
-            for staged in getattr(msg, "staged", ()) or ():
-                os.replace(
-                    staged, os.path.join(self.path, f"part-{i:05d}.jsonl")
-                )
-                i += 1
-        with open(os.path.join(self.path, "_SUCCESS"), "w"):
-            pass
+    def delete(self, name: str) -> None:
+        os.remove(os.path.join(self.path, name))
 
-    def abort(self, messages):
-        for msg in messages:
-            for staged in getattr(msg, "staged", ()) or ():
-                try:
-                    os.remove(staged)
-                except OSError:
-                    pass
+    def names(self, prefix: str) -> list:
+        return [n for n in os.listdir(self.path) if n.startswith(prefix)]
 
 
 class GraftJsonlSink(DataSource):
-    """df.write.format("graft_jsonl").option("path", dir).save()"""
+    """df.write / df.writeStream .format("graft_jsonl").option("path", dir)"""
 
     @classmethod
     def name(cls) -> str:
         return "graft_jsonl"
 
     def writer(self, schema, overwrite: bool):
-        return _JsonlArrowWriter(self.options)
+        return _StagedPublish(_LocalStore(self.options))
 
-    def streamWriter(self, schema, overwrite: bool):
-        return _JsonlStreamArrowWriter(self.options)
-
-
-class _JsonlStreamArrowWriter(DataSourceStreamArrowWriter):
-    """Streaming flavor of the JSONL sink: same task-staged files, but
-    commit/abort are per-MICRO-BATCH (batchId-suffixed part names +
-    manifest) — the exactly-once publish contract a replayed batch
-    needs: re-running batchId N rewrites batch-N parts instead of
-    appending duplicates."""
-
-    def __init__(self, options: dict):
-        self.path = options["path"]
-
-    write = _JsonlArrowWriter.write
-
-    def commit(self, messages, batchId: int):
-        import glob as _glob
-
-        # Replay safety requires REMOVING every part this batchId
-        # published on a previous attempt first: a replay that commits
-        # fewer non-empty tasks than the original would otherwise leave
-        # the original's higher-indexed parts visible -> duplicates.
-        for stale in _glob.glob(
-            os.path.join(self.path, f"part-b{batchId:05d}-*.jsonl")
-        ):
-            os.remove(stale)
-        i = 0
-        for msg in messages:
-            for staged in getattr(msg, "staged", ()) or ():
-                os.replace(
-                    staged,
-                    os.path.join(
-                        self.path, f"part-b{batchId:05d}-{i:05d}.jsonl"
-                    ),
-                )
-                i += 1
-        with open(os.path.join(self.path, f"_batch-{batchId}"), "w"):
-            pass
-
-    def abort(self, messages, batchId: int):
-        for msg in messages:
-            for staged in getattr(msg, "staged", ()) or ():
-                try:
-                    os.remove(staged)
-                except OSError:
-                    pass
+    streamWriter = writer

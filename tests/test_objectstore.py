@@ -46,42 +46,59 @@ def s3_endpoint():
         server.stop()
 
 
-@needs_reference
-def test_reference_pipeline_end_to_end_over_real_s3_api(spark, s3_endpoint):
-    """The full reference B pipeline over a live S3 endpoint: the
-    source JSON is uploaded, downloaded back through the S3 API,
-    rendered to the single XML document, put_object'd with the
-    reference's ContentType, and read back — the final object must be
-    byte-identical to the reference's committed golden output.xml."""
+def _path_b_over_s3(spark, endpoint: str, bucket: str, text: str, tmp_path) -> bytes:
+    """The reference B pipeline over a live S3 endpoint: the source JSON
+    is uploaded, downloaded back through the S3 API, rendered to the
+    single XML document and put_object'd with the reference's
+    ContentType; returns the body read back."""
     import json
-    import tempfile
 
     from kafka_s3_etl_spark.operators.xml_pipeline import build_xml_document
 
-    client = make_s3_client(endpoint_url=s3_endpoint)
-    client.create_bucket(Bucket="spark-graft-it")
-
+    client = make_s3_client(endpoint_url=endpoint)
+    client.create_bucket(Bucket=bucket)
     # stage the source JSON in the object store, as production does
-    with open(REFERENCE_JSON, "rb") as fh:
-        client.put_object(
-            Bucket="spark-graft-it", Key="in/products.json", Body=fh.read()
-        )
-    data = download_json(client, "spark-graft-it", "in/products.json")
-    with open(REFERENCE_JSON, encoding="utf-8") as fh:
-        assert data == json.load(fh)  # transport is lossless
+    client.put_object(
+        Bucket=bucket, Key="in/products.json", Body=text.encode("utf-8")
+    )
+    data = download_json(client, bucket, "in/products.json")
+    assert data == json.loads(text)  # transport is lossless
 
     # render from the downloaded copy (what the reference does with its
     # temp file) and upload the assembled document
-    with tempfile.NamedTemporaryFile("w", suffix=".json", delete=False) as tf:
-        json.dump(data, tf)
-        staged = tf.name
-    doc = build_xml_document(spark, staged)
-    upload_xml(client, "spark-graft-it", "out/output.xml", doc)
+    staged = tmp_path / "downloaded.json"
+    staged.write_text(json.dumps(data), encoding="utf-8")
+    doc = build_xml_document(spark, str(staged))
+    upload_xml(client, bucket, "out/output.xml", doc)
 
-    obj = client.get_object(Bucket="spark-graft-it", Key="out/output.xml")
+    obj = client.get_object(Bucket=bucket, Key="out/output.xml")
     assert obj["ContentType"] == "application/xml"
+    return obj["Body"].read()
+
+
+def test_path_b_round_trip_over_real_s3_api(spark, s3_endpoint, tmp_path):
+    """Path B on a seeded F3 document: the XML object read back is
+    byte-equal to json_document_to_xml of the same text, the check
+    perfbench/checks.xml_document makes."""
+    from kafka_s3_etl_spark.functions.xml_render import json_document_to_xml
+    from perfbench.datagen import write_products_json
+
+    src = tmp_path / "products.json"
+    write_products_json(str(src), seed=7, records=200)
+    text = src.read_text(encoding="utf-8")
+    body = _path_b_over_s3(spark, s3_endpoint, "path-b-seeded", text, tmp_path)
+    assert body == json_document_to_xml(text).encode("utf-8")
+
+
+@needs_reference
+def test_reference_pipeline_end_to_end_over_real_s3_api(spark, s3_endpoint, tmp_path):
+    """Path B on the reference's own input: the final object must be
+    byte-identical to the reference's committed golden output.xml."""
+    with open(REFERENCE_JSON, encoding="utf-8") as fh:
+        text = fh.read()
+    body = _path_b_over_s3(spark, s3_endpoint, "spark-graft-it", text, tmp_path)
     with open(GOLDEN_XML, "rb") as fh:
-        assert obj["Body"].read() == fh.read()
+        assert body == fh.read()
 
 
 def test_overwrite_and_list_semantics(s3_endpoint):
@@ -148,32 +165,39 @@ def test_batch_sink_publishes_atomically(spark, s3_endpoint):
 
 def test_stream_sink_commit_is_replay_idempotent(s3_endpoint):
     """Replaying micro-batch N (the checkpoint-recovery path) must
-    OVERWRITE batch-N parts, never append duplicates: drive the stream
-    writer's commit directly with the same batchId twice."""
-    from kafka_s3_etl_spark.sources.objectstore import _s3streamsink_classes
+    replace batch N's parts, never leave duplicates: the first attempt
+    of batch 7 commits two staged parts, the replay commits one, and
+    exactly that one part and the manifest remain."""
+    from kafka_s3_etl_spark.sources.objectstore import GraftS3JsonlSink
+    from kafka_s3_etl_spark.sources.pyds import _StagedParts
 
     client = make_s3_client(endpoint_url=s3_endpoint)
     client.create_bucket(Bucket="sink-replay")
-    sink_cls = _s3streamsink_classes()
-    writer = sink_cls(
+    writer = GraftS3JsonlSink(
         {"endpoint": s3_endpoint, "bucket": "sink-replay", "prefix": "st/"}
     ).streamWriter(None, False)
 
-    def staged_msg(content: bytes):
-        key = "st/_staged/replayed.jsonl"
-        client.put_object(Bucket="sink-replay", Key=key, Body=content)
-        msg = type("M", (), {})()
-        msg.staged = (key,)
-        return msg
+    def staged_msg(name: str, content: bytes):
+        client.put_object(Bucket="sink-replay", Key=f"st/{name}", Body=content)
+        return _StagedParts(staged=(name,))
 
-    writer.commit([staged_msg(b'{"doc_id": 1}')], 7)
-    # crash-replay of the same batch with regenerated task output
-    writer.commit([staged_msg(b'{"doc_id": 1}')], 7)
+    writer.commit(
+        [
+            staged_msg("_staged-a.jsonl", b'{"doc_id": 1}\n'),
+            staged_msg("_staged-b.jsonl", b'{"doc_id": 2}\n'),
+        ],
+        7,
+    )
+    # crash-replay of the same batch: the regenerated output is one part
+    replayed = b'{"doc_id": 1}\n{"doc_id": 2}\n'
+    writer.commit([staged_msg("_staged-c.jsonl", replayed)], 7)
     keys = sorted(
         o["Key"]
         for o in client.list_objects_v2(Bucket="sink-replay")["Contents"]
     )
-    assert keys == ["st/_SUCCESS-00007", "st/batch-00007-part-00000.jsonl"]
+    assert keys == ["st/_SUCCESS-00007", "st/part-b00007-00000.jsonl"]
+    part = client.get_object(Bucket="sink-replay", Key=keys[1])
+    assert part["Body"].read() == replayed
 
 
 def test_list_keys_paginates_past_truncation(s3_endpoint):
@@ -198,14 +222,14 @@ def test_stream_reader_hwm_offsets_and_out_of_order_guard(s3_endpoint):
     offsets cover exactly the (lo, hi] key range, and a key arriving
     BELOW the committed mark fails loudly instead of being silently
     skipped."""
-    from kafka_s3_etl_spark.sources.objectstore import _s3stream_classes
+    from kafka_s3_etl_spark.sources.objectstore import GraftS3JsonlSource
 
     client = make_s3_client(endpoint_url=s3_endpoint)
     client.create_bucket(Bucket="autoload-guard")
     for key in ("g/b.jsonl", "g/c.jsonl"):
         client.put_object(Bucket="autoload-guard", Key=key, Body=b'{"x":1}')
 
-    reader = _s3stream_classes()(
+    reader = GraftS3JsonlSource(
         {"endpoint": s3_endpoint, "bucket": "autoload-guard", "prefix": "g/"}
     ).streamReader(None)
     start = reader.initialOffset()

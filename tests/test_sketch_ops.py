@@ -303,24 +303,20 @@ def test_pyds_stream_sink_replay_removes_stale_parts(tmp_path):
     """A replayed micro-batch that commits FEWER parts than the first
     attempt must remove the first attempt's leftovers — otherwise the
     readback duplicates rows."""
-    from kafka_s3_etl_spark.sources.pyds import (
-        _JsonlStreamArrowWriter,
-        _StagedFiles,
-    )
+    from kafka_s3_etl_spark.sources.pyds import GraftJsonlSink, _StagedParts
 
-    w = _JsonlStreamArrowWriter({"path": str(tmp_path)})
+    w = GraftJsonlSink({"path": str(tmp_path)}).streamWriter(None, False)
     # first attempt: two parts for batch 7
     for i, content in enumerate(['{"id": 1}\n', '{"id": 2}\n']):
         (tmp_path / f"s{i}").write_text(content)
     w.commit(
-        [_StagedFiles(staged=(str(tmp_path / "s0"),)),
-         _StagedFiles(staged=(str(tmp_path / "s1"),))],
+        [_StagedParts(staged=("s0",)), _StagedParts(staged=("s1",))],
         batchId=7,
     )
     assert len(list(tmp_path.glob("part-b00007-*.jsonl"))) == 2
     # replay: only ONE part this time
     (tmp_path / "s2").write_text('{"id": 1}\n{"id": 2}\n')
-    w.commit([_StagedFiles(staged=(str(tmp_path / "s2"),))], batchId=7)
+    w.commit([_StagedParts(staged=("s2",))], batchId=7)
     parts = sorted(tmp_path.glob("part-b00007-*.jsonl"))
     assert len(parts) == 1
     assert parts[0].read_text() == '{"id": 1}\n{"id": 2}\n'
